@@ -1,37 +1,54 @@
 package graft.pol
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import java.nio.file.Paths
 
-/** CLI batch entry point — the analog of the reference's
-  * `python etl/main.py [--all]` (`etl/main.py:154-165`): scan → parse →
-  * metrics → documents → summary, printed/written from one Spark job.
+import org.apache.spark.sql.SparkSession
+
+import graft.streaming.ChangedFiles
+
+/** CLI entry point — the analog of the reference's `python etl/main.py`
+  * (`etl/main.py:154-165`).
   *
   * Usage: PolMain <pol-root> [lookup-csv-or-xlsx] [out-dir]
-  *          [--incremental <ckpt-dir> | --ledger <ledger-path>
-  *           | --git-diff <repo-root>]
+  *          [--ledger <ledger-path> | --git-diff <repo-root>]
   *
-  * With `--incremental` the run uses the streaming changed-files mode
-  * (entry point 2): only files the checkpoint has not seen are
-  * processed and upserted — a fresh checkpoint dir degrades to the
-  * full scan, exactly like the reference's empty-diff fallback.
-  * With `--ledger` the run uses the git-diff-faithful variant instead:
-  * new AND modified files are reprocessed (ChangedFiles).
+  * Every mode runs the one pool job ([[PolPipeline.run]]) and writes
+  * `all_pools_data.json`, `_pipeline_summary.json`, `_index.json` and
+  * `summary_csv/` under the out dir for the files it processed. The
+  * modes differ only in which files those are:
+  *   - default: every `.pol` under `<pol-root>`
+  *   - `--ledger`: files new or modified since the last run with the
+  *     same ledger; with none, nothing is written
+  *   - `--git-diff`: the `.pol` files under `<pol-root>` changed by the
+  *     last commit of the git repo at `<repo-root>`; an empty diff falls
+  *     back to every file, like the reference
   */
 object PolMain {
+  val Usage: String = "Usage: PolMain <pol-root> [lookup-csv-or-xlsx] " +
+    "[out-dir] [--ledger <ledger-path> | --git-diff <repo-root>]"
+
+  private val Modes = Set("--ledger", "--git-diff")
+
+  private final case class Cli(root: String, lookup: String, out: String,
+      mode: Option[(String, String)])
+
+  private def parse(args: Seq[String]): Option[Cli] = {
+    val flags = args.indices.filter(i => Modes(args(i)))
+    val taken = flags.flatMap(i => Seq(i, i + 1)).toSet
+    val pos = args.indices.filterNot(taken).map(args)
+    if (pos.isEmpty || pos.size > 3 || pos.exists(_.startsWith("--")) ||
+        flags.size > 1 || flags.exists(_ + 1 >= args.size)) None
+    else Some(Cli(pos(0),
+      pos.lift(1).getOrElse("src/test/resources/lookup/game_lookup.csv"),
+      pos.lift(2).getOrElse("/tmp/graft_polmain"),
+      flags.headOption.map(i => args(i) -> args(i + 1))))
+  }
+
   def main(args: Array[String]): Unit = {
-    val incIdx = args.indexOf("--incremental")
-    val ckpt = if (incIdx >= 0) Some(args(incIdx + 1)) else None
-    val ledIdx = args.indexOf("--ledger")
-    val ledgerPath = if (ledIdx >= 0) Some(args(ledIdx + 1)) else None
-    val gitIdx = args.indexOf("--git-diff")
-    val gitRepo = if (gitIdx >= 0) Some(args(gitIdx + 1)) else None
-    val dropped = Seq(incIdx, ledIdx, gitIdx).filter(_ >= 0)
-      .flatMap(i => Seq(i, i + 1)).toSet
-    val pos = args.zipWithIndex.filterNot(z => dropped(z._2)).map(_._1)
-    val root = pos.headOption.getOrElse("/root/reference/samples/pools2")
-    val lookupCsv = pos.lift(1)
-      .getOrElse("src/test/resources/lookup/game_lookup.csv")
+    val cli = parse(args.toSeq).getOrElse {
+      System.err.println(Usage)
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -41,46 +58,8 @@ object PolMain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    ckpt match {
-      case Some(ckptDir) =>
-        val out = pos.lift(2).getOrElse("/tmp/graft_polmain")
-        val n = PolPipeline.processChanged(spark, root, lookupCsv,
-          java.nio.file.Paths.get(out).resolve("all_pools_data.json"), ckptDir)
-        println(s"incremental run: processed $n new file(s) into $out")
-        spark.stop()
-        return
-      case None =>
-    }
-    // --git-diff <repoRoot>: the reference's literal CI mode — discover
-    // changed .pol files via `git diff --name-only HEAD~1 HEAD` under
-    // samples/pools2, full-scan fallback on an empty diff.
-    gitRepo match {
-      case Some(repoRoot) =>
-        val out = pos.lift(2).getOrElse("/tmp/graft_polmain")
-        val n = graft.streaming.ChangedFiles.runGit(
-          spark, repoRoot, "samples/pools2", lookupCsv,
-          java.nio.file.Paths.get(out).resolve("all_pools_data.json"))
-        println(s"git-diff run: processed $n changed file(s) into $out")
-        spark.stop()
-        return
-      case None =>
-    }
-    ledgerPath match {
-      case Some(ledger) =>
-        val out = pos.lift(2).getOrElse("/tmp/graft_polmain")
-        val n = PolPipeline.processChangedLedger(spark, root, lookupCsv,
-          java.nio.file.Paths.get(out).resolve("all_pools_data.json"), ledger)
-        println(s"ledger run: processed $n new/modified file(s) into $out")
-        spark.stop()
-        return
-      case None =>
-    }
-
-    val dim = GameLookup.load(spark, lookupCsv)
-    // parse with ride-along error accounting (A8): drop counts surface
-    // from the same scan via observe(), printed when actions complete
-    val parsed = PolParser.parseObserved(PolParser.readRaw(spark, root))
+    // parse with ride-along error accounting (A8): the job's drop counts
+    // surface from the same scan via observe(), printed when it completes
     spark.listenerManager.register(
       new org.apache.spark.sql.util.QueryExecutionListener {
         override def onSuccess(f: String,
@@ -95,36 +74,30 @@ object PolMain {
             qe: org.apache.spark.sql.execution.QueryExecution,
             e: Exception): Unit = ()
       })
-    // File inventory: 0-byte / all-unparseable files still get size-0
-    // documents and count in the summary (reference parity).
-    val inventory = PolParser.listFiles(spark, root)
-    // One row per file: persist so the sinks/summary don't re-run the
-    // full-corpus parse per action.
-    val pools = PoolMetrics.perPool(parsed, dim, Some(inventory)).persist()
-    val docs = PoolMetrics.documents(pools)
+    try println(s"processed ${run(spark, cli)} file(s) into ${cli.out}")
+    finally spark.stop()
+  }
 
-    docs.select("pool_name", "pool_id", "pool_type", "min_bet", "rtp",
-        "volatility", "size", "tag", "is_flat", "max_multiplier")
-      .orderBy("pool_name")
-      .show(50, truncate = false)
-    PoolSummary.aggregate(docs).show(truncate = false)
+  /** Runs the mode `args` (the CLI arguments) selects; returns the number
+    * of files processed.
+    */
+  def run(spark: SparkSession, args: Seq[String]): Long =
+    run(spark, parse(args).getOrElse(throw new IllegalArgumentException(Usage)))
 
-    pos.lift(2).foreach { out =>
-      val outDir = java.nio.file.Paths.get(out)
-      val rows = docs.orderBy(col("metadata.source_file")).collect().toSeq
-      val ts = java.time.OffsetDateTime.now(java.time.ZoneOffset.UTC)
-        .truncatedTo(java.time.temporal.ChronoUnit.SECONDS)
-        .format(java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME)
-      val n = PoolJsonSink.upsert(rows, outDir.resolve("all_pools_data.json"))
-      val agg = PoolSummary.aggregate(docs, Some(ts)).collect()(0)
-      PoolJsonSink.writeSummary(
-        PoolJsonSink.summaryJson(ts, n, n, 0, Seq.empty,
-          Seq("Meta_data/all_pools_data.json"), agg),
-        outDir.resolve("_pipeline_summary.json"))
-      PoolJsonSink.writeIndex(rows, ts, outDir.resolve("_index.json"))
-      PoolJsonSink.writeCsv(docs, s"$out/summary_csv")
-      println(s"wrote $n documents + summary + index + csv under $out")
+  private def run(spark: SparkSession, cli: Cli): Long = {
+    val out = Paths.get(cli.out)
+    val json = out.resolve("all_pools_data.json")
+    cli.mode match {
+      case None => PolPipeline.run(spark, cli.root, cli.lookup, out)
+      case Some(("--ledger", ledger)) =>
+        ChangedFiles.runOnce(spark, cli.root, cli.lookup, json, ledger)
+      case Some((_, repo)) =>
+        val repoRoot = Paths.get(repo).toAbsolutePath.normalize
+        val root = Paths.get(cli.root).toAbsolutePath.normalize
+        require(root.startsWith(repoRoot),
+          s"<pol-root> $root is not inside the git repo $repoRoot")
+        ChangedFiles.runGit(spark, repoRoot.toString,
+          repoRoot.relativize(root).toString, cli.lookup, json)
     }
-    spark.stop()
   }
 }

@@ -46,8 +46,7 @@ object PolParser {
     new java.io.File(p).getAbsolutePath.stripSuffix("/")
 
   /** Relative-path + folder metadata columns from an absolute-path
-    * column `abs_path` (shared by the line readers, [[listFiles]] and
-    * the streaming incremental mode).
+    * column `abs_path` (shared by the line readers and [[listFiles]]).
     */
   def pathMeta(df: DataFrame, baseDir: String): DataFrame = {
     val rel = regexp_replace(
@@ -233,9 +232,7 @@ object PolParser {
         .select(col("path"), col("content")),
       normalize(base.getOrElse(root)))
 
-  /** Per-file decode → line rows, from a (path, content) relation
-    * (batch OR a streaming foreachBatch micro-batch).
-    */
+  /** Per-file decode → line rows, from a (path, content) relation. */
   def decodeLines(files: DataFrame, baseDir: String): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types._

@@ -2,71 +2,63 @@ package graft.pol
 
 import java.nio.file.Path
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** Library facade — the Spark analog of the reference's public API
-  * (`etl/__init__.py:7-17`), one entry per exported seam so callers
-  * can run any stage standalone and compose them as DataFrames:
-  *
-  * | reference                  | here                      |
-  * |----------------------------|---------------------------|
-  * | `extract_all_pol_files`    | [[extractAll]]            |
-  * | `get_changed_pol_files`    | [[processChanged]] (T1)   |
-  * | `transform_pol_data`       | [[transform]]             |
-  * | `save_to_metadata_folder`  | [[saveToMetadataFolder]]  |
-  * | `save_summary_report`      | [[saveSummaryReport]]     |
+/** The pool job — the reference's one hard-coded run
+  * (`etl/main.py:42-151`): lookup → extract → transform → upsert →
+  * summary. Only the extract step depends on the mode, so every
+  * [[PolMain]] mode runs this one function and differs only in the
+  * file set it passes: every file (full run, or an empty git diff), or
+  * the relative paths a discovery step picked
+  * ([[graft.streaming.ChangedFiles]]).
   */
 object PolPipeline {
 
-  /** Scan + parse every `.pol` under `root` (S1/S3/S4 + P1). */
-  def extractAll(spark: SparkSession, root: String,
-      base: Option[String] = None): DataFrame =
-    PolParser.read(spark, root, base)
-
-  /** File inventory (S1 at file granularity): includes 0-byte and
-    * all-unparseable files, which the line-level parse cannot surface.
+  /** Parse + transform the `.pol` files under `root` and write the
+    * consolidated JSON upsert, `_pipeline_summary.json`, `_index.json`
+    * and `summary_csv/` under `outDir`, all for the processed files.
+    *
+    * @param files       None for every file under `root`; otherwise the
+    *                    root-relative paths to process. The restriction
+    *                    is a `relative_path` filter on the line scan,
+    *                    which Spark applies while listing, so other
+    *                    files are never opened.
+    * @param processedAt documents' `processed_at` and the summary/index
+    *                    timestamp; None for wall-clock UTC seconds.
+    * @return the number of documents upserted (one per processed file)
     */
-  def listFiles(spark: SparkSession, root: String,
-      base: Option[String] = None): DataFrame =
-    PolParser.listFiles(spark, root, base)
-
-  /** Full transform stage: metrics + classification + nested documents
-    * (P2–P8, J1, A1–A6). Pass the [[listFiles]] inventory so files with
-    * no parseable rows still emit size-0 documents (reference parity).
-    */
-  def transform(parsed: DataFrame, dim: DataFrame,
+  def run(spark: SparkSession, root: String, lookup: String, outDir: Path,
       processedAt: Option[String] = None,
-      files: Option[DataFrame] = None): DataFrame =
-    PoolMetrics.documents(PoolMetrics.perPool(parsed, dim, files), processedAt)
-
-  /** Changed-files mode (S2/T1): process only files the checkpoint has
-    * not seen, upserting into the consolidated JSON. Returns the number
-    * of newly processed files. NEW paths only — Spark's file source
-    * never re-emits a path, so use [[processChangedLedger]] when
-    * in-place modifications must be reprocessed.
-    */
-  def processChanged(spark: SparkSession, root: String, lookupCsv: String,
-      outputFile: Path, checkpointDir: String,
-      processedAt: Option[String] = None): Long =
-    graft.streaming.IncrementalPol.runOnce(
-      spark, root, lookupCsv, outputFile, checkpointDir, processedAt)
-
-  /** Changed-files mode with the reference's full git-diff semantics:
-    * NEW and MODIFIED files (size/mtime moved) are reprocessed and
-    * their documents replaced; detection is a metadata-only
-    * inventory-vs-ledger anti-join.
-    */
-  def processChangedLedger(spark: SparkSession, root: String,
-      lookupCsv: String, outputFile: Path, ledgerPath: String,
-      processedAt: Option[String] = None): Long =
-    graft.streaming.ChangedFiles.runOnce(
-      spark, root, lookupCsv, outputFile, ledgerPath, processedAt)
-
-  /** S6/J2: upsert collected documents into the consolidated JSON. */
-  def saveToMetadataFolder(docs: Seq[Row], outputFile: Path): Int =
-    PoolJsonSink.upsert(docs, outputFile)
-
-  /** S7: write the run summary. */
-  def saveSummaryReport(summary: PoolJsonSink.JObj, outputFile: Path): Unit =
-    PoolJsonSink.writeSummary(summary, outputFile)
+      files: Option[Seq[String]] = None): Long = {
+    def only(df: DataFrame) =
+      files.fold(df)(fs => df.where(col("relative_path").isin(fs: _*)))
+    val dim = GameLookup.load(spark, lookup)
+    // parse with ride-along error accounting (A8): drop counts surface
+    // from the same scan via observe()
+    val parsed = PolParser.parseObserved(only(PolParser.readRaw(spark, root)))
+    // File inventory: 0-byte / all-unparseable files still get size-0
+    // documents and count in the summary (reference parity).
+    val inventory = only(PolParser.listFiles(spark, root))
+    // One row per file: persist so the sinks/summary don't re-run the
+    // parse per action.
+    val pools = PoolMetrics.perPool(parsed, dim, Some(inventory)).persist()
+    try {
+      val docs = PoolMetrics.documents(pools, processedAt)
+      val rows = docs.orderBy(col("metadata.source_file")).collect().toSeq
+      val ts = processedAt.getOrElse(java.time.OffsetDateTime
+        .now(java.time.ZoneOffset.UTC)
+        .truncatedTo(java.time.temporal.ChronoUnit.SECONDS)
+        .format(java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME))
+      val n = PoolJsonSink.upsert(rows, outDir.resolve("all_pools_data.json"))
+      val agg = PoolSummary.aggregate(docs, Some(ts)).collect()(0)
+      PoolJsonSink.writeSummary(
+        PoolJsonSink.summaryJson(ts, n, n, 0, Seq.empty,
+          Seq("Meta_data/all_pools_data.json"), agg),
+        outDir.resolve("_pipeline_summary.json"))
+      PoolJsonSink.writeIndex(rows, ts, outDir.resolve("_index.json"))
+      PoolJsonSink.writeCsv(docs, outDir.resolve("summary_csv").toString)
+      n.toLong
+    } finally pools.unpersist()
+  }
 }

@@ -24,10 +24,8 @@ import org.apache.spark.sql.functions._
   * through the sink is the identity on unprocessed entries.
   *
   * Scale: the driver-side writer is for the reference-shaped corpus
-  * (one row per FILE — thousands, not billions). At data-lake scale use
-  * [[upsertDistributed]] (left-anti + unionByName, the same plan Delta
-  * MERGE lowers to for insert-overwrite-by-key) and keep documents in a
-  * keyed table instead of one JSON blob.
+  * (one row per FILE — thousands, not billions). At data-lake scale
+  * keep documents in a keyed table instead of one JSON blob.
   */
 object PoolJsonSink {
 
@@ -211,25 +209,15 @@ object PoolJsonSink {
       }
     }
     val incomingMap = incoming.toMap
-    val keptOrder = existing.map(_._1)
+    val kept = existing.map(_._1).toSet
     val merged: Seq[(String, String)] =
       existing.map { case (k, raw) => k -> incomingMap.getOrElse(k, raw) } ++
-        incoming.filterNot { case (k, _) => keptOrder.contains(k) }
+        incoming.filterNot { case (k, _) => kept(k) }
     val body = merged.map { case (k, v) => s"""  "${escape(k)}": $v""" }
       .mkString("{\n", ",\n", "\n}")
     Files.createDirectories(outputFile.getParent)
     Files.write(outputFile, body.getBytes(StandardCharsets.UTF_8))
     incoming.size
-  }
-
-  /** The same upsert semantics as a distributed plan (for keyed-table
-    * storage at scale): keys of `incoming` replace matching keys of
-    * `existing`, everything else survives.
-    */
-  def upsertDistributed(existing: DataFrame, incoming: DataFrame): DataFrame = {
-    val key = col("metadata.source_file")
-    existing.join(incoming.select(key.as("__k")), key === col("__k"), "left_anti")
-      .unionByName(incoming)
   }
 
   // ---------- S6 at scale: manifest-committed keyed parquet table ----------

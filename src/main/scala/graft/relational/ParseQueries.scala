@@ -150,8 +150,8 @@ object ParseQueries {
 
     // S2 — changed-files semantics as a relation: of the incoming file
     // set, process only those absent from the processed ledger
-    // (left-anti), the batch formulation of the streaming checkpoint
-    // (IncrementalPolSpec covers the real streaming variant).
+    // (left-anti), as `ChangedFiles.detect` does (ChangedFilesSpec
+    // covers the real ledger run).
     "s2_changed_files" -> ((s, d) => {
       val incoming = documents(s, d).select(col("doc_id"), col("source"))
       val processed = documents(s, d)

@@ -1,22 +1,20 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.pol.{GameLookup, PolParser, PoolJsonSink, PoolMetrics}
+import graft.pol.{PolParser, PolPipeline}
 
 /** S2 — the reference's changed-files detection (`etl/extract.py:161-211`
   * drives it from `git diff`: files that are NEW **or MODIFIED** since
   * the last run are reprocessed and their documents replace the old
   * entries via the keyed upsert).
   *
-  * The streaming-checkpoint variant ([[IncrementalPol]]) gives
-  * exactly-once per PATH — Spark's file source never re-emits a path,
-  * so an in-place modification is invisible to it. This ledger variant
-  * matches the reference: the processed-state is an explicit relation
-  * `(relative_path, size_bytes, modified_ts)` and the changed set is a
-  * LEFT-ANTI join of the current inventory against it — new paths AND
-  * any path whose size or mtime moved. Both the inventory
+  * Two discovery modes pick the files, and both hand them to the one
+  * pool job, [[PolPipeline.run]]. The ledger mode keeps the
+  * processed-state as an explicit relation `(relative_path, size_bytes,
+  * modified_ts)`, and the changed set is a LEFT-ANTI join of the
+  * current inventory against it — new paths AND any path whose size or
+  * mtime moved. The git-diff mode asks git instead. Both the inventory
   * ([[PolParser.listFiles]]) and the ledger are metadata-only: the
   * detection cost is a listing sweep, never a data scan, so it holds at
   * millions of files.
@@ -46,50 +44,11 @@ object ChangedFiles {
             org.apache.spark.sql.types.TimestampType))))
   }
 
-  /** Parse + transform exactly the files of `changed` (an inventory
-    * subset) and upsert their documents. Shared by the ledger mode and
-    * the git-diff mode — the discovery strategy is the only thing that
-    * differs between them.
-    */
-  private def processChangedSet(
-      spark: SparkSession,
-      root: String,
-      changed: DataFrame,
-      lookupPath: String,
-      outputFile: java.nio.file.Path,
-      processedAt: Option[String]): Long = {
-    val n = changed.count()
-    if (n > 0) {
-      // scan only the changed files: the text source takes an explicit
-      // path list, so unchanged files are never opened
-      val base = new java.io.File(root).getAbsolutePath.stripSuffix("/")
-      val paths = changed.select("relative_path").collect()
-        .map(r => s"$base/${r.getString(0)}")
-      val raw = spark.read
-        .option("pathGlobFilter", "*.pol")
-        .text(paths: _*)
-        .select(col("value"),
-          col("_metadata.file_path").as("abs_path"),
-          col("_metadata.file_name").as("file_name"),
-          col("_metadata.file_size").as("size_bytes"),
-          col("_metadata.file_modification_time").as("modified_ts"))
-      val withMeta = PolParser.pathMeta(raw, base)
-      val parsed = PolParser.parse(withMeta)
-      val dim = GameLookup.load(spark, lookupPath)
-      val files = changed
-        .select("relative_path", "file_name", "folder_path", "parent_folder")
-      val docs = PoolMetrics.documents(
-        PoolMetrics.perPool(parsed, dim, Some(files)), processedAt)
-        .collect().toSeq
-      PoolJsonSink.upsert(docs, outputFile)
-    }
-    n
-  }
-
-  /** One changed-files run: list → diff against the ledger → parse +
-    * transform ONLY the changed files → upsert their documents → write
-    * the new ledger (current inventory, so deletes age out). Returns
-    * the number of files processed.
+  /** One changed-files run: list → diff against the ledger → run the
+    * pool job ([[PolPipeline.run]]) on ONLY the changed files, next to
+    * `outputFile` → write the new ledger (current inventory, so deletes
+    * age out). With nothing changed the job is skipped and the outputs
+    * are left untouched. Returns the number of files processed.
     */
   def runOnce(
       spark: SparkSession,
@@ -98,12 +57,17 @@ object ChangedFiles {
       outputFile: java.nio.file.Path,
       ledgerPath: String,
       processedAt: Option[String] = None): Long = {
+    val out = outDir(outputFile)
     val inventory = PolParser.listFiles(spark, root)
     val ledger = loadLedger(spark, ledgerPath)
-    val changed = detect(inventory, ledger).cache()
-    val n = processChangedSet(
-      spark, root, changed, lookupCsv, outputFile, processedAt)
-    // new ledger = full current inventory (atomic swap via temp dir)
+    val changed = detect(inventory, ledger)
+      .select("relative_path").collect().map(_.getString(0)).toSeq
+    if (changed.nonEmpty)
+      PolPipeline.run(spark, root, lookupCsv, out, processedAt, Some(changed))
+    // new ledger = full current inventory, staged then renamed over the
+    // old one. Not atomic: a crash between the delete and the rename
+    // leaves no ledger, so the next run reprocesses every file — safe,
+    // because the upsert is keyed.
     val tmp = ledgerPath + "__tmp"
     inventory.select("relative_path", "size_bytes", "modified_ts")
       .coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -114,9 +78,9 @@ object ChangedFiles {
       }
       rm(target)
     }
-    new java.io.File(tmp).renameTo(target)
-    changed.unpersist()
-    n
+    if (!new java.io.File(tmp).renameTo(target))
+      throw new java.io.IOException(s"could not rename $tmp to $ledgerPath")
+    changed.size.toLong
   }
 
   /** The reference's LITERAL discovery mode (`etl/extract.py:161-211`):
@@ -144,8 +108,9 @@ object ChangedFiles {
   }
 
   /** One git-diff-driven run — the drop-in CI replacement for the
-    * reference's incremental mode: changed `.pol` files since the last
-    * commit are reprocessed and upserted; an EMPTY diff falls back to
+    * reference's incremental mode: the pool job runs on the `.pol`
+    * files changed since the last commit (the diff ∩ the inventory
+    * under `subdir`), next to `outputFile`; an EMPTY diff falls back to
     * the full scan, exactly the reference's fallback
     * (`etl/main.py:82-85`). Returns the number of files processed.
     */
@@ -159,12 +124,19 @@ object ChangedFiles {
       to: String = "HEAD",
       processedAt: Option[String] = None): Long = {
     val root = new java.io.File(repoRoot, subdir).getAbsolutePath
-    val inventory = PolParser.listFiles(spark, root)
     val wanted = gitChangedFiles(repoRoot, subdir, from, to)
       .map(_.stripPrefix(subdir + "/"))
-    val changed =
-      if (wanted.isEmpty) inventory // empty diff → full scan fallback
-      else inventory.where(col("relative_path").isin(wanted: _*))
-    processChangedSet(spark, root, changed, lookupPath, outputFile, processedAt)
+    // empty diff → full scan fallback
+    PolPipeline.run(spark, root, lookupPath, outDir(outputFile), processedAt,
+      Some(wanted).filter(_.nonEmpty))
+  }
+
+  /** The job writes `all_pools_data.json` and its siblings into one
+    * directory; callers name the JSON file, so check its name.
+    */
+  private def outDir(outputFile: java.nio.file.Path): java.nio.file.Path = {
+    require(outputFile.getFileName.toString == "all_pools_data.json",
+      s"the consolidated JSON must be named all_pools_data.json: $outputFile")
+    outputFile.toAbsolutePath.getParent
   }
 }

@@ -85,16 +85,6 @@ class PoolJsonSinkSpec extends AnyFunSuite {
     assert(text.contains("\"tag\": \"UNKNOWN\""))
   }
 
-  test("distributed upsert: new rows replace, others survive") {
-    val docs = docsFor("src/test/resources/pol")
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(docs), docs.head.schema)
-    val existing = df // both fixture files
-    val incoming = df.limit(1)
-    val merged = upsertDistributed(existing, incoming)
-    assert(merged.count() == docs.size)
-  }
-
   test("csv sink writes header + one row per document") {
     val tmp = Files.createTempDirectory("csv").toString + "/out"
     val docs = docsFor("src/test/resources/pol")

@@ -5,11 +5,11 @@ import java.nio.charset.StandardCharsets
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.QueryHarness.spark
+import graft.pol.PoolJsonSink
 
 /** Ledger-based changed-files mode: new files processed once, unchanged
   * files skipped, MODIFIED files reprocessed and their documents
-  * replaced — the reference's git-diff semantics, which the streaming
-  * checkpoint variant cannot express (a path is never re-emitted).
+  * replaced — the reference's git-diff semantics.
   */
 class ChangedFilesSpec extends AnyFunSuite {
   private val lookup = "src/test/resources/lookup/game_lookup.csv"
@@ -52,5 +52,12 @@ class ChangedFilesSpec extends AnyFunSuite {
 
     // run 4: stable again
     assert(ChangedFiles.runOnce(spark, dir.toString, lookup, out, ledger, ts) == 0)
+
+    // run 5: a new file arrives → only it is processed; it is appended
+    // after the existing keys, whose order is kept
+    write("Pool_0299_1.pol", "3 TB1\n")
+    assert(ChangedFiles.runOnce(spark, dir.toString, lookup, out, ledger, ts) == 1)
+    val keys = PoolJsonSink.splitTopLevel(Files.readString(out)).map(_._1)
+    assert(keys == Seq("Pool_0300_395.pol", "Pool_0301_1.pol", "Pool_0299_1.pol"))
   }
 }
