@@ -1,10 +1,15 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every catalog query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
+  * A query that throws in any timed run is a failure, not a number:
+  * it is left out of "queries" and the total and listed under
+  * "failed" (on stdout only when some query failed).
   *
   * Warmup runs EVERY catalog query once at the smallest SF first: the
   * generated whole-stage-codegen classes are cached by source, so the
@@ -47,9 +52,12 @@ object Bench {
     // Warmup: every selected query at the smallest SF (codegen cache +
     // JIT), flagship pipeline included via the a6 catalog entry.
     val warmSf = "/root/testdata/sf0.001"
-    selected.foreach { case (_, fn) =>
+    selected.foreach { case (name, fn) =>
       try force(fn(spark, warmSf))
-      catch { case _: Throwable => }
+      catch {
+        case NonFatal(e) =>
+          System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
+      }
     }
 
     // Best-of-N per query (N = SPARK_GRAFT_BENCH_RUNS, default 2):
@@ -58,13 +66,33 @@ object Bench {
     // with identical code, GC/safepoints clean). The min of N runs
     // measures the engine, not the neighbor.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    type Query = (SparkSession, String) => org.apache.spark.sql.DataFrame
+    // Every raw sample is kept per query (first pass + drift reruns)
+    // and emitted as "bands":{q:[min,max,n]} in the durable JSON: the
+    // streaming family drifts ±0.7 s round-to-round on this microVM
+    // and each round's regression analysis re-litigated whether a
+    // delta was noise — the bands make the noise band DATA in the
+    // artifact itself (round-9 verdict task 7).
+    val samples = scala.collection.mutable.Map[String, List[Double]]()
+    /** Seconds for one forced run; None when the query threw. */
+    def timeOnce(name: String, fn: Query): Option[Double] = {
       val t0 = System.nanoTime()
-      try { force(fn(spark, sfDir)) } catch {
-        case e: Throwable =>
+      try {
+        force(fn(spark, sfDir))
+        val v = (System.nanoTime() - t0) / 1e9
+        samples(name) = v :: samples.getOrElse(name, Nil)
+        Some(v)
+      } catch {
+        case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          None
       }
-      (System.nanoTime() - t0) / 1e9
+    }
+    /** Best of `runs`; None as soon as one run fails. */
+    def bestOf(name: String, fn: Query): Option[Double] = {
+      val ok = Iterator.fill(runs)(timeOnce(name, fn))
+        .takeWhile(_.isDefined).flatten.toSeq
+      if (ok.size == runs) Some(ok.min) else None
     }
     // Drift history: the previous run's per-query numbers (read from
     // the durable BENCH_LOCAL.json before this run overwrites it).
@@ -89,7 +117,7 @@ object Bench {
       if (!java.nio.file.Files.isReadable(outPath)) None
       else try Some(new String(java.nio.file.Files.readAllBytes(outPath),
         java.nio.charset.StandardCharsets.UTF_8))
-      catch { case _: Throwable => None }
+      catch { case NonFatal(_) => None }
     val prevSfMatches = prevTxt.exists(
       _.contains("\"sf\":\"" + sfDir + "\""))
     val prev: Map[String, Double] =
@@ -102,40 +130,28 @@ object Bench {
         val pair = """"([a-z][A-Za-z0-9_]*)":([0-9]+\.[0-9]+)""".r
         pair.findAllMatchIn(head)
           .map(m => m.group(1) -> m.group(2).toDouble).toMap - "value"
-      } catch { case _: Throwable => Map.empty }
+      } catch { case NonFatal(_) => Map.empty }
 
-    // Every raw sample is kept per query (first pass + drift reruns)
-    // and emitted as "bands":{q:[min,max,n]} in the durable JSON: the
-    // streaming family drifts ±0.7 s round-to-round on this microVM
-    // and each round's regression analysis re-litigated whether a
-    // delta was noise — the bands make the noise band DATA in the
-    // artifact itself (round-9 verdict task 7).
-    val samples = scala.collection.mutable.Map[String, List[Double]]()
-    def record(name: String, v: Double): Double = {
-      samples(name) = v :: samples.getOrElse(name, Nil); v
-    }
-    val firstPass = selected.map { case (name, fn) =>
-      name -> (1 to runs).map(_ => record(name, timeOnce(name, fn))).min
-    }
+    val attempted = selected.map { case (name, fn) => name -> bestOf(name, fn) }
+    val firstPass = attempted.collect { case (name, Some(v)) => name -> v }
     val drifted = firstPass.collect {
       case (name, v) if prev.get(name).exists(p => v > 1.3 * p && v - p > 0.3) =>
         name
     }.toSet
-    val results = firstPass.map { case (name, v) =>
-      if (!drifted(name)) name -> v
-      else {
-        val fn = SparkEntry.queries(name)
-        name -> math.min(v,
-          (1 to runs).map(_ => record(name, timeOnce(name, fn))).min)
-      }
+    val rerun = firstPass.map { case (name, v) =>
+      if (!drifted(name)) name -> Some(v)
+      else name -> bestOf(name, SparkEntry.queries(name)).map(math.min(v, _))
     }
+    val failed = (attempted ++ rerun).collect { case (name, None) => name }
+      .distinct.sorted
+    val results = rerun.collect { case (name, Some(v)) => name -> v }
     // A SPARK_GRAFT_BENCH_ONLY subset run (quiet-box re-measurement)
     // MERGES into the same-sf history instead of overwriting it —
     // the durable file keeps a complete per-query map and the next
     // full run's drift pass still has a baseline for every query.
     val durable: Seq[(String, Double)] =
       if (only.isDefined && prevSfMatches)
-        (prev ++ results.toMap).toSeq.sortBy(_._1)
+        (prev -- failed ++ results).toSeq.sortBy(_._1)
       else results
     val qs = durable
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
@@ -156,8 +172,9 @@ object Bench {
         val ss = samples(name)
         "\"" + name + "\":[" + f"${ss.min}%.3f,${ss.max}%.3f,${ss.size}]"
     }.mkString("{", ",", "}")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val json =
-      f"""{"metric":"total","unit":"sec","queries":$qs,"reran":$rerans,"firstpass":$firstpassJson,"bands":$bandsJson,"value":$total%.3f,"sf":"$sfDir"}"""
+      f"""{"metric":"total","unit":"sec","queries":$qs,"reran":$rerans,"firstpass":$firstpassJson,"bands":$bandsJson,"failed":$failedJson,"value":$total%.3f,"sf":"$sfDir"}"""
     // The STDOUT line must stay under the driver's ~2,000-char tail
     // window or it arrives truncated mid-`queries` and fails to parse
     // (rounds 2-6: the 149-query line is ~3.8 kB — no print position
@@ -178,7 +195,9 @@ object Bench {
       // nq pairs with "value": both describe the durable (merged)
       // map, so a subset run's stdout can't read as "one query took
       // the whole catalog total"
-      val head = f"""{"metric":"total","unit":"sec","value":$total%.3f,"nq":${durable.size},"sf":"$sfDir","queries":{"""
+      val failedField =
+        if (failed.isEmpty) "" else s""""failed":$failedJson,"""
+      val head = f"""{"metric":"total","unit":"sec","value":$total%.3f,"nq":${durable.size},"sf":"$sfDir",$failedField"queries":{"""
       val tail = "}}"
       val sb = new StringBuilder
       var full = false
@@ -216,10 +235,10 @@ object Bench {
     // the TRUE last line, after every source of shutdown noise.
     try {
       spark.streams.active.foreach { q =>
-        try q.stop() catch { case _: Throwable => }
+        try q.stop() catch { case NonFatal(_) => }
       }
       spark.stop()
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(_) => }
     println(stdoutJson)
     System.out.flush()
   }

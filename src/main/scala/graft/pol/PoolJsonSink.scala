@@ -1456,23 +1456,6 @@ object PoolJsonSink {
     }
   }
 
-  /** Point lookup with bloom + zone-map file skipping: the
-    * `WHERE digest = '…'` read a dedup/provenance pipeline runs
-    * constantly. On a bloom-indexed column (`bloomCols` at write
-    * time) the expected cost is O(sidecar probes) + ONE data file
-    * opened — at any table size — versus opening every candidate the
-    * byte-range zone map can't reject (nearly all of them, for
-    * uniformly distributed digests).
-    */
-  def readTableStringEqBloom(
-      spark: org.apache.spark.sql.SparkSession,
-      tableDir: String, colName: String, value: String): DataFrame = {
-    val m = readManifest(tableDir).getOrElse(
-      sys.error(s"not a manifest table: $tableDir"))
-    readFiles(spark, tableDir, pruneFilesBloomEq(tableDir, m, colName, value), m)
-      .where(col(colName) === value)
-  }
-
   /** Conform `df` (whatever union of FILE schemas the parquet read
     * produced) to the manifest's RECORDED schema — the single source
     * of truth: columns the recording added but no selected file
@@ -1597,42 +1580,6 @@ object PoolJsonSink {
         case _ => true
       }
     }
-
-  /** Data-skipping equality read on a STRING column (e.g. `source`,
-    * a date string, a hex digest): manifest-level file pruning on the
-    * byte-range zone map, then the residual predicate. The string
-    * analog of [[readTableLongRange]] — a source-partitioned-in-
-    * practice corpus reads one source's files without listing the
-    * rest.
-    */
-  def readTableStringEq(
-      spark: org.apache.spark.sql.SparkSession,
-      tableDir: String, colName: String, value: String): DataFrame = {
-    val m = readManifest(tableDir).getOrElse(
-      sys.error(s"not a manifest table: $tableDir"))
-    readFiles(spark, tableDir,
-      pruneFilesBinaryEq(m, colName, value.getBytes(StandardCharsets.UTF_8)), m)
-      .where(col(colName) === value)
-  }
-
-  /** Data-skipping range read: manifest-level file pruning on a LONG
-    * column's zone map, then the residual predicate. For an
-    * ingest-ordered column (event time, sequence id) this is the
-    * standard "read one day out of three years" pattern — files whose
-    * [min,max] miss the range are never listed, opened, or
-    * footer-read, on top of the bucket pruning the key hash already
-    * gives. Requires the table to have been written with `statsCols`
-    * covering `colName`; files predating that opt-in are read (never
-    * silently skipped).
-    */
-  def readTableLongRange(
-      spark: org.apache.spark.sql.SparkSession,
-      tableDir: String, colName: String, lo: Long, hi: Long): DataFrame = {
-    val m = readManifest(tableDir).getOrElse(
-      sys.error(s"not a manifest table: $tableDir"))
-    readFiles(spark, tableDir, pruneFilesLongRange(m, colName, lo, hi), m)
-      .where(col(colName).between(lo, hi))
-  }
 
   /** Read only the named buckets — manifest-level pruning: unselected
     * files are never listed, opened, or footer-read. This is what

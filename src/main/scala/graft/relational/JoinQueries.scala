@@ -389,7 +389,7 @@ object JoinQueries {
 
     // R21 — storage-partitioned fact⋈fact join: two keyed graft
     // tables (orders; per-order lineitem revenue) sharing nBuckets
-    // join through format("graft-spj") with ZERO exchange of either
+    // join through format("graft") with ZERO exchange of either
     // side — the scan reports its bucket layout as
     // KeyGroupedPartitioning and EnsureRequirements pairs the buckets
     // 1:1 (GraftSpjJoinSpec pins the no-shuffle plan). This is the
@@ -525,7 +525,7 @@ object JoinQueries {
     // as the `.changes` SUB-TABLE (`<cat>.default.cdc.changes`, the
     // Iceberg metadata-table addressing) — a DSv2 batch scan whose
     // input partitions are per-changed-bucket hash-diff readers
-    // (GraftChangesSource), not the v1 driver-assembled join plan.
+    // (GraftChangesSource), not j3's driver-assembled join plan.
     // Same oracle as J3: one derived feed, two engine faces, both
     // row-identical to the relational recomputation — and the v2
     // face is the one `readStream.table` serves, so this row also
@@ -543,7 +543,7 @@ object JoinQueries {
       s.read
         .option("startingVersion", "1").option("endingVersion", "3")
         // staged by mergeDelta, whose manifests may predate the
-        // recorded-keycol header — state the key like the v1 face does
+        // recorded-keycol header — state the key like the path face does
         .option("changeKey", "user_id")
         .table(s"$cat.default.cdc.changes")
         .select(col("user_id"), col("n_events"),

@@ -9,9 +9,9 @@ import org.apache.spark.sql.types._
   * what lets NAME-based catalog tables report their layout as a
   * `bucket(n, key)` partitioning Catalyst can RESOLVE (a bucket
   * transform resolves through the owning catalog's FunctionCatalog;
-  * the path-based `graft-spj` face couldn't provide one, which is why
-  * it reports identity over the stored `__pt` instead — see
-  * GraftSpjSource's scaladoc). With both join sides resolving to THIS
+  * a path-addressed `format("graft")` table can't provide one, which
+  * is why it reports identity over the stored `__pt` instead — see
+  * GraftSpjTable's scaladoc). With both join sides resolving to THIS
   * function (same canonical name, same bucket count), Spark's
   * storage-partitioned join machinery elides both exchanges for plain
   * `a JOIN b USING (key)` SQL — no `__pt` conjunct, no Scala helper.

@@ -41,9 +41,9 @@ import graft.pol.PoolJsonSink
   *    name→directory: a managed table IS `<warehouse>/<ns>/<name>`,
   *    an external one (`LOCATION` / 'location' property) is a one-line
   *    `_LOCATION` pointer file. No second metastore to drift.
-  *  - Reads reuse the `graft-spj` scan (columnar vectorized batches,
-  *    snapshot manifest resolution, per-bucket input partitions), so
-  *    SQL users get the same scan the engine face gets.
+  *  - Reads reuse the `format("graft")` scan (columnar vectorized
+  *    batches, snapshot manifest resolution, per-bucket input
+  *    partitions), so SQL users get the same scan the engine face gets.
   *  - The SQL face exposes the LOGICAL schema — the stored `__pt`
   *    bucket column is subtracted — so `INSERT INTO ... VALUES` takes
   *    exactly the user's columns and `SELECT *` returns them.
@@ -1209,7 +1209,7 @@ private[sources] class StagedGraftTable(
 }
 
 /** A named graft table: SQL-facing schema (the stored `__pt` bucket
-  * column subtracted), reads through the columnar `graft-spj` scan
+  * column subtracted), reads through the columnar GraftSpjScan
   * pinned to `version` when time-travelling, writes bridged to the
   * transactional keyed sink.
   */
@@ -1315,7 +1315,7 @@ class GraftCatalogTable(
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftSpjScanBuilder(tableDir, fileSchema, version,
-      streamOptions = options.asScala.toMap)
+      streamOptions = Some(options.asScala.toMap))
 
   /** The stored bucket column, surfaced as a METADATA column (hidden
     * from `SELECT *`, addressable by name — the Iceberg `_partition`

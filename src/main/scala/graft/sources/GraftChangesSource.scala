@@ -17,16 +17,14 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.pol.{ChangeFeed, PoolJsonSink}
 import graft.pol.PoolJsonSink.TableManifest
 
-/** The `.changes` sub-table: a graft table's row-level change feed
-  * addressable BY NAME — `SELECT * FROM gcat.default.t.changes` for
-  * the batch history and `spark.readStream.table("gcat.default.t
-  * .changes")` for a genuine DSv2 micro-batch stream. This is the
-  * "streaming by NAME" redesign the round-6 wrap flagged: the v1
-  * `format("graft")` source materializes each batch driver-side as a
-  * DataFrame (a bucket-read + full-outer-join plan per version pair);
-  * here the SAME manifest-diff is re-expressed as INPUT PARTITIONS —
-  * one per (changed bucket, version step) — and the old∣new key join
-  * happens inside each partition reader as a hash diff.
+/** A graft table's row-level change feed as a DSv2 table: the
+  * `.changes` sub-table by NAME (`SELECT * FROM gcat.default.t.changes`,
+  * `spark.readStream.table("gcat.default.t.changes")`) and, by PATH,
+  * `spark.read`/`readStream.format("graft")` with `changeKey` or
+  * `changesFrom` ([[GraftTableSource]]). The manifest diff is
+  * expressed as INPUT PARTITIONS — one per (changed bucket, version
+  * step) — and the old∣new key join happens inside each partition
+  * reader as a hash diff, so no batch is assembled on the driver.
   *
   * Why the per-bucket hash diff is sound and scale-right:
   *  - the writer places every key with `pmod(xxhash64(key), n)`, so
@@ -43,8 +41,9 @@ import graft.pol.PoolJsonSink.TableManifest
   *    bucket-sized, not table-sized — the same bound every d*-family
   *    operator leans on.
   *
-  * Parity contract with the v1 feed ([[ChangeFeed.readTableChanges]],
-  * pinned by GraftChangesNameSpec): same schema (data columns sorted
+  * Parity contract with the DataFrame reference implementation
+  * ([[ChangeFeed.readTableChanges]], pinned by GraftChangesNameSpec
+  * and ChangesDiffPropertySpec): same schema (data columns sorted
   * by name + `_change_type` + `_commit_version`), same change
   * classification (insert / delete / update_preimage+postimage),
   * same per-version stepping over the on-disk manifest line. One
@@ -57,10 +56,13 @@ import graft.pol.PoolJsonSink.TableManifest
   * Schema across versions is FIXED at scan/stream construction (the
   * head manifest's recorded schema): older files null-fill evolved
   * columns through the parquet requested-schema contract, and
-  * additive evolution mid-stream surfaces on restart — the same
-  * contract the v1 source documents.
+  * additive evolution mid-stream surfaces on restart.
   */
-class GraftChangesTable(ident: String, tableDir: String)
+class GraftChangesTable(
+    ident: String, tableDir: String,
+    // lower-cased scan options the caller fixes (format("graft")'s
+    // changesFrom/changesTo → startingversion/endingversion)
+    fixedOptions: Map[String, String] = Map.empty)
     extends Table with SupportsRead {
 
   private lazy val manifest = PoolJsonSink.readManifest(tableDir)
@@ -79,7 +81,7 @@ class GraftChangesTable(ident: String, tableDir: String)
       options: CaseInsensitiveStringMap): ScanBuilder = {
     // CaseInsensitiveStringMap lower-cases its keys; normalize once so
     // every lookup below can use the documented camelCase names
-    val opts = options.asScala.toMap
+    val opts = options.asScala.toMap ++ fixedOptions
     () => new GraftChangesScan(ident, tableDir, opts)
   }
 }
@@ -142,7 +144,7 @@ class GraftChangesScan(
   * run at `maxVersionsPerTrigger` versions per batch, and
   * Trigger.AvailableNow fences the version line at trigger time so
   * racing commits land in the next run. Vacuum retention is the
-  * replay horizon, exactly like the v1 source.
+  * replay horizon.
   */
 class GraftChangesMicroBatchStream(
     ident: String, tableDir: String, dataSchema: StructType,
@@ -256,7 +258,7 @@ object GraftChanges {
       _.name == GraftSpjTable.BucketCol))
   }
 
-  /** The feed's schema: data columns SORTED BY NAME (the v1 feed's
+  /** The feed's schema: data columns SORTED BY NAME (the reference feed's
     * canonical order) + `_change_type` + `_commit_version`. All data
     * fields nullable — old files null-fill evolved columns.
     */
@@ -400,7 +402,7 @@ case class GraftChangesReaderFactory(
 /** The hash diff of one partition: old files → key-indexed map of
   * unsafe-row copies, new files streamed against it. Emits rows in
   * the feed schema (sorted data columns + change type + version).
-  * Null keys never match (SQL join semantics — the v1 full-outer
+  * Null keys never match (SQL join semantics — the reference full-outer
   * join behaves identically): a null-keyed old row deletes, a
   * null-keyed new row inserts.
   */

@@ -6,30 +6,34 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.execution.datasources.PartitionedFile
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.pol.PoolJsonSink
 
-/** `spark.read.format("graft-spj")` — the manifest table as a DSv2
-  * scan that REPORTS its physical layout, so Catalyst can plan a
-  * storage-partitioned join (SPJ): two graft tables bucketed with the
-  * same `nBuckets` join with ZERO shuffle of either side.
+/** The manifest table as a DSv2 scan — what `spark.read.format
+  * ("graft")` reads by default ([[GraftTableSource]]) and what the
+  * catalog's tables scan through. It prunes files at planning time
+  * (zone maps, bloom sidecars, the key hash), pushes exact filters,
+  * aggregates and limits down to the manifest, reports exact
+  * statistics, reads a pinned `versionAsOf` snapshot, and REPORTS its
+  * physical layout, so Catalyst can plan a storage-partitioned join
+  * (SPJ): two graft tables bucketed with the same `nBuckets` join with
+  * ZERO shuffle of either side.
   *
-  * Why this exists: every graft table is already hash-clustered on its
-  * merge key (`__pt = pmod(xxhash64(key), nBuckets)`, stored IN the
-  * data — PoolJsonSink.stageFiles), and the manifest knows exactly
-  * which files belong to which bucket. The v1 `format("graft")`
-  * relation hides that from the planner, so a fact⋈fact join of two
-  * keyed tables shuffles BOTH — at 100 TB the exchange IS the query.
-  * This scan surfaces the layout the Iceberg/Delta way:
+  * Every graft table is hash-clustered on its merge key
+  * (`__pt = pmod(xxhash64(key), nBuckets)`, stored IN the data —
+  * PoolJsonSink.stageFiles), and the manifest knows exactly which
+  * files belong to which bucket. A scan that hid that from the
+  * planner would shuffle BOTH sides of a fact⋈fact join of two keyed
+  * tables — at 100 TB the exchange IS the query. This scan surfaces
+  * the layout the Iceberg/Delta way:
   *
   *  - one [[InputPartition]] per bucket (empty buckets included, so
   *    two tables' partition values always align — Spark pads nothing),
@@ -50,40 +54,13 @@ import graft.pol.PoolJsonSink
   * the co-clustering; [[GraftSpj.join]] adds it for you). Grouped
   * aggregation gets the same elision by grouping on `(__pt, key)`.
   *
-  * Reads resolve through the CURRENT committed manifest (torn state
-  * remains unobservable); column pruning reaches the parquet reader.
-  * Filter pushdown and versionAsOf stay with `format("graft")` — this
-  * scan is the JOIN-layout face of the same table, not a replacement.
+  * Each scan resolves the committed manifest once (torn state remains
+  * unobservable); column pruning reaches the parquet reader. A
+  * path-addressed table streams only through its change feed
+  * (`readStream.format("graft").option("changeKey", …)`); the
+  * catalog's tables also serve the append stream
+  * ([[GraftSpjScan.toMicroBatchStream]]).
   */
-class GraftSpjSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-spj"
-
-  private def path(options: CaseInsensitiveStringMap): String =
-    Option(options.get("path")).getOrElse(
-      sys.error("graft-spj requires a 'path' option"))
-
-  private def versionOf(
-      options: CaseInsensitiveStringMap): Option[Long] =
-    Option(options.get("versionAsOf")).map(_.trim.toLong)
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GraftSpjTable.tableSchema(path(options), versionOf(options))
-
-  override def inferPartitioning(
-      options: CaseInsensitiveStringMap): Array[Transform] =
-    Array(Expressions.identity(GraftSpjTable.BucketCol))
-
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table = {
-    val opts = new CaseInsensitiveStringMap(properties)
-    new GraftSpjTable(path(opts), schema, versionOf(opts))
-  }
-
-  override def supportsExternalMetadata(): Boolean = false
-}
-
 object GraftSpjTable {
   /** The stored bucket column every graft table carries. */
   val BucketCol = "__pt"
@@ -124,12 +101,14 @@ class GraftSpjTable(
     extends Table with SupportsRead {
 
   override def name(): String =
-    s"graft-spj `$tableDir`" + version.fold("")(v => s"@v$v")
+    s"graft `$tableDir`" + version.fold("")(v => s"@v$v")
 
   override def schema(): StructType = declared
 
+  // MICRO_BATCH_READ only so a keyless readStream reaches the scan's
+  // toMicroBatchStream and fails there naming 'changeKey'
   override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
+    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
 
   override def partitioning(): Array[Transform] =
     Array(Expressions.identity(GraftSpjTable.BucketCol))
@@ -144,7 +123,7 @@ class GraftSpjScanBuilder(
     version: Option[Long] = None,
     onBuild: GraftSpjScan => Unit = _ => (),
     allowFilterPruning: Boolean = true,
-    streamOptions: Map[String, String] = Map.empty)
+    streamOptions: Option[Map[String, String]] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
@@ -219,8 +198,7 @@ class GraftSpjScanBuilder(
   /** Accept every filter for manifest-level skipping but report ALL
     * of them unhandled: pruning through zone maps / blooms / the key
     * hash is a pure optimization and Spark re-applies the predicates
-    * above the scan — the same never-a-semantics-bet contract the v1
-    * face keeps (GraftTableSource scaladoc).
+    * above the scan, so pruning is never a semantics bet.
     */
   override def pushFilters(
       filters: Array[org.apache.spark.sql.sources.Filter])
@@ -257,7 +235,7 @@ class GraftSpjScanBuilder(
     aggResult match {
       case Some((aggSchema, rows)) =>
         GraftAggLocalScan(aggSchema, rows,
-          s"graft-spj $tableDir" + version.fold("")(v => s"@v$v"))
+          s"graft $tableDir" + version.fold("")(v => s"@v$v"))
       case None =>
         // exact pushdown pins the scan to the snapshot the proof ran
         // on — the manifest must not re-resolve to a newer commit
@@ -282,7 +260,9 @@ class GraftSpjScan(
     version: Option[Long] = None,
     pushedFilters: Array[org.apache.spark.sql.sources.Filter] =
       Array.empty,
-    streamOptions: Map[String, String] = Map.empty,
+    // None = a path-addressed table, which streams only its change
+    // feed (GraftTableSource); the catalog passes its read options
+    streamOptions: Option[Map[String, String]] = None,
     pushedLimit: Option[Int] = None,
     // when the builder PROVED the pushed conjunction is exactly a
     // file set (every live file all-in or all-out), this is the
@@ -314,10 +294,13 @@ class GraftSpjScan(
     */
   override def toMicroBatchStream(
       checkpointLocation: String): MicroBatchStream = {
+    val opts = streamOptions.getOrElse(sys.error(
+      "readStream.format(\"graft\") streams the table's change feed " +
+        s"and needs option 'changeKey' (the merge key column): $tableDir"))
     require(version.isEmpty,
       s"cannot stream a time-travelled table: $tableDir")
     val data = GraftChanges.dataSchema(manifest, tableDir)
-    val key = streamOptions.get("changekey")
+    val key = opts.get("changekey")
       .orElse(manifest.keyCol).getOrElse(sys.error(
         s"streaming read of $tableDir needs the table's merge key " +
           "(manifest records none; pass option 'changeKey')"))
@@ -327,11 +310,11 @@ class GraftSpjScan(
       s"streaming read cannot serve column '${f.name}' " +
         "(metadata columns are batch-only)"))
     new GraftChangesMicroBatchStream(s"graft `$tableDir`", tableDir,
-      data, key, streamOptions, GraftChanges.RowsMode, rows)
+      data, key, opts, GraftChanges.RowsMode, rows)
   }
 
   override def description(): String =
-    s"graft-spj $tableDir (bucket-aligned)"
+    s"graft $tableDir (bucket-aligned)"
 
   // ---- runtime bucket pruning (DPP for the bucket column) ----
 
@@ -699,9 +682,9 @@ case class GraftBucketPartition(bucketId: Long, files: Seq[(String, Long)])
   * InternalRow-typed handoff FileSourceScanExec's columnar path
   * uses), surfaced here through the DSv2 columnar read API so
   * BatchScanExec plans the scan columnar and whole-stage codegen
-  * consumes batches directly. Scan-heavy SPJ queries then read at
-  * the same vectorized speed as `format("graft")`/plain parquet
-  * instead of paying a per-row materialization tax. Per-file reader
+  * consumes batches directly. Scan-heavy queries then read at the
+  * same vectorized speed as plain parquet instead of paying a per-row
+  * materialization tax. Per-file reader
   * cleanup is the builder's own task-completion listener (SPARK-23457
   * registers it inside the closure), so early termination (limits)
   * leaks nothing.
@@ -758,7 +741,7 @@ object GraftSpj {
   import org.apache.spark.sql.{Column, DataFrame}
 
   def read(spark: SparkSession, tableDir: String): DataFrame =
-    spark.read.format("graft-spj").load(tableDir)
+    spark.read.format("graft").load(tableDir)
 
   /** Join two same-nBuckets graft tables on key equality with the
     * bucket-alignment conjunct added (semantics-neutral: `__pt` is a

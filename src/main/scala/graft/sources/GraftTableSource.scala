@@ -1,11 +1,13 @@
 package graft.sources
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext}
+import org.apache.spark.sql.{DataFrame, SQLContext}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.execution.streaming.Sink
-import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, StreamSinkProvider}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.pol.PoolJsonSink
 
@@ -64,37 +66,87 @@ class GraftTableSink(
   }
 }
 
-/** `spark.read.format("graft")` — SQL/DataFrame access to a
-  * manifest-committed table that can NEVER observe torn state.
-  *
-  * A plain `spark.read.parquet(tableDir)` on a manifest table would
-  * list uncommitted staged files and orphans from crashed or
-  * lost-race writes — readers must resolve the file list through the
-  * committed manifest, which until now only the Scala entry points
-  * (`PoolJsonSink.readTable`/`readBuckets`) did. This source closes
-  * the gap for SQL users and BI tools:
+/** `format("graft")` — the one data source name for a manifest
+  * table. Every READ is a DSv2 table picked from the options:
   *
   * {{{
   *   spark.read.format("graft").load(tableDir)              // current
   *   spark.read.format("graft")
-  *     .option("versionAsOf", 3).load(tableDir)             // time travel
+  *     .option("versionAsOf", 3).load(tableDir)             // or a tag
+  *   spark.read.format("graft").option("history", "true")   // DESCRIBE
+  *     .load(tableDir)                                      //  HISTORY
+  *   spark.read.format("graft").option("changesFrom", 2)    // change
+  *     .option("changesTo", 5).load(tableDir)               //  feed
+  *   spark.readStream.format("graft")
+  *     .option("changeKey", "k").load(tableDir)             // CDC stream
   *   CREATE TEMPORARY VIEW t USING graft OPTIONS (path '…') // plain SQL
   * }}}
   *
-  * Every scan re-resolves the CURRENT committed manifest (a view
-  * created before an upsert sees the new version on its next query —
-  * snapshot-per-query, like Delta). Pushed filters do double duty:
-  * equality on a STRING stats column or range/equality on a LONG
-  * stats column prunes data files through the manifest zone maps
-  * BEFORE any file is opened, and every filter is also applied inside
-  * the inner plan so the parquet scan gets its usual pushdown. All
-  * filters are reported unhandled, so Spark re-applies them above —
-  * pruning here is a pure optimization, never a semantics bet.
+  *  - default → [[GraftSpjTable]]: the bucket-aligned scan with
+  *    zone-map/bloom/key-hash pruning, aggregate and limit pushdown,
+  *    exact statistics and the storage-partitioned-join layout.
+  *    `versionAsOf` takes a version number or a tag name;
+  *  - `history=true` → [[GraftHistoryTable]] (manifest-only);
+  *  - `changesFrom` or `changeKey` → [[GraftChangesTable]], batch
+  *    (versions (`changesFrom`, `changesTo`]) and `readStream`
+  *    (`startingVersion`, `maxVersionsPerTrigger`).
+  *
+  * `branch` addresses the WAP branch's directory for every face. Each
+  * scan resolves the committed manifest when it is built, so a view
+  * sees the current version on every query and never torn state.
+  *
+  * Writes stay on the V1 faces (Spark's DataFrameWriter has no
+  * path-based DSv2 route for ErrorIfExists/Ignore, the default mode):
+  * the tables above declare no write capability, so `df.write` and
+  * `writeStream` fall back to [[createRelation]] / [[createSink]].
+  * `supportsExternalMetadata` lets a write hand its own schema to
+  * `getTable`, which never reads a manifest for it.
   */
-class GraftTableSource extends RelationProvider with DataSourceRegister
-    with StreamSourceProvider with CreatableRelationProvider
-    with StreamSinkProvider {
+class GraftTableSource extends TableProvider with DataSourceRegister
+    with CreatableRelationProvider with StreamSinkProvider {
   override def shortName(): String = "graft"
+
+  override def supportsExternalMetadata(): Boolean = true
+
+  // ---- read faces: one DSv2 table per option set ----
+
+  private def tableDir(opts: CaseInsensitiveStringMap): String = {
+    val base = Option(opts.get("path")).getOrElse(
+      sys.error("graft source requires a 'path' option"))
+    Option(opts.get("branch")).fold(base)(PoolJsonSink.branchDir(base, _))
+  }
+
+  private def table(
+      opts: CaseInsensitiveStringMap, declared: Option[StructType]): Table = {
+    val dir = tableDir(opts)
+    def opt(k: String) = Option(opts.get(k))
+    if (opt("history").exists(_.toBoolean))
+      new GraftHistoryTable(s"graft `$dir`.history", dir)
+    else if (opt("changesFrom").isDefined || opt("changeKey").isDefined)
+      new GraftChangesTable(s"graft `$dir`.changes", dir,
+        (opt("changesFrom").map("startingversion" -> _) ++
+          opt("changesTo").map("endingversion" -> _)).toMap)
+    else {
+      val version = opt("versionAsOf")
+        .map(v => PoolJsonSink.resolveVersionRef(dir, v.trim))
+      new GraftSpjTable(dir,
+        declared.getOrElse(GraftSpjTable.tableSchema(dir, version)), version)
+    }
+  }
+
+  /** A directory with no committed manifest has an empty schema: that
+    * is a write (or `writeStream`) creating the table — a read of it
+    * fails at scan time with "not a manifest table".
+    */
+  override def inferSchema(opts: CaseInsensitiveStringMap): StructType =
+    if (PoolJsonSink.readManifest(tableDir(opts)).isEmpty) new StructType()
+    else table(opts, None).schema()
+
+  override def getTable(
+      schema: StructType,
+      partitioning: Array[Transform],
+      properties: java.util.Map[String, String]): Table =
+    table(new CaseInsensitiveStringMap(properties), Some(schema))
 
   // ---- batch write face: df.write.format("graft") = keyed MERGE ----
 
@@ -106,7 +158,7 @@ class GraftTableSource extends RelationProvider with DataSourceRegister
     * wins after that); `statsCols` opts columns into zone maps.
     */
   override def createRelation(
-      sqlContext: SQLContext,
+      ctx: SQLContext,
       mode: org.apache.spark.sql.SaveMode,
       parameters: Map[String, String],
       data: org.apache.spark.sql.DataFrame): BaseRelation = {
@@ -154,7 +206,7 @@ class GraftTableSource extends RelationProvider with DataSourceRegister
       case (k, sql) if k.startsWith("expect.") =>
         k.stripPrefix("expect.") -> org.apache.spark.sql.functions.expr(sql)
     }.toSeq.sortBy(_._1)
-    val spark = sqlContext.sparkSession
+    val spark = ctx.sparkSession
     val exists = PoolJsonSink.readManifest(path).isDefined
     mode match {
       case Append =>
@@ -174,7 +226,12 @@ class GraftTableSource extends RelationProvider with DataSourceRegister
           nBuckets, statsCols = statsCols, expectations = expectations,
           bloomCols = bloomCols, optimizedWrite = optimizedWrite)
     }
-    GraftTableRelation(path, None)(sqlContext)
+    // the writer's answer needs no scan: reads resolve through getTable
+    val written = data.schema
+    new BaseRelation {
+      override def sqlContext: SQLContext = ctx
+      override def schema: StructType = written
+    }
   }
 
   // ---- streaming write face: writeStream.format("graft") ----
@@ -205,239 +262,5 @@ class GraftTableSource extends RelationProvider with DataSourceRegister
       complete = outputMode ==
         org.apache.spark.sql.streaming.OutputMode.Complete(),
       compactEvery = parameters.get("compactEvery").map(_.toInt))
-  }
-
-  // ---- streaming face: the change feed as a Source (readStream) ----
-
-  private def streamParams(
-      parameters: Map[String, String]): (String, String, Long) = {
-    val path = parameters.getOrElse("path",
-      sys.error("graft source requires a 'path' option"))
-    // the manifest records the merge key since the keycol change;
-    // the option remains an override for older tables
-    val key = parameters.get("changeKey")
-      .orElse(PoolJsonSink.readManifest(path).flatMap(_.keyCol))
-      .getOrElse(sys.error(
-        "graft change-feed stream requires a 'changeKey' option " +
-          "(the table's manifest records no merge key)"))
-    (path, key,
-      parameters.get("startingVersion").map(_.toLong).getOrElse(0L))
-  }
-
-  override def sourceSchema(
-      sqlContext: SQLContext,
-      schema: Option[StructType],
-      providerName: String,
-      parameters: Map[String, String]): (String, StructType) = {
-    val (path, key, _) = streamParams(parameters)
-    (shortName(),
-      schema.getOrElse(
-        GraftChangeFeedSource.changesSchema(sqlContext, path, key)))
-  }
-
-  override def createSource(
-      sqlContext: SQLContext,
-      metadataPath: String,
-      schema: Option[StructType],
-      providerName: String,
-      parameters: Map[String, String]): org.apache.spark.sql.execution.streaming.Source = {
-    val (path, key, start) = streamParams(parameters)
-    new GraftChangeFeedSource(sqlContext, path, key, start,
-      parameters.get("maxVersionsPerTrigger").map(_.toLong))
-  }
-
-  override def createRelation(
-      sqlContext: SQLContext,
-      parameters: Map[String, String]): BaseRelation = {
-    val basePath = parameters.getOrElse("path",
-      sys.error("graft source requires a 'path' option"))
-    // option("branch", name): address the WAP branch — a branch dir
-    // IS a graft table, so every read flavor below works on it
-    val path = parameters.get("branch") match {
-      case Some(b) => PoolJsonSink.branchDir(basePath, b)
-      case None => basePath
-    }
-    if (parameters.get("history").exists(_.toBoolean))
-      GraftHistoryRelation(path)(sqlContext)
-    else parameters.get("changesFrom") match {
-      case Some(from) =>
-        val key = parameters.get("changeKey")
-          .orElse(PoolJsonSink.readManifest(path).flatMap(_.keyCol))
-          .getOrElse(sys.error(
-            "graft change-feed reads require a 'changeKey' option " +
-              "(the table's manifest records no merge key)"))
-        GraftChangesRelation(path, from.toLong,
-          parameters.get("changesTo").map(_.toLong), key)(sqlContext)
-      case None =>
-        // numeric → that version; any other string → tag lookup (the
-        // same resolution SQL `VERSION AS OF` runs on the name face)
-        GraftTableRelation(path,
-          parameters.get("versionAsOf")
-            .map(PoolJsonSink.resolveVersionRef(path, _)))(sqlContext)
-    }
-  }
-}
-
-/** `spark.read.format("graft").option("history", "true").load(dir)`
-  * — DESCRIBE HISTORY as a relation: one row per retained version
-  * with operation, commit time, snapshot row count and file churn
-  * ([[graft.pol.PoolJsonSink.tableHistory]]). O(manifests), no data
-  * file opened.
-  */
-case class GraftHistoryRelation(path: String)(
-    @transient val sqlContext: SQLContext)
-  extends BaseRelation with TableScan {
-
-  private def resolve: DataFrame =
-    PoolJsonSink.tableHistory(sqlContext.sparkSession, path)
-
-  override val schema: StructType = resolve.schema
-
-  override def buildScan(): RDD[Row] = resolve.rdd
-}
-
-/** `spark.read.format("graft").option("changesFrom", 2).option(
-  * "changeKey", "user_id").load(dir)` — the SQL face of
-  * [[graft.pol.ChangeFeed.readTableChanges]]: rows changed in versions
-  * (changesFrom, changesTo] tagged with `_change_type` and
-  * `_commit_version`. `changesTo` defaults to the table's current
-  * committed version at scan time.
-  */
-case class GraftChangesRelation(
-    path: String, changesFrom: Long, changesTo: Option[Long], keyCol: String)(
-    @transient val sqlContext: SQLContext)
-  extends BaseRelation with TableScan {
-
-  private def spark = sqlContext.sparkSession
-
-  private def resolve: DataFrame = {
-    val to = changesTo.orElse(PoolJsonSink.readManifest(path).map(_.version))
-      .getOrElse(sys.error(s"not a manifest table: $path"))
-    graft.pol.ChangeFeed.readTableChanges(
-      spark, path, changesFrom, to, col(keyCol))
-  }
-
-  override val schema: StructType = resolve.schema
-
-  override def buildScan(): RDD[Row] = resolve.rdd
-}
-
-case class GraftTableRelation(path: String, versionAsOf: Option[Long])(
-    @transient val sqlContext: SQLContext)
-  extends BaseRelation with PrunedFilteredScan {
-
-  private def spark = sqlContext.sparkSession
-
-  override val schema: StructType = resolve(Array.empty).schema
-
-  /** Exact bytes of the committed snapshot's live files. The
-    * BaseRelation default is `defaultSizeInBytes` = "assume huge", so
-    * without this a small dimension table read by path never plans as
-    * the broadcast side of a join. Plain-dir fallback reads keep the
-    * conservative default.
-    */
-  override lazy val sizeInBytes: Long = {
-    val m = versionAsOf match {
-      case Some(v) => Some(PoolJsonSink.readManifestAt(path, v))
-      case None => PoolJsonSink.readManifest(path)
-    }
-    m.fold(defaultSize)(mm => mm.files.map(rel =>
-      PoolJsonSink.fileBytes(mm, path, rel)).sum)
-  }
-
-  // BaseRelation.sizeInBytes cannot be super-called from a lazy val
-  // override; this is its documented default
-  private def defaultSize: Long =
-    spark.sessionState.conf.defaultSizeInBytes
-
-  // all filters re-applied by Spark above this scan (default
-  // unhandledFilters) — translation below is pushdown, not contract
-
-  /** Resolve the committed table, letting pushed filters choose a
-    * manifest-level zone-map pruned read where one applies.
-    */
-  private def resolve(filters: Array[Filter]): DataFrame =
-    versionAsOf match {
-      case Some(v) => PoolJsonSink.readTableAsOf(spark, path, v)
-      case None =>
-        if (PoolJsonSink.readManifest(path).isEmpty)
-          PoolJsonSink.readTable(spark, path) // plain-dir fallback
-        else stringEqPruned(filters)
-          .orElse(longRangePruned(filters))
-          .getOrElse(PoolJsonSink.readTable(spark, path))
-    }
-
-  private def stringEqPruned(filters: Array[Filter]): Option[DataFrame] =
-    filters.collectFirst {
-      case EqualTo(a, v: String) =>
-        // zone-map + bloom-sidecar composed pruning: on a bloom-indexed
-        // column (bloomCols at write time) a SQL `WHERE digest = '…'`
-        // opens ~1 file; on any other column this degrades to the plain
-        // byte-range zone-map read (pruneFilesBloomEq keeps the zoned
-        // candidates when no sidecar vote exists)
-        PoolJsonSink.readTableStringEqBloom(spark, path, a, v)
-    }
-
-  /** Fold per-column bounds from long-valued comparison filters; the
-    * first column with a bound becomes the zone-map range read.
-    */
-  private def longRangePruned(filters: Array[Filter]): Option[DataFrame] = {
-    def asLong(v: Any): Option[Long] = v match {
-      case l: Long => Some(l)
-      case i: Int => Some(i.toLong)
-      case _ => None
-    }
-    val bounds = collection.mutable.LinkedHashMap
-      .empty[String, (Long, Long)]
-    def tighten(a: String, lo: Option[Long], hi: Option[Long]): Unit = {
-      val (clo, chi) = bounds.getOrElse(a, (Long.MinValue, Long.MaxValue))
-      bounds(a) = (math.max(clo, lo.getOrElse(Long.MinValue)),
-        math.min(chi, hi.getOrElse(Long.MaxValue)))
-    }
-    filters.foreach {
-      case EqualTo(a, v) => asLong(v).foreach(l => tighten(a, Some(l), Some(l)))
-      case GreaterThan(a, v) => asLong(v).foreach(l => tighten(a, Some(l + 1), None))
-      case GreaterThanOrEqual(a, v) => asLong(v).foreach(l => tighten(a, Some(l), None))
-      case LessThan(a, v) => asLong(v).foreach(l => tighten(a, None, Some(l - 1)))
-      case LessThanOrEqual(a, v) => asLong(v).foreach(l => tighten(a, None, Some(l)))
-      case _ =>
-    }
-    bounds.collectFirst {
-      case (a, (lo, hi))
-          if lo != Long.MinValue || hi != Long.MaxValue =>
-        PoolJsonSink.readTableLongRange(spark, path, a, lo, hi)
-    }
-  }
-
-  /** Best-effort Filter → Column translation so predicates reach the
-    * inner parquet scan; untranslatable filters are simply skipped
-    * (Spark re-applies everything above).
-    */
-  private def toColumn(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v) => Some(col(a) === lit(v))
-    case EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
-    case GreaterThan(a, v) => Some(col(a) > lit(v))
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case LessThan(a, v) => Some(col(a) < lit(v))
-    case LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-    case In(a, vs) => Some(col(a).isin(vs.toIndexedSeq: _*))
-    case IsNull(a) => Some(col(a).isNull)
-    case IsNotNull(a) => Some(col(a).isNotNull)
-    case StringStartsWith(a, p) => Some(col(a).startsWith(p))
-    case StringEndsWith(a, p) => Some(col(a).endsWith(p))
-    case StringContains(a, p) => Some(col(a).contains(p))
-    case And(l, r) => for (lc <- toColumn(l); rc <- toColumn(r)) yield lc && rc
-    case Or(l, r) => for (lc <- toColumn(l); rc <- toColumn(r)) yield lc || rc
-    case Not(c) => toColumn(c).map(!_)
-    case _ => None
-  }
-
-  override def buildScan(
-      requiredColumns: Array[String],
-      filters: Array[Filter]): RDD[Row] = {
-    val base = resolve(filters)
-    val filtered = filters.flatMap(toColumn)
-      .foldLeft(base)((df, c) => df.where(c))
-    filtered.select(requiredColumns.toIndexedSeq.map(col): _*).rdd
   }
 }

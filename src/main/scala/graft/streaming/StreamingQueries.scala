@@ -400,12 +400,13 @@ object StreamingQueries {
     }),
 
     // T10 — the change feed as a STREAMING source (readStream.format
-    // ("graft")): three committed versions of the per-user keyed table
-    // (upsert evens / MERGE odds / delete user%7) replay from genesis
-    // through the Structured Streaming engine — offsets ARE manifest
-    // versions (checkpoint-recoverable, AvailableNow fenced at
-    // trigger time like FileStreamSource), each micro-batch reads
-    // only manifest-changed buckets, and the memory sink accumulates
+    // ("graft") with changeKey → the DSv2 GraftChangesTable): three
+    // committed versions of the per-user keyed table (upsert evens /
+    // MERGE odds / delete user%7) replay from genesis through the
+    // Structured Streaming engine — offsets ARE manifest versions
+    // (checkpoint-recoverable, AvailableNow fenced at trigger time
+    // like FileStreamSource), each micro-batch is per-changed-bucket
+    // hash-diff partition readers, and the memory sink accumulates
     // the full change history, which the oracle pins as j3's set
     // algebra PLUS the genesis snapshot-as-inserts. This is the read
     // side of the platform loop t6 writes: table in, feed out, both
@@ -435,13 +436,12 @@ object StreamingQueries {
 
     // T12 — t10's streamed CDC through the NAME face: the same
     // staged history, read as `spark.readStream.table(
-    // "<cat>.default.cdc.changes")` — the v2 MicroBatchStream whose
-    // batches are per-changed-bucket hash-diff partition readers
-    // (GraftChangesSource), not the v1 driver-assembled plan.
-    // Shares t10's oracle verbatim: one streamed-feed contract, two
-    // source implementations, both row-identical to the relational
-    // recomputation (and ChangesProbe prices the v2 readers at ~4x
-    // less per batch at the 4M-row probe).
+    // "<cat>.default.cdc.changes")` — the catalog resolves the same
+    // DSv2 change-feed table t10 reads by path (GraftChangesSource),
+    // so this row pins the name resolution and the sub-table
+    // addressing. Shares t10's oracle verbatim: one streamed-feed
+    // contract, two addressing faces, both row-identical to the
+    // relational recomputation.
     "t12_stream_changes_by_name" -> ((s, d) => {
       val table = graft.relational.JoinQueries.stagedChangeTable(s, d)
       val root = new java.io.File(table).getParentFile
@@ -472,8 +472,8 @@ object StreamingQueries {
     // T11 — STREAMING incremental materialized-view maintenance: the
     // platform loop closed end-to-end. A keyed table takes three
     // committed versions (upsert / MERGE / delete — j3's staging);
-    // its change feed streams through the engine (t10's source, one
-    // version per micro-batch); and each micro-batch folds its
+    // its change feed streams through the engine (t10's DSv2 stream,
+    // one version per micro-batch); and each micro-batch folds its
     // changes into a SECOND keyed manifest table holding a per-group
     // rollup, by retraction algebra (insert/update_postimage +1,
     // delete/update_preimage −1 — j4's algebra, but applied
@@ -587,8 +587,8 @@ object StreamingQueries {
   )
 
   /** The staged history's streamed feed from genesis, recomputed
-    * from first principles — shared by t10 (v1 source) and t12 (v2
-    * name-based source).
+    * from first principles — shared by t10 (path-addressed stream)
+    * and t12 (name-addressed `.changes` stream).
     */
   private val t10OracleSql: String =
     """WITH ev AS (

@@ -71,7 +71,8 @@ object BloomProbe {
       (present ++ absent).foreach { k =>
         val cand = PoolJsonSink.pruneFilesBloomEq(bloomDir, mm, "k", k)
         val (rows, tb) = time(
-          PoolJsonSink.readTableStringEqBloom(spark, bloomDir, "k", k).count())
+          spark.read.format("graft").load(bloomDir)
+            .where(col("k") === k).count())
         val (_, tf) = time(
           PoolJsonSink.readTable(spark, bloomDir)
             .where(col("k") === k).count())

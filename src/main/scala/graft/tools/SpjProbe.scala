@@ -8,7 +8,7 @@ import graft.sources.GraftSpj
 
 /** SpjProbe <nRows> <nBuckets> <workDir> — the evidence behind r21's
   * scale claim: a fact⋈fact join of two co-bucketed keyed tables
-  * through format("graft-spj") must cost ZERO exchanges, and the win
+  * through format("graft") must cost ZERO exchanges, and the win
   * over the re-shuffling plan must GROW with the data.
   *
   * Seeds two manifest tables keyed 1:1 (left: nRows keys with two
@@ -79,9 +79,9 @@ object SpjProbe {
 
     // --- scan-bound case: no join, pure read + aggregate — the shape
     // where the reader implementation IS the cost. With the round-6
-    // columnar path the graft-spj scan must track the vectorized
-    // format("graft") scan (within ~1.2×), not pay a per-row
-    // materialization tax.
+    // columnar path the graft scan must track a vectorized plain
+    // parquet read of the committed files (within ~1.2×), not pay a
+    // per-row materialization tax.
     def spjScan() = GraftSpj.read(spark, la)
       .agg(sum(col("k")), sum(col("ag")), count(lit(1))).head()
     def graftScan() = PoolJsonSink.readTable(spark, la)

@@ -34,19 +34,6 @@ object GraftColumnBridge {
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
-  /** Streaming-tagged DataFrame from an InternalRow RDD — the v1
-    * streaming Source contract (`getBatch` must return a frame with
-    * `isStreaming = true`; `SQLContext.internalCreateDataFrame` is
-    * `private[sql]`, and this is the same call Spark's own
-    * FileStreamSource makes).
-    */
-  def streamingDataFrame(
-      sqlContext: SQLContext,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    sqlContext.asInstanceOf[classic.SQLContext]
-      .internalCreateDataFrame(rdd, schema, isStreaming = true)
-
   /** Batch re-plan of a v1 Sink's incoming micro-batch frame (the
     * addBatch contract: don't re-execute the engine's streaming plan
     * through a second query — lift its InternalRow RDD into a plain

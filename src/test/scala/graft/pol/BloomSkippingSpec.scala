@@ -64,7 +64,8 @@ class BloomSkippingSpec extends AnyFunSuite {
       s"bloom pruned nothing: ${bloomed.size} of ${zoned.size}")
     assert(bloomed.size <= 2, s"expected ~1 file, got ${bloomed.size}")
     // the pruned read is EXACT
-    val got = PoolJsonSink.readTableStringEqBloom(spark, dir, "k", probe)
+    val got = spark.read.format("graft").load(dir)
+      .where(col("k") === probe)
       .select("payload").collect().map(_.getString(0)).toSeq
     assert(got == Seq("payload_123"))
   }
@@ -82,8 +83,8 @@ class BloomSkippingSpec extends AnyFunSuite {
       s"bloom barely pruning: kept $totalKept of " +
         s"${absent.size * m.files.size} probes")
     absent.foreach { k =>
-      assert(PoolJsonSink.readTableStringEqBloom(spark, dir, "k", k)
-        .isEmpty)
+      assert(spark.read.format("graft").load(dir)
+        .where(col("k") === k).isEmpty)
     }
   }
 
@@ -110,7 +111,8 @@ class BloomSkippingSpec extends AnyFunSuite {
         s"post-compact file $rel missing its sidecar")
     }
     // lookup still exact after maintenance
-    assert(PoolJsonSink.readTableStringEqBloom(spark, dir, "k", digest(42))
+    assert(spark.read.format("graft").load(dir)
+      .where(col("k") === digest(42))
       .select("payload").collect().map(_.getString(0)).toSeq ==
       Seq("merged_42"))
     // vacuum: dead data files AND their sidecars go; live sidecars stay

@@ -44,7 +44,8 @@ class DataSkippingSpec extends AnyFunSuite {
       assert(mx >= 210 && mn <= 260, s"$f [$mn,$mx] outside range")
     }
     // and the pruned read equals the full-scan filter
-    val pruned = PoolJsonSink.readTableLongRange(spark, dir, "seq", 210, 260)
+    val pruned = spark.read.format("graft").load(dir)
+      .where(col("seq").between(210, 260))
       .select("k", "seq").as[(String, Long)].collect().toSet
     val full = PoolJsonSink.readTable(spark, dir)
       .where(col("seq").between(210, 260))
@@ -74,7 +75,8 @@ class DataSkippingSpec extends AnyFunSuite {
     }
     // no stale stats for vacuumed files
     assert(m.stats.keySet.subsetOf(m.files.toSet))
-    val got = PoolJsonSink.readTableLongRange(spark, dir, "seq", 0, 109)
+    val got = spark.read.format("graft").load(dir)
+      .where(col("seq").between(0, 109))
       .count()
     assert(got == 110)
   }
@@ -104,7 +106,8 @@ class DataSkippingSpec extends AnyFunSuite {
     assert(sel.nonEmpty && sel.size < m.files.size,
       s"string pruning must drop files: ${sel.size} of ${m.files.size}")
     // pruned read equals the full-scan filter
-    val pruned = PoolJsonSink.readTableStringEq(spark, dir, "source", "github")
+    val pruned = spark.read.format("graft").load(dir)
+      .where(col("source") === "github")
       .select("k").as[String].collect().toSet
     val full = PoolJsonSink.readTable(spark, dir)
       .where(col("source") === "github")
@@ -130,7 +133,8 @@ class DataSkippingSpec extends AnyFunSuite {
     val statsless = m.files.filterNot(f =>
       m.stats.get(f).exists(_.contains("seq")))
     assert(statsless.nonEmpty && statsless.forall(sel.contains))
-    val got = PoolJsonSink.readTableLongRange(spark, dir, "seq", 0, 10)
+    val got = spark.read.format("graft").load(dir)
+      .where(col("seq").between(0, 10))
       .select("k").as[String].collect().toSet
     assert(got == Set("a"))
   }
@@ -159,7 +163,8 @@ class DataSkippingSpec extends AnyFunSuite {
       s"expected <=2 files for a 50-wide range, got ${after.size} " +
         s"of ${m1.files.size}")
     // and the clustered read returns exactly the range
-    assert(PoolJsonSink.readTableLongRange(spark, dir, "seq", 100, 150)
+    assert(spark.read.format("graft").load(dir)
+      .where(col("seq").between(100, 150))
       .count() == 51)
   }
 

@@ -97,7 +97,7 @@ class CatalogSpjSpec extends AnyFunSuite {
       "SELECT id, concat('v', id) FROM range(0, 2000)")
     // evaluate the catalog function against the engine-face stored
     // __pt for every row — bit-identical placement or SPJ would lie
-    val stored = spark.read.format("graft-spj")
+    val stored = spark.read.format("graft")
       .load(s"$wh/default/c")
       .selectExpr("k", "__pt",
         "pmod(xxhash64(k), 16L) AS recomputed")

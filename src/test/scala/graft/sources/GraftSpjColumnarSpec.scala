@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryHarness.spark
 import graft.pol.PoolJsonSink
 
-/** The `graft-spj` scan must execute COLUMNAR for flat-atomic
+/** The `format("graft")` scan must execute COLUMNAR for flat-atomic
   * projections (ColumnarToRow above the BatchScan — vectorized
   * parquet batches flow straight into codegen), fall back to the row
   * reader for nested columns, and return identical data either way.

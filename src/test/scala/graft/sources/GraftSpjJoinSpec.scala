@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryHarness.spark
 import graft.pol.PoolJsonSink
 
-/** Storage-partitioned join through `format("graft-spj")`: two keyed
+/** Storage-partitioned join through `format("graft")`: two keyed
   * tables sharing nBuckets must join with ZERO shuffle of either side
   * (the 100 TB fact⋈fact case the v1 relation cannot plan), and the
   * result must equal the plain (shuffling) join.

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.QueryHarness.spark
 import graft.pol.PoolJsonSink
 
-/** Planning-time pruning for the graft-spj / catalog scan: a key
+/** Planning-time pruning for the graft path / catalog scan: a key
   * point lookup opens ONE bucket, zone-map range predicates skip
   * files, and every pruned plan still returns exactly the filtered
   * rows (predicates re-apply above the scan — pruning is an
@@ -64,10 +64,10 @@ class GraftSpjPruningSpec extends AnyFunSuite {
       Seq((1L, "a"), (2L, "b")).toDF("k", "v"), col("k"), 8)
     PoolJsonSink.upsertPartitioned(spark, dir,
       Seq((2L, "B"), (3L, "c")).toDF("k", "v"), col("k"), 8)
-    val now = spark.read.format("graft-spj").load(dir)
+    val now = spark.read.format("graft").load(dir)
       .select("k", "v").as[(Long, String)].collect().sortBy(_._1)
     assert(now.toSeq == Seq((1L, "a"), (2L, "B"), (3L, "c")))
-    val v1 = spark.read.format("graft-spj")
+    val v1 = spark.read.format("graft")
       .option("versionAsOf", "1").load(dir)
       .select("k", "v").as[(Long, String)].collect().sortBy(_._1)
     assert(v1.toSeq == Seq((1L, "a"), (2L, "b")))

@@ -114,4 +114,101 @@ class GraftTableSourceSpec extends AnyFunSuite {
       s"SELECT count(*) FROM graft_bloom WHERE k = '${digest(9999)}'")
       .head.getLong(0) == 0L)
   }
+
+  test("every format(\"graft\") read plans a DSv2 scan, never a V1 " +
+      "relation") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+    val dir = freshTable()
+    PoolJsonSink.upsertPartitioned(spark, dir,
+      Seq(("key1", 100L)).toDF("k", "v"), col("k"), nBuckets = 4)
+    Seq(("key1", 7L)).toDF("k", "v").write.format("graft")
+      .mode(SaveMode.Append).option("key", "k").option("branch", "side")
+      .save(dir)
+    def v1Nodes(p: LogicalPlan) = p.collect {
+      case r: LogicalRelation => r
+      case r: StreamingRelation => r
+    }
+    val reads = Seq(
+      "batch" -> Map.empty[String, String],
+      "versionAsOf" -> Map("versionAsOf" -> "1"),
+      "branch" -> Map("branch" -> "side"),
+      "history" -> Map("history" -> "true"),
+      "changesFrom" -> Map("changesFrom" -> "1"))
+    reads.foreach { case (face, opts) =>
+      val qe = spark.read.format("graft").options(opts).load(dir)
+        .queryExecution
+      assert(qe.optimizedPlan.collect {
+        case r: DataSourceV2ScanRelation => r
+      }.nonEmpty, s"$face: no DSv2 scan in\n${qe.optimizedPlan}")
+      assert(v1Nodes(qe.optimizedPlan).isEmpty, s"$face: V1 relation")
+    }
+    val plain = spark.read.format("graft").load(dir).where(col("v") > 3)
+    assert(plain.queryExecution.executedPlan.collect {
+      case b: BatchScanExec => b
+    }.size == 1)
+    assert(plain.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.DataSourceScanExec => s
+    }.isEmpty)
+    val stream = spark.readStream.format("graft")
+      .option("changeKey", "k").load(dir)
+    assert(stream.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.catalyst.streaming.StreamingRelationV2 => r
+    }.nonEmpty)
+    assert(v1Nodes(stream.queryExecution.analyzed).isEmpty)
+  }
+
+  test("a WHERE on a zone-mapped column plans fewer files than the " +
+      "table holds") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val dir = java.nio.file.Files.createTempDirectory("graft_src_files")
+      .resolve("table").toString
+    // three commits with disjoint seq ranges, each kept in its own
+    // files (no optimized write), so the zone maps separate them
+    (0 until 3).foreach { c =>
+      PoolJsonSink.upsertPartitioned(spark, dir,
+        (c * 100 until (c + 1) * 100).map(i => (s"k$i", i.toLong))
+          .toDF("k", "seq"),
+        col("k"), nBuckets = 2, statsCols = Seq("seq"),
+        optimizedWrite = false)
+    }
+    val total = PoolJsonSink.readManifest(dir).get.files.size
+    val df = spark.read.format("graft").load(dir)
+      .where(col("seq").between(10, 40))
+    val planned = df.queryExecution.executedPlan.collect {
+      case b: BatchScanExec => b.inputPartitions
+        .map(_.asInstanceOf[GraftBucketPartition].files.size).sum
+    }.sum
+    assert(planned > 0 && planned < total,
+      s"planned $planned of $total files")
+    assert(df.count() == 31)
+  }
+
+  test("versionAsOf takes a tag name") {
+    val dir = freshTable()
+    PoolJsonSink.setTag(dir, "before", 1L)
+    PoolJsonSink.upsertPartitioned(spark, dir,
+      Seq(("key1", 100L)).toDF("k", "v"), col("k"), nBuckets = 4)
+    val tagged = spark.read.format("graft")
+      .option("versionAsOf", "before").load(dir)
+    assert(tagged.where(col("k") === "key1").head.getAs[Long]("v") == 1L)
+    assert(spark.read.format("graft").load(dir)
+      .where(col("k") === "key1").head.getAs[Long]("v") == 100L)
+  }
+
+  test("readStream without changeKey fails and names changeKey") {
+    import org.apache.spark.sql.streaming.Trigger
+    val dir = freshTable()
+    val e = intercept[Exception] {
+      val q = spark.readStream.format("graft").load(dir)
+        .writeStream.format("memory").queryName("graft_keyless_stream")
+        .trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    assert(messages.contains("changeKey"), messages)
+  }
 }
