@@ -14,71 +14,24 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Process-scoped memo of INFERRED SCHEMAS (metadata only — every
-    * query still scans the parquet data on every run; nothing about
-    * results is cached). Schema inference on construction costs
-    * ~70–90 ms per `spark.read.parquet` call on this box vs ~7 ms
-    * with a supplied schema (ReadOverheadProbe), and the catalog
-    * constructs its input relations hundreds of times per run — at
-    * 100 TB the equivalent is a metastore-declared schema instead of
-    * per-query footer inference. Keyed on the same recursive
-    * (file count, total bytes, max mtime) fingerprint as
-    * LshCensus.fileKey, so a regenerated table re-infers instead of
-    * serving a stale schema.
-    */
-  // keyed by PATH, storing (fingerprint, schema): a regenerated table
-  // REPLACES its entry instead of accumulating one per fingerprint
-  // (round-12 advice — the old map grew unboundedly in long-lived
-  // processes like the shared test-harness JVM)
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType)]()
-
-  /** Per-file (path, length, mtime) hashes XOR-folded (order-free):
-    * unlike the round-12 sum-of-totals form, a rewrite that offsets
-    * bytes across files, or swaps two files' contents within mtime
-    * granularity, still changes the fingerprint (round-12 advice).
-    */
-  private def fingerprint(path: String): String = {
-    def fileHash(f: java.io.File): Long = {
-      val h = scala.util.hashing.MurmurHash3.stringHash(
-        s"${f.getPath}:${f.length}:${f.lastModified}")
-      (h.toLong << 32) | (scala.util.hashing.MurmurHash3
-        .stringHash(s"${f.lastModified}:${f.length}:${f.getPath}").toLong
-        & 0xffffffffL)
-    }
-    def walk(f: java.io.File): (Long, Long) =
-      if (f.isDirectory) {
-        val kids = Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-        kids.foldLeft((0L, 0L)) { case ((c, x), k) =>
-          val (kc, kx) = walk(k)
-          (c + kc, x ^ kx)
-        }
-      } else (1L, fileHash(f))
-    val (c, x) = walk(new java.io.File(path))
-    s"$c:$x"
-  }
-
-  /** The memoized inferred schema of `$dir/$name.parquet`. The events
-    * table's inferred schema depends on
-    * `spark.sql.legacy.parquet.nanosAsLong` (LONG vs TIMESTAMP for a
-    * TIMESTAMP(NANOS) column), so the conf is enforced HERE, not by
-    * caller convention (round-12 advice): a future direct
-    * `load(spark, dir, "events")` from a conf-less session can
-    * neither poison the cache nor read with a schema/conf mismatch.
+  /** The inferred schema of `$dir/$name.parquet`, held in the
+    * [[graft.util.Artifacts]] memo under the table's content
+    * fingerprint: a rewritten table re-infers, an unchanged one never
+    * does. Metadata only — every query still scans the data. Footer
+    * inference costs about ten times a supplied-schema read per
+    * `spark.read.parquet`, and the catalog constructs its input
+    * relations hundreds of times per run. The events table's inferred
+    * schema depends on `spark.sql.legacy.parquet.nanosAsLong` (LONG vs
+    * TIMESTAMP for a TIMESTAMP(NANOS) column), so the conf is set
+    * here, not by caller convention.
     */
   def schemaOf(spark: SparkSession, dir: String, name: String)
       : org.apache.spark.sql.types.StructType = {
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/$name.parquet"
-    val fp = fingerprint(path)
-    val cur = schemaCache.get(path)
-    if (cur != null && cur._1 == fp) cur._2
-    else {
-      val sch = spark.read.parquet(path).schema
-      schemaCache.put(path, (fp, sch))
-      sch
-    }
+    graft.util.Artifacts.memo("schema", graft.util.Artifacts.key(Seq(path)))(
+      spark.read.parquet(path).schema)
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =

@@ -15,19 +15,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * corpus) and the pure-SQL face `<catalog>.system.advisories`
   * ([[graft.sources]]). On healthy default-dial testdata r26 is
   * deterministically EMPTY — computed emptiness, not vacuous: the
-  * query re-runs all five census checks (sidecar-cached, so the
+  * query re-runs all five census checks (each an artifact, so the
   * steady-state cost is five file reads) — which is what the DuckDB
   * oracle pins. FamilyRecallAdvisorySpec pins the non-empty side on
   * saturated fixtures.
   *
   * The registry is DURABLE: fired advisories also append to a
-  * tmpdir log (the sidecar convention) carrying the firing-time
-  * corpus FINGERPRINT, and a fresh process lazily reloads them —
+  * tmpdir log carrying the firing-time corpus FINGERPRINT
+  * ([[graft.util.Artifacts.fingerprint]]), and a fresh process
+  * lazily reloads them —
   * which matters for the families r26 cannot re-derive (index
   * staleness needs the delta batch that fired it; a maintenance run
   * in one process, an operator's SELECT in another). Staleness of
-  * the persisted rows themselves is handled the way every sidecar
-  * here handles it: an entry is served only while its stored
+  * the persisted rows themselves is handled the way the artifact
+  * store handles it: an entry is served only while its stored
   * fingerprint still matches the corpus's CURRENT table fingerprint
   * — regenerate the corpus and the old advisory vanishes instead of
   * lying.
@@ -107,17 +108,17 @@ object Advisories {
   /** An entry is CURRENT iff its firing-time fingerprint still
     * matches one of the corpus's table fingerprints (documents for
     * the text families, embeddings for the vector families) — the
-    * sidecar invalidation rule applied to the advisory itself. Live
-    * fires (empty fp, or fp matching) always serve; a regenerated
-    * corpus silently retires the stale rows.
+    * artifact store's invalidation rule applied to the advisory
+    * itself. Live fires (empty fp, or fp matching) always serve; a
+    * regenerated corpus silently retires the stale rows.
     */
   private def current(a: Advisory): Boolean =
     a.fp.isEmpty || {
       val now = Seq(
-        scala.util.Try(LshCensus.fileKey(a.corpus, "documents.parquet"))
-          .getOrElse(""),
-        scala.util.Try(LshCensus.fileKey(a.corpus, "embeddings.parquet"))
-          .getOrElse(""))
+        scala.util.Try(graft.util.Artifacts
+          .fingerprint(s"${a.corpus}/documents.parquet")).getOrElse(""),
+        scala.util.Try(graft.util.Artifacts
+          .fingerprint(s"${a.corpus}/embeddings.parquet")).getOrElse(""))
       now.contains(a.fp)
     }
 
@@ -127,8 +128,8 @@ object Advisories {
     * so replays stay deterministic). Called on EVERY evaluation whose
     * condition holds, not just the one that wins the log-once race.
     * `fingerprint` is the firing family's current table fingerprint
-    * (documents/embeddings via [[LshCensus.fileKey]]) — the durable
-    * row serves only while it still matches.
+    * (documents or embeddings) — the durable row serves only while it
+    * still matches.
     */
   def record(
       family: String, corpus: String, signal: Double,
@@ -172,7 +173,7 @@ object Advisories {
   }
 
   /** Evaluate the corpus's census-based advisory families now (each
-    * is sidecar-cached and advisory-only — a failure skips its
+    * is an artifact and advisory-only — a failure skips its
     * family, never this query), then relate everything recorded.
     */
   private[graft] def evaluateAndList(
@@ -188,10 +189,9 @@ object Advisories {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // R26 — SHOW ADVISORIES as a relation: the round-11 census
     // instrumentation, readable by an orchestrator instead of grep
-    // over executor logs. Scale shape: five sidecar reads plus a
+    // over executor logs. Scale shape: five artifact reads plus a
     // local relation of at-most-|families| rows — no corpus scan on
-    // the steady path (each census computes once per corpus and
-    // persists fingerprint-keyed).
+    // the steady path (each census computes once per corpus content).
     "r26_advisories" -> ((s, d) => {
       import s.implicits._
       evaluateAndList(s, d)

@@ -23,6 +23,7 @@ import org.apache.spark.sql.functions._
   */
 object DedupQueries {
   import graft.Tables.documents
+  import graft.util.Artifacts
   import Hashing._
 
   private val K = 16 // permutations
@@ -276,16 +277,13 @@ object DedupQueries {
   }
 
   /** Memoized corpus row count — one count-only parquet scan per
-    * (corpus, process), the input [[bandedPartitions]] sizes from.
-    * Keyed on the corpus fingerprint so a regenerated corpus never
-    * serves a stale count (the sidecar convention, minus the sidecar:
-    * a count is cheaper to recompute than to round-trip).
+    * (corpus content, process), the input [[bandedPartitions]] sizes
+    * from. In-process only: a count is cheaper to recompute than to
+    * round-trip through a file.
     */
-  private val docCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private[graft] def docCount(s: SparkSession, d: String): Long =
-    docCountCache.computeIfAbsent(docsKey(d),
-      _ => java.lang.Long.valueOf(documents(s, d).count()))
+    Artifacts.memo("doc_count", Artifacts.key(Seq(docsPath(d))))(
+      documents(s, d).count())
 
   /** Partitions-scale-with-data, IN the engine (round-11 verdict item
     * 1). The banded relation's exchanges — band explode → cap
@@ -359,13 +357,10 @@ object DedupQueries {
     * the shingle-side exchange sizing works from, the way docCount
     * feeds the banded side.
     */
-  private val charCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private[graft] def charCount(s: SparkSession, d: String): Long =
-    charCountCache.computeIfAbsent(docsKey(d), _ =>
-      java.lang.Long.valueOf(
-        documents(s, d)
-          .agg(coalesce(sum(col("n_chars")), lit(0L))).head.getLong(0)))
+    Artifacts.memo("char_count", Artifacts.key(Seq(docsPath(d))))(
+      documents(s, d)
+        .agg(coalesce(sum(col("n_chars")), lit(0L))).head.getLong(0))
 
   /** The banded-exchange discipline applied to the exploded SHINGLE
     * relations — d10's cross-source self-join and d4/d13's
@@ -433,12 +428,11 @@ object DedupQueries {
 
   /** Source-block occupancy census at the default cap — [[LshCensus]]
     * with the SOURCE as the bucket: one tiny aggregate (|sources|
-    * rows), sidecar-cached like every census.
+    * rows), cached like every census.
     */
   private[graft] def blockOccupancy(
       s: SparkSession, d: String): LshCensus.Occupancy =
-    LshCensus.occupancy(
-      s"block_${docsKey(d)}_cap${BlockCap}_v1",
+    LshCensus.occupancy("occ_block_v1", docsPath(d),
       BlockCap, PairBudgetPerRow)(
       documents(s, d).select(col("source").as("bucket")))
 
@@ -464,7 +458,7 @@ object DedupQueries {
           s"graft.dedup.block_cap=${occ.capRec} (linear pair envelope)"
         else "no in-envelope cap admits the wide sources; use the " +
           "capped-LSH chain (d7 -> d8/d15)",
-        fingerprint = docsKey(d))
+        fingerprint = Artifacts.fingerprint(docsPath(d)))
     }
     if (fire && blockCapWarned.add(d)) {
       val occ = blockOccupancy(s, d)
@@ -1022,9 +1016,9 @@ object DedupQueries {
     // filter into the join condition and the DP runs per RAW pair.
     "d16_dedup_recall" -> ((s, d) => {
       // truth = a pure function of (corpus, probe budget), mined once
-      // and sidecar-persisted (round-11 verdict item 6) — repeat
-      // bench/CI runs load a few hundred id pairs instead of
-      // re-running the banded-DP sweep; see [[d16Truth]]
+      // into an artifact — repeat bench/CI runs load a few hundred id
+      // pairs instead of re-running the banded-DP sweep; see
+      // [[d16Truth]]
       import s.implicits._
       val truth = d16Truth(s, d).toDF("doc_a", "doc_b")
       val found = d15Scored(s, d)
@@ -1078,55 +1072,26 @@ object DedupQueries {
       .dropDuplicates("doc_a", "doc_b")
   }
 
-  /** d16's truth-set sidecar (round-11 verdict item 6): the truth
-    * pair set is IMMUTABLE given (corpus fingerprint, probe budget) —
-    * it depends on no session dial (the approximate side does; truth
-    * is the unblocked exact sweep) — so it persists fingerprint-keyed
-    * in tmpdir like lshOccupancy, and repeat bench/CI runs read a
-    * probe-budget-bounded pair list (≤400 probes × their length-band
-    * mates) instead of re-mining. The collect, the sidecar, and the
-    * local relation it reloads into are all statistic-sized; the
-    * mining itself stays fully distributed on the cold run. Pairs
-    * sort before publish so the sidecar bytes are deterministic.
+  /** d16's truth set: a pure function of (corpus, probe budget) — it
+    * depends on no session dial (the approximate side does; truth is
+    * the unblocked exact sweep) — so it is a text artifact, and repeat
+    * bench/CI runs read a probe-budget-bounded pair list (≤400 probes
+    * × their length-band mates) instead of re-mining. The collect and
+    * the local relation it reloads into are statistic-sized; the
+    * mining itself stays distributed on the cold run. Pairs are
+    * sorted, so the artifact bytes are deterministic.
     */
-  private val d16TruthCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Long)]]()
   private[graft] def d16Truth(
       s: SparkSession, d: String): Seq[(Long, Long)] =
-    d16TruthCache.computeIfAbsent(
-      s"d16truth_${docsKey(d)}_b${D16ProbeBudget}_v1", key => {
-        val f = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_$key.txt")
-        val loaded: Option[Seq[(Long, Long)]] =
-          if (!f.isFile) None
-          else {
-            val src = scala.io.Source.fromFile(f, "UTF-8")
-            try Some(src.getLines().filter(_.nonEmpty).map { l =>
-              val a = l.trim.split(' ')
-              (a(0).toLong, a(1).toLong)
-            }.toVector)
-            finally src.close()
-          }
-        loaded.getOrElse {
-          val pairs = d16MinedTruth(s, d).collect()
-            .map(r => (r.getLong(0), r.getLong(1))).toVector.sorted
-          val lines = pairs
-            .map { case (a, b) => s"$a $b" }.mkString("", "\n", "\n")
-          val tmp = java.io.File.createTempFile(
-            f.getName, ".tmp", f.getParentFile)
-          java.nio.file.Files.write(tmp.toPath,
-            lines.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          // pure function of the corpus: a lost publish race reads
-          // the same content either way (the LshCensus convention)
-          if (!tmp.renameTo(f)) {
-            if (!f.isFile)
-              java.nio.file.Files.move(tmp.toPath, f.toPath,
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            else tmp.delete()
-          }
-          pairs
-        }
-      })
+    Artifacts.text("d16truth_v1",
+        Artifacts.key(Seq(docsPath(d)), D16ProbeBudget)) {
+      d16MinedTruth(s, d).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toVector.sorted
+        .map { case (a, b) => s"$a $b\n" }.mkString
+    }.split('\n').toVector.filter(_.nonEmpty).map { l =>
+      val a = l.split(' ')
+      (a(0).toLong, a(1).toLong)
+    }
 
   /** One d15 evaluation per (app, corpus, dials) — round-10 verdict
     * item 5: d16 replays the full production chain as its approximate
@@ -1139,10 +1104,8 @@ object DedupQueries {
     * its context, and every dial the chain reads, so a dialed session
     * never serves a default-dial cache (the pqBaseErr lesson).
     */
-  private val d15Cache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def d15Scored(s: SparkSession, d: String): DataFrame =
-    d15Cache.computeIfAbsent(
+    Artifacts.memo("d15_scored", Artifacts.key(Seq(docsPath(d)),
       // the dial list comes from chainDials — the one place a chain
       // dial is declared — so a dial can never be added to the chain
       // without also keying this memo (ADVICE round 11).
@@ -1150,8 +1113,7 @@ object DedupQueries {
       // pins value-equality across it) but it keys the cache anyway so
       // the spec's dialed run exercises the real bloom path instead of
       // reading the default-dial memo
-      s"${s.sparkContext.applicationId}:${docsKey(d)}:${chainDialKey(s)}",
-      _ => {
+      s.sparkContext.applicationId, chainDialKey(s))) {
       // same two structural moves as d8: the candidates materialize
       // ONCE (three consumers would otherwise re-inline the whole d7
       // subplan), and the candidate-id set BROADCASTS into the semi
@@ -1188,7 +1150,7 @@ object DedupQueries {
             .as("sim"),
           (col("lev") >= 0).as("is_dup"))
         .localCheckpoint()
-    })
+    }
 
   /** d10's source-axis cap: shingles in more sources than this are
     * boilerplate, not contamination — and each would emit C(n,2) pair
@@ -1253,11 +1215,8 @@ object DedupQueries {
     */
   private[graft] val DedupShedWarnFraction = 0.10
 
-  /** Corpus fingerprint for occupancy/truth sidecars (the KMeans
-    * registry's (path, mtime, size) convention on documents.parquet —
-    * a regenerated corpus can never serve stale stats). */
-  private def docsKey(d: String): String =
-    LshCensus.fileKey(d, "documents.parquet")
+  /** The documents table: the input every d-family artifact keys on. */
+  private def docsPath(d: String): String = s"$d/documents.parquet"
 
   /** The d-family's band-bucket occupancy census — the measured basis
     * for the dedup recall advisory and the COMPUTED cap re-dial
@@ -1267,16 +1226,12 @@ object DedupQueries {
     * means the shed mass sits in buckets too wide to admit at linear
     * cost — near-identical boilerplate — where the production answer
     * is an exact-dedup pre-pass (d1) or re-banding, not a bigger cap;
-    * the advisory message carries both branches).
-    *
-    * Sidecar v2: capRec moved from the rows-mass rule to the linear
-    * pair envelope — the version suffix retires sidecars computed
-    * under the old formula.
+    * the advisory message carries both branches). capRec follows the
+    * linear pair envelope (format v2).
     */
   private[graft] def lshOccupancy(
       s: SparkSession, d: String): LshCensus.Occupancy =
-    LshCensus.occupancy(
-      s"dedup_${docsKey(d)}_cap${BucketCap}_v2",
+    LshCensus.occupancy("occ_dedup_v2", docsPath(d),
       BucketCap, PairBudgetPerRow)(
       // census of the DEFAULT-dial regime by construction (the
       // advisory only fires un-dialed; a dialed session's census
@@ -1324,7 +1279,7 @@ object DedupQueries {
               "envelope)"
           else "; or a d1 exact pre-pass (shed mass is boilerplate " +
             "wider than the envelope admits)"),
-        fingerprint = docsKey(d))
+        fingerprint = Artifacts.fingerprint(docsPath(d)))
     }
     if (fire && dedupRecallWarned.add(d)) {
       val occ = lshOccupancy(s, d)

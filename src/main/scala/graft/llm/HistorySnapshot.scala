@@ -25,15 +25,16 @@ import graft.pol.PoolJsonSink
   * (correctness always survives via the exact join; the perf contract
   * is what sizing protects).
   *
-  * Maintenance-window model: [[forCorpus]] builds once per corpus dir
-  * and is a cheap read thereafter (the READY marker is the window
-  * gate); a production deployment re-runs the build per window — or
-  * folds the window's newly-accepted digests in incrementally via
-  * [[appendDigests]], which is an idempotent keyed upsert. Per-batch
-  * ingest cost against the snapshot is O(batch + touched buckets):
-  * the batch's digests hash to a bounded bucket set, only those
-  * bucket files are read, and the sketch rejects provably-new docs
-  * before any join at all.
+  * Maintenance-window model: [[forCorpus]] builds the snapshot once
+  * per corpus content — a directory artifact ([[graft.util.Artifacts]])
+  * keyed by the documents table's fingerprint — and is a cheap read
+  * thereafter; a rewritten corpus names a new snapshot. Between
+  * rebuilds a deployment folds the window's newly-accepted digests in
+  * via [[appendDigests]], an idempotent keyed upsert through the
+  * manifest CAS. Per-batch ingest cost against the snapshot is
+  * O(batch + touched buckets): the batch's digests hash to a bounded
+  * bucket set, only those bucket files are read, and the sketch
+  * rejects provably-new docs before any join at all.
   */
 object HistorySnapshot {
 
@@ -67,8 +68,8 @@ object HistorySnapshot {
     * wrong at BOTH ends — 64 buckets over 4k digests is 64 tiny
     * files of open-cost overhead, 64 buckets over 1e10 digests makes
     * "touched buckets" a synonym for "the whole table". The chosen
-    * count is pinned per table (stored beside the marker); a window
-    * rebuild re-sizes it as the history grows.
+    * count is pinned per table (stored beside it); a window rebuild
+    * re-sizes it as the history grows.
     */
   private[llm] def bucketsFor(nDigests: Long): Int = {
     val want = nDigests / 65536L
@@ -111,17 +112,13 @@ object HistorySnapshot {
   private[llm] def sketchItems(nDigests: Long): Long =
     math.max(2L * nDigests, 1024L)
 
-  /** Resolve (building if this corpus has no snapshot yet) the
-    * history digest snapshot for corpus directory `d`.
+  /** Resolve (building if this corpus content has no snapshot yet)
+    * the history digest snapshot for corpus directory `d`.
     */
   def forCorpus(s: SparkSession, d: String): Snapshot = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(12)
-    val root = new File(sys.props("java.io.tmpdir"), s"graft_hist_snap_$key")
-    val tableDir = new File(root, "digests").toString
-    val ready = new File(root, "_SNAPSHOT_READY")
-    if (!ready.exists()) {
-      root.mkdirs()
+    val root = graft.util.Artifacts.dir("hist_snap",
+        graft.util.Artifacts.key(Seq(s"$d/documents.parquet"))) { staging =>
+      val tableDir = new File(staging, "digests").toString
       val history = graft.Tables.documents(s, d)
         .withColumn("bucket", splitBucketExpr)
         .where(col("bucket") < 90)
@@ -135,18 +132,14 @@ object HistorySnapshot {
       PoolJsonSink.upsertPartitioned(s, tableDir, history, col("digest"),
         nBuckets = nBuckets)
       // sketch from the COMMITTED table, sized by the measured count
-      val sketch =
-        if (n == 0) None
-        else Option(PoolJsonSink.readTable(s, tableDir)
-          .agg(graft.functions.BloomSketch
-            .build(col("bk"), sketchItems(n)).as("bf"))
-          .head.getAs[Array[Byte]]("bf"))
-      Files.write(new File(root, "count").toPath,
+      if (n > 0)
+        Files.write(new File(staging, "sketch").toPath,
+          PoolJsonSink.readTable(s, tableDir)
+            .agg(graft.functions.BloomSketch
+              .build(col("bk"), sketchItems(n)).as("bf"))
+            .head.getAs[Array[Byte]]("bf"))
+      Files.write(new File(staging, "count").toPath,
         s"$n $nBuckets".getBytes(StandardCharsets.UTF_8))
-      sketch.foreach(bf =>
-        Files.write(new File(root, "sketch").toPath, bf))
-      ready.createNewFile()
-      ()
     }
     val counts = new String(
       Files.readAllBytes(new File(root, "count").toPath),
@@ -155,7 +148,8 @@ object HistorySnapshot {
     val sketch =
       if (sketchFile.isFile) Some(Files.readAllBytes(sketchFile.toPath))
       else None
-    Snapshot(tableDir, sketch, counts(0).toLong, counts(1).toInt)
+    Snapshot(new File(root, "digests").toString, sketch,
+      counts(0).toLong, counts(1).toInt)
   }
 
   /** Fold a window's newly-accepted digests into the snapshot table —

@@ -131,33 +131,11 @@ object KMeans {
       .withColumn("ee", graft.functions.DotProduct(col("e"), col("e")))
       .localCheckpoint()
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Model]()
-
-  /** Corpus cache key: the embeddings table's recursive fingerprint
-    * (via [[LshCensus.fileKey]] — file count, total bytes, max mtime
-    * over the table path), so a REGENERATED corpus (the round-5
-    * testdata migration made this a real event) — including an
-    * in-place part-file rewrite of a DIRECTORY table, which the old
-    * single-file (mtime, length) pair missed — can never serve a
-    * stale trained model or index.
+  /** The registry's text format: `rounds R`, then one `cid c0 c1 …`
+    * line per centroid. Double.toString/parseDouble round-trip
+    * exactly, so a loaded model is bit-identical to the trained one.
     */
-  private[llm] def corpusKey(d: String): String =
-    LshCensus.fileKey(d, "embeddings.parquet")
-
-  /** The model REGISTRY: trained models persist as bit-exact text
-    * (Double.toString/parseDouble round-trips exactly in Java) keyed
-    * by corpus fingerprint, so a fresh process SERVING the index
-    * loads the model instead of retraining it — at 400k vectors
-    * training is minutes, loading is milliseconds, and a production
-    * query path must never pay the former. Write is tmp+rename
-    * (atomic publish; a crashed writer leaves no partial file).
-    */
-  private[llm] def modelFile(name: String, d: String): java.io.File =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_model_${name}_${corpusKey(d)}.txt")
-
-  private[llm] def saveModel(m: Model, f: java.io.File): Unit = {
+  private[llm] def modelText(m: Model): String = {
     val sb = new StringBuilder
     sb.append(s"rounds ${m.rounds}\n")
     m.centroids.foreach { case (cid, c) =>
@@ -165,36 +143,43 @@ object KMeans {
         .append(c.map(java.lang.Double.toString).mkString(" "))
         .append('\n')
     }
-    val tmp = java.io.File.createTempFile(
-      f.getName, ".tmp", f.getParentFile)
-    java.nio.file.Files.write(
-      tmp.toPath, sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    tmp.renameTo(f); ()
+    sb.toString
   }
+
+  private[llm] def parseModel(text: String): Model = {
+    val lines = text.split('\n').toSeq
+    val rounds = lines.head.stripPrefix("rounds ").trim.toInt
+    val cents = lines.tail.filter(_.nonEmpty).map { l =>
+      val parts = l.split(' ')
+      parts.head.toLong -> parts.tail.map(java.lang.Double.parseDouble)
+    }
+    Model(cents, rounds)
+  }
+
+  private[llm] def saveModel(m: Model, f: java.io.File): Unit =
+    java.nio.file.Files.write(f.toPath,
+      modelText(m).getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   private[llm] def loadModel(f: java.io.File): Option[Model] =
     if (!f.isFile) None
-    else {
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try {
-        val lines = src.getLines().toSeq
-        val rounds = lines.head.stripPrefix("rounds ").trim.toInt
-        val cents = lines.tail.filter(_.nonEmpty).map { l =>
-          val parts = l.split(' ')
-          parts.head.toLong ->
-            parts.tail.map(java.lang.Double.parseDouble)
-        }
-        Some(Model(cents, rounds))
-      } finally src.close()
-    }
+    else Some(parseModel(new String(java.nio.file.Files.readAllBytes(
+      f.toPath), java.nio.charset.StandardCharsets.UTF_8)))
 
+  /** The model artifact's kind; its key is the embeddings table's
+    * fingerprint.
+    */
+  private[llm] val ModelKind = "model_kmeans"
+
+  /** The trained model for corpus `d`, from the model registry: a text
+    * artifact ([[graft.util.Artifacts]]) keyed by the content of
+    * `embeddings.parquet`, so a fresh process serving the index loads
+    * the model (milliseconds) instead of retraining it (minutes at
+    * 400k vectors), and changed embeddings always retrain.
+    */
   def fit(s: SparkSession, d: String): Model =
-    cache.computeIfAbsent(d, _ => {
-      val f = modelFile("kmeans", d)
-      loadModel(f).getOrElse {
-        val m = fitImpl(s, d); saveModel(m, f); m
-      }
-    })
+    parseModel(graft.util.Artifacts.text(ModelKind,
+      graft.util.Artifacts.key(Seq(s"$d/embeddings.parquet")))(
+      modelText(fitImpl(s, d))))
 
   private def fitImpl(s: SparkSession, d: String): Model =
     fitOn(corpus(s, d), K)

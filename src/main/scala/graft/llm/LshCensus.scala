@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   * rows-mass rule recall-correct but cost-blind: 66× the pairs for
   * the last 9 recall points on the saturated 4M corpus).
   *
-  * Results persist as fingerprint-keyed sidecars in tmpdir (atomic
-  * tmp+rename, the clusterShapeStats convention) so a serving process
-  * reads six numbers, never the corpus.
+  * Each census is a text artifact ([[graft.util.Artifacts]]) keyed by
+  * the input table's fingerprint, the cap and the pair budget, so a
+  * serving process reads six numbers, never the corpus.
   */
 object LshCensus {
 
@@ -32,97 +32,42 @@ object LshCensus {
       if (totalRows == 0) 0.0 else sheddedRows.toDouble / totalRows
   }
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Occupancy]()
-
-  /** Corpus fingerprint for sidecar keys. A production parquet table
-    * is a DIRECTORY of part files — `File.length()` on a directory is
-    * filesystem noise and its mtime only moves when a direct child is
-    * added/removed, so the round-11 single-file fingerprint
-    * (mtime+length of `$d/$table`) could serve a STALE census sidecar
-    * after an in-place part-file rewrite (round-11 verdict item 4 —
-    * the exact regime the census exists to prevent). The fingerprint
-    * is now recursive over the table path: (file count, total bytes,
-    * max mtime) across every regular file under it — any member-file
-    * change (append, rewrite, regeneration) re-keys every sidecar.
-    * Single testdata files degrade to the old (mtime, length) pair.
-    */
-  private[llm] def fileKey(d: String, table: String): String = {
-    def walk(f: java.io.File): (Long, Long, Long) =
-      if (f.isDirectory) {
-        val kids = Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-        kids.foldLeft((0L, 0L, 0L)) { case ((c, b, m), k) =>
-          val (kc, kb, km) = walk(k)
-          (c + kc, b + kb, math.max(m, km))
-        }
-      } else (1L, f.length, f.lastModified)
-    val (count, bytes, mtime) = walk(new java.io.File(s"$d/$table"))
-    val fp = s"$d:$table:$count:$bytes:$mtime"
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(fp.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(12)
-  }
-
-  /** Census for one (family, corpus, default-cap) regime. `sidecar`
-    * names the cached result and must carry the corpus fingerprint
-    * and every input the histogram depends on (cap, banding version);
-    * `bucketRel` (evaluated only on cache+sidecar miss) is the
+  /** Census for one (family, default-cap) regime over `input`.
+    * `kind` names the family and its banding version; `bucketRel`
+    * (evaluated only when the artifact is not yet built) is the
     * family's banded relation — one row per (row, bucket), a single
     * `bucket` column.
     */
   def occupancy(
-      sidecar: String, cap: Long, pairBudgetPerRow: Long)(
-      bucketRel: => DataFrame): Occupancy =
-    cache.computeIfAbsent(sidecar, _ => {
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_occ_$sidecar.txt")
-      val loaded: Option[Occupancy] =
-        if (!f.isFile) None
-        else {
-          val src = scala.io.Source.fromFile(f, "UTF-8")
-          try src.getLines().find(_.nonEmpty).map { l =>
-            val a = l.trim.split(' ').map(_.toLong)
-            Occupancy(a(0), a(1), a(2), a(3), a(4), a(5))
-          } finally src.close()
-        }
-      loaded.getOrElse {
-        val hist = bucketRel
-          .groupBy("bucket").agg(count(lit(1)).as("w"))
-          .groupBy("w").agg(count(lit(1)).as("nb"))
-          .collect() // |distinct widths| rows — a statistic, not data
-          .map(r => (r.getLong(0), r.getLong(1)))
-          .sortBy(_._1)
-        val total = hist.map { case (w, nb) => w * nb }.sum
-        val shed = hist.collect {
-          case (w, nb) if w > cap => w * nb
-        }.sum
-        // largest cap whose cumulative kept-bucket pair count stays
-        // inside the linear envelope (histogram ascends by width, so
-        // the cumulative pair sum is monotone)
-        val budget = pairBudgetPerRow * total
-        var cumPairs = 0L
-        var capRec = cap
-        hist.foreach { case (w, nb) =>
-          cumPairs += w * (w - 1) / 2 * nb
-          if (cumPairs <= budget && w > capRec) capRec = w
-        }
-        val occ = Occupancy(total, shed, hist.map(_._2).sum,
-          hist.collect { case (w, nb) if w > cap => nb }.sum,
-          if (hist.isEmpty) 0L else hist.map(_._1).max, capRec)
-        val line = s"${occ.totalRows} ${occ.sheddedRows} " +
-          s"${occ.nBuckets} ${occ.nOverCap} ${occ.maxWidth} ${occ.capRec}\n"
-        val tmp = java.io.File.createTempFile(
-          f.getName, ".tmp", f.getParentFile)
-        java.nio.file.Files.write(tmp.toPath,
-          line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        // pure function of the corpus: a lost publish race reads the
-        // same content either way; delete tmp when the winner stands
-        if (!tmp.renameTo(f)) {
-          if (!f.isFile)
-            java.nio.file.Files.move(tmp.toPath, f.toPath,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          else tmp.delete()
-        }
-        occ
+      kind: String, input: String, cap: Long, pairBudgetPerRow: Long)(
+      bucketRel: => DataFrame): Occupancy = {
+    val a = graft.util.Artifacts.text(kind,
+        graft.util.Artifacts.key(Seq(input), cap, pairBudgetPerRow)) {
+      val hist = bucketRel
+        .groupBy("bucket").agg(count(lit(1)).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("nb"))
+        .collect() // |distinct widths| rows — a statistic, not data
+        .map(r => (r.getLong(0), r.getLong(1)))
+        .sortBy(_._1)
+      val total = hist.map { case (w, nb) => w * nb }.sum
+      val shed = hist.collect {
+        case (w, nb) if w > cap => w * nb
+      }.sum
+      // largest cap whose cumulative kept-bucket pair count stays
+      // inside the linear envelope (histogram ascends by width, so
+      // the cumulative pair sum is monotone)
+      val budget = pairBudgetPerRow * total
+      var cumPairs = 0L
+      var capRec = cap
+      hist.foreach { case (w, nb) =>
+        cumPairs += w * (w - 1) / 2 * nb
+        if (cumPairs <= budget && w > capRec) capRec = w
       }
-    })
+      Seq(total, shed, hist.map(_._2).sum,
+        hist.collect { case (w, nb) if w > cap => nb }.sum,
+        if (hist.isEmpty) 0L else hist.map(_._1).max, capRec)
+        .mkString("", " ", "\n")
+    }.trim.split(' ').map(_.toLong)
+    Occupancy(a(0), a(1), a(2), a(3), a(4), a(5))
+  }
 }

@@ -343,8 +343,7 @@ object MultimodalQueries {
     */
   private[graft] def phashOccupancy(
       s: SparkSession, d: String): LshCensus.Occupancy =
-    LshCensus.occupancy(
-      s"phash_${LshCensus.fileKey(d, "documents.parquet")}_cap16_b4_v1",
+    LshCensus.occupancy("occ_phash_b4_v1", s"$d/documents.parquet",
       16L, DedupQueries.PairBudgetPerRow)(
       phashBandRel(s, d, 4).select("bucket"))
 
@@ -369,7 +368,8 @@ object MultimodalQueries {
           s"graft.phash.bucket_cap=${occ.capRec} (linear pair envelope)"
         else "exact dedup pre-pass (m4/d1) first") +
           "; or graft.phash.bands=2",
-        fingerprint = LshCensus.fileKey(d, "documents.parquet"))
+        fingerprint =
+          graft.util.Artifacts.fingerprint(s"$d/documents.parquet"))
     }
     if (fire && phashRecallWarned.add(d)) {
       val occ = phashOccupancy(s, d)

@@ -67,9 +67,6 @@ object PQ {
 
   case class Codebooks(books: Seq[KMeans.Model])
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Codebooks]()
-
   /** The j-th subspace slice as a Column over an `e` vector. */
   def subVec(e: org.apache.spark.sql.Column, j: Int) =
     slice(e, j * SubDim + 1, SubDim)
@@ -101,42 +98,37 @@ object PQ {
       cid: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     zip_with(e, centroidFor(coarse, cid), (a, b) => a - b)
 
-  def fit(s: SparkSession, d: String): Codebooks =
-    cache.computeIfAbsent(s"$d#k=${kFor(s)}", _ => {
-      // the KMeans model-registry contract applied per subspace:
-      // serving processes load the trained codebooks from disk
-      // instead of re-running M Lloyd chains. 'pqres' names: the
-      // residual-encoding change invalidated every absolute-
-      // coordinate codebook, so the registry key moved with it.
-      val k = kFor(s)
-      val files = (0 until M).map(j =>
-        KMeans.modelFile(s"pqres${k}_$j", d))
-      val loaded = files.map(KMeans.loadModel)
-      if (loaded.forall(_.isDefined)) Codebooks(loaded.map(_.get))
-      else {
-        val coarse = KMeans.fit(s, d)
-        val base = graft.Tables.embeddings(s, d)
-          .select(col("vec_id"),
-            col("embedding").cast("array<double>").as("full"))
-          .withColumn("__ee",
-            graft.functions.DotProduct(col("full"), col("full")))
-        val t = base
-          .withColumn("__cid", KMeans.assignColOn(coarse.centroids,
-            col("full"), col("__ee")).getField("cid"))
-          .select(col("vec_id"),
-            residualCol(coarse, col("full"), col("__cid")).as("full"))
-          .localCheckpoint()
-        val books = (0 until M).map { j =>
-          val ej = subVec(col("full"), j)
-          val m = KMeans.fitOn(
-            t.select(col("vec_id"), ej.as("e"),
-              graft.functions.DotProduct(ej, ej).as("ee")), k)
-          KMeans.saveModel(m, files(j))
-          m
-        }
-        Codebooks(books)
-      }
-    })
+  /** The M residual codebooks for corpus `d` at this session's K: one
+    * text artifact (the M models in [[KMeans]]'s registry format, a
+    * blank line apart) keyed by the embeddings table's fingerprint and
+    * K, so serving processes load the codebooks instead of re-running
+    * M Lloyd chains. The kind's `pqres` name marks residual encoding.
+    */
+  def fit(s: SparkSession, d: String): Codebooks = {
+    val k = kFor(s)
+    val text = graft.util.Artifacts.text("model_pqres",
+        graft.util.Artifacts.key(Seq(s"$d/embeddings.parquet"), k)) {
+      val coarse = KMeans.fit(s, d)
+      val base = graft.Tables.embeddings(s, d)
+        .select(col("vec_id"),
+          col("embedding").cast("array<double>").as("full"))
+        .withColumn("__ee",
+          graft.functions.DotProduct(col("full"), col("full")))
+      val t = base
+        .withColumn("__cid", KMeans.assignColOn(coarse.centroids,
+          col("full"), col("__ee")).getField("cid"))
+        .select(col("vec_id"),
+          residualCol(coarse, col("full"), col("__cid")).as("full"))
+        .localCheckpoint()
+      (0 until M).map { j =>
+        val ej = subVec(col("full"), j)
+        KMeans.modelText(KMeans.fitOn(
+          t.select(col("vec_id"), ej.as("e"),
+            graft.functions.DotProduct(ej, ej).as("ee")), k))
+      }.mkString("\n")
+    }
+    Codebooks(text.split("\n\n").toSeq.map(KMeans.parseModel))
+  }
 
   /** Sequential left-fold dot — the same reduction order as
     * [[graft.functions.DotProduct]] and DuckDB's list_inner_product,

@@ -22,6 +22,7 @@ import org.apache.spark.sql.functions._
   */
 object SimilarityQueries {
   import graft.Tables.embeddings
+  import graft.util.Artifacts
 
   private def vecd(c: Column): Column = c.cast("array<double>")
 
@@ -640,7 +641,7 @@ object SimilarityQueries {
     // delta machinery (round-9 verdict item 4). A daily crawl append
     // must NOT force a full re-encode of a 100 TB index — new vectors
     // encode with the FROZEN models (coarse + codebooks, loaded from
-    // the fingerprint-keyed registry, never retrained here) in one
+    // the content-keyed registry, never retrained here) in one
     // map-only projection and MERGE into a keyed manifest table
     // (mergeDelta: O(delta + touched buckets), the t6/MergeProbe
     // contract), with t6's inline compaction every 2nd delta bounding
@@ -912,7 +913,7 @@ object SimilarityQueries {
     * over an index whose cells look MERGED (majority flagged by
     * [[isMergedCell]]), log one loud warning per (corpus, process)
     * naming the dials and the recipe. Costs one scan of the trained
-    * index ONCE per corpus (persisted sidecar, like n13's pruning
+    * index ONCE per corpus (an artifact, like n13's pruning
     * stats). Returns whether the advisory condition holds
     * (spec-pinned on both probe shapes and the testdata).
     */
@@ -920,7 +921,7 @@ object SimilarityQueries {
     val dialed = s.conf.getOption("graft.ann.nprobe").isDefined ||
       s.conf.getOption("graft.pq.k").isDefined
     // An ADVISORY must never fail the serving query it decorates: any
-    // recoverable error computing the shape stats (sidecar I/O, a
+    // recoverable error computing the shape stats (artifact I/O, a
     // half-written file from a crashed peer) skips the warning — the
     // j5-forensics discipline. OOM/interrupt still propagate.
     val frac = if (dialed) 0.0 else (try mergedClusterFraction(s, d)
@@ -931,7 +932,7 @@ object SimilarityQueries {
       Advisories.record("ann_serving_dials", d, frac,
         "graft.pq.k=64, graft.ann.nprobe=4, graft.ann.rerank_c=200 " +
           "(recall 1.00 on the hard probe corpus)",
-        fingerprint = KMeans.corpusKey(d))
+        fingerprint = Artifacts.fingerprint(embPath(d)))
     if (fire && recallWarned.add(d))
       advisoryLog.warn(
         s"ANN serving dials are at the conservative oracle-pinned " +
@@ -961,46 +962,16 @@ object SimilarityQueries {
   }
 
   /** Mean frozen-model reconstruction error (Σ_j d²_j) over the full
-    * corpus — the staleness advisory's baseline, computed once per
-    * corpus and persisted as a registry-style sidecar (a property of
-    * (corpus, frozen model), not of any query).
+    * corpus — the staleness advisory's baseline: a text artifact keyed
+    * by the embeddings and pq.k (a property of (corpus, frozen model),
+    * not of any query).
     */
-  private val baseErrCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Double]()
   private[graft] def pqBaseErr(s: SparkSession, d: String): Double =
-    // key carries pq.k like the sidecar filename does (ADVICE round
-    // 10): a session dialing graft.pq.k must not read a baseline
-    // computed under a different codebook size
-    baseErrCache.computeIfAbsent(
-      s"${KMeans.corpusKey(d)}_k${PQ.kFor(s)}", _ => {
-      val f = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_pq_baseerr_${KMeans.corpusKey(d)}_k${PQ.kFor(s)}.txt")
-      val loaded: Option[Double] =
-        if (!f.isFile) None
-        else {
-          val src = scala.io.Source.fromFile(f, "UTF-8")
-          try src.getLines().find(_.nonEmpty)
-            .map(java.lang.Double.parseDouble)
-          finally src.close()
-        }
-      loaded.getOrElse {
-        val v = meanErr(s, d,
-          embeddings(s, d).select(col("vec_id"),
-            vecd(col("embedding")).as("e")))
-        val tmp = java.io.File.createTempFile(
-          f.getName, ".tmp", f.getParentFile)
-        java.nio.file.Files.write(tmp.toPath,
-          (java.lang.Double.toString(v) + "\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        if (!tmp.renameTo(f)) {
-          if (!f.isFile)
-            java.nio.file.Files.move(tmp.toPath, f.toPath,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          else tmp.delete()
-        }
-        v
-      }
-    })
+    Artifacts.text("pq_baseerr",
+        Artifacts.key(Seq(embPath(d)), PQ.kFor(s))) {
+      java.lang.Double.toString(meanErr(s, d, embeddings(s, d)
+        .select(col("vec_id"), vecd(col("embedding")).as("e"))))
+    }.trim.toDouble
 
   private def meanErr(s: SparkSession, d: String, rel: DataFrame): Double = {
     val model = KMeans.fit(s, d)
@@ -1046,7 +1017,8 @@ object SimilarityQueries {
     if (fire)
       Advisories.record("index_staleness", d, ratio,
         "retrain + full index rebuild (the registry re-keys on " +
-          "corpus fingerprint)", fingerprint = KMeans.corpusKey(d))
+          "corpus fingerprint)",
+        fingerprint = Artifacts.fingerprint(embPath(d)))
     if (fire && stalenessWarned.add(d))
       advisoryLog.warn(
         s"incremental index maintenance over $d: a delta batch's " +
@@ -1062,14 +1034,13 @@ object SimilarityQueries {
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** d9's occupancy census at DEFAULT dials (planes=6, tables=4) —
-    * [[LshCensus]] over the hyperplane bucket relation, fingerprinted
-    * on embeddings.parquet. One corpus scan on first ask, a sidecar
+    * [[LshCensus]] over the hyperplane bucket relation, keyed on
+    * embeddings.parquet. One corpus scan on first ask, an artifact
     * read after.
     */
   private[graft] def embOccupancy(
       s: SparkSession, d: String): LshCensus.Occupancy =
-    LshCensus.occupancy(
-      s"emb_${KMeans.corpusKey(d)}_cap${D9BucketCap}_p6t4_v1",
+    LshCensus.occupancy("occ_emb_p6t4_v1", embPath(d),
       D9BucketCap, DedupQueries.PairBudgetPerRow)(
       embBucketRel(s, d, 6, 4).select("bucket"))
 
@@ -1098,7 +1069,7 @@ object SimilarityQueries {
         "raise graft.emb.planes and/or graft.emb.tables" +
           (if (occ.capRec > D9BucketCap)
             s"; census also admits bucket_cap=${occ.capRec}"
-          else ""), fingerprint = KMeans.corpusKey(d))
+          else ""), fingerprint = Artifacts.fingerprint(embPath(d)))
     }
     if (fire && embRecallWarned.add(d)) {
       val occ = embOccupancy(s, d)
@@ -1260,64 +1231,55 @@ object SimilarityQueries {
     s
   }
 
-  /** n13's index statistic: per-cluster MIN cosine-to-own-centroid
-    * (equivalently the max member angle δ_c) — harvested in one scan
-    * of the trained index and persisted beside it (atomic tmp+rename,
-    * the zone-map movement applied to vector space). Computed at
-    * build time because it is a property of the INDEX, not of any
-    * query; a serving process reads k numbers, never the vectors.
+  /** One scan of the trained index: `aggs` over each member's cosine
+    * to its own centroid (`c`), grouped by cell — k rows, an index
+    * statistic, not data — rendered one `cid v1 v2 …` line per cell in
+    * cid order.
     */
-  private[llm] def clusterMinCos(s: SparkSession, d: String): Map[Long, Double] = {
-    val dir = trainedIndexDir(s, d)
-    val f = new java.io.File(dir, "_CLUSTER_STATS")
-    if (!f.isFile) {
-      val model = KMeans.fit(s, d)
-      val cosToOwn = model.centroids.foldLeft(lit(Double.NaN)) {
-        case (acc, (cid, ce)) =>
-          val cn = math.sqrt(dotSeq(ce, ce))
-          when(col("cid") === cid,
-            graft.functions.DotProduct(col("e"), typedlit(ce.toSeq)) /
-              (col("norm") * lit(cn))).otherwise(acc)
-      }
-      val rows = s.read.parquet(dir)
-        .select(col("cid").cast("long").as("cid"), cosToOwn.as("c"))
-        .groupBy("cid").agg(min(col("c")).as("mn"))
-        .collect() // k rows — the index statistic, not data
-      val sb = new StringBuilder
-      rows.sortBy(_.getLong(0)).foreach(r =>
-        sb.append(r.getLong(0)).append(' ')
-          .append(java.lang.Double.toString(r.getDouble(1))).append('\n'))
-      val tmp = java.io.File.createTempFile(f.getName, ".tmp", f.getParentFile)
-      java.nio.file.Files.write(tmp.toPath,
-        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // same failed-publish fallback as clusterShapeStats: a lost
-      // rename race (non-POSIX FS, cross-device tmp) must not make
-      // the read below throw from inside n13 query construction —
-      // the content is a pure function of the trained index, so our
-      // own copy is identical to whatever the winner published. When
-      // the winner's copy is used, delete our tmp — otherwise every
-      // lost race leaves a *.tmp behind in the index directory.
-      if (!tmp.renameTo(f)) {
-        if (!f.isFile)
-          java.nio.file.Files.move(tmp.toPath, f.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        else tmp.delete()
-      }
+  private def cellCosLines(
+      s: SparkSession, d: String, aggs: Column*): String = {
+    val model = KMeans.fit(s, d)
+    val cosToOwn = model.centroids.foldLeft(lit(Double.NaN)) {
+      case (acc, (cid, ce)) =>
+        val cn = math.sqrt(dotSeq(ce, ce))
+        when(col("cid") === cid,
+          graft.functions.DotProduct(col("e"), typedlit(ce.toSeq)) /
+            (col("norm") * lit(cn))).otherwise(acc)
     }
-    val src = scala.io.Source.fromFile(f, "UTF-8")
-    try src.getLines().filter(_.nonEmpty).map { l =>
-      val a = l.split(' ')
-      a(0).toLong -> java.lang.Double.parseDouble(a(1))
-    }.toMap
-    finally src.close()
+    s.read.parquet(trainedIndexDir(s, d))
+      .select(col("cid").cast("long").as("cid"), cosToOwn.as("c"))
+      .groupBy("cid").agg(aggs.head, aggs.tail: _*)
+      .collect().sortBy(_.getLong(0))
+      .map(r => (r.getLong(0).toString +: (1 until r.length)
+        .map(i => java.lang.Double.toString(r.getDouble(i))))
+        .mkString("", " ", "\n"))
+      .mkString
   }
 
+  private def parseCellLines(text: String): Map[Long, Array[Double]] =
+    text.split('\n').filter(_.nonEmpty).map { l =>
+      val a = l.split(' ')
+      a(0).toLong -> a.tail.map(java.lang.Double.parseDouble)
+    }.toMap
+
+  /** n13's index statistic: per-cluster MIN cosine-to-own-centroid
+    * (equivalently the max member angle δ_c) — a text artifact keyed
+    * by the trained index, harvested in one scan of it (the zone-map
+    * movement applied to vector space). A property of the INDEX, not
+    * of any query: a serving process reads k numbers, never the
+    * vectors.
+    */
+  private[llm] def clusterMinCos(
+      s: SparkSession, d: String): Map[Long, Double] =
+    parseCellLines(Artifacts.text("ivf_mincos", ivfKey(d))(
+      cellCosLines(s, d, min(col("c")).as("mn"))))
+      .map { case (cid, a) => cid -> a(0) }
+
   /** Per-cell SHAPE statistics for the recall advisory: min / avg /
-    * stddev of member cosine-to-own-centroid, harvested in ONE scan
-    * of the trained index and persisted beside it like
-    * [[clusterMinCos]] (atomic tmp+rename; a serving process reads k
-    * lines, never the vectors), plus the max cosine from each
-    * centroid to any OTHER centroid (driver-side, k² small dots).
+    * stddev of member cosine-to-own-centroid — a text artifact keyed
+    * by the trained index like [[clusterMinCos]] — plus the max cosine
+    * from each centroid to any OTHER centroid (driver-side, k² small
+    * dots).
     */
   case class CellShape(minCos: Double, avgCos: Double, stdCos: Double,
       maxOtherCos: Double)
@@ -1325,45 +1287,9 @@ object SimilarityQueries {
   private[graft] def clusterShapeStats(
       s: SparkSession, d: String): Map[Long, CellShape] = {
     val model = KMeans.fit(s, d)
-    val dir = trainedIndexDir(s, d)
-    val f = new java.io.File(dir, "_CLUSTER_SHAPE")
-    if (!f.isFile) {
-      val cosToOwn = model.centroids.foldLeft(lit(Double.NaN)) {
-        case (acc, (cid, ce)) =>
-          val cn = math.sqrt(dotSeq(ce, ce))
-          when(col("cid") === cid,
-            graft.functions.DotProduct(col("e"), typedlit(ce.toSeq)) /
-              (col("norm") * lit(cn))).otherwise(acc)
-      }
-      val rows = s.read.parquet(dir)
-        .select(col("cid").cast("long").as("cid"), cosToOwn.as("c"))
-        .groupBy("cid")
-        .agg(min(col("c")).as("mn"), avg(col("c")).as("av"),
-          coalesce(stddev_pop(col("c")), lit(0.0)).as("sd"))
-        .collect() // k rows — an index statistic, not data
-      val sb = new StringBuilder
-      rows.sortBy(_.getLong(0)).foreach(r =>
-        sb.append(r.getLong(0)).append(' ')
-          .append(java.lang.Double.toString(r.getDouble(1))).append(' ')
-          .append(java.lang.Double.toString(r.getDouble(2))).append(' ')
-          .append(java.lang.Double.toString(r.getDouble(3))).append('\n'))
-      val tmp = java.io.File.createTempFile(f.getName, ".tmp", f.getParentFile)
-      java.nio.file.Files.write(tmp.toPath,
-        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // If the publish rename fails (concurrent creator won the race on
-      // a non-POSIX FS, or cross-device tmp), publish our tmp copy only
-      // when no winner exists — identical content, since the stats are
-      // a pure function of the trained index. Without this the read
-      // below would throw FileNotFound from inside n12/n14-n17 query
-      // CONSTRUCTION, failing a serving query for a purely advisory
-      // statistic. A lost race deletes the tmp (no *.tmp litter).
-      if (!tmp.renameTo(f)) {
-        if (!f.isFile)
-          java.nio.file.Files.move(tmp.toPath, f.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        else tmp.delete()
-      }
-    }
+    val perCell = parseCellLines(Artifacts.text("ivf_shape", ivfKey(d))(
+      cellCosLines(s, d, min(col("c")).as("mn"), avg(col("c")).as("av"),
+        coalesce(stddev_pop(col("c")), lit(0.0)).as("sd"))))
     val cents = model.centroids.map { case (cid, ce) =>
       (cid, ce, math.sqrt(dotSeq(ce, ce)))
     }
@@ -1371,16 +1297,8 @@ object SimilarityQueries {
       cents.collect { case (o, oe, on) if o != cid =>
         clamp1(dotSeq(ce, oe) / (cn * on))
       }.foldLeft(-1.0)(math.max)
-    val src = scala.io.Source.fromFile(f, "UTF-8")
-    val perCell = try src.getLines().filter(_.nonEmpty).map { l =>
-      val a = l.split(' ')
-      a(0).toLong -> (java.lang.Double.parseDouble(a(1)),
-        java.lang.Double.parseDouble(a(2)),
-        java.lang.Double.parseDouble(a(3)))
-    }.toMap
-    finally src.close()
     cents.map { case (cid, ce, cn) =>
-      val (mn, av, sd) = perCell.getOrElse(cid, (-1.0, 0.0, 1.0))
+      val Array(mn, av, sd) = perCell.getOrElse(cid, Array(-1.0, 0.0, 1.0))
       cid -> CellShape(mn, av, sd, maxOther(cid, ce, cn))
     }.toMap
   }
@@ -1455,60 +1373,50 @@ object SimilarityQueries {
       .orderBy("vec_id")
   }
 
-  /** Build (once per corpus dir, under java.io.tmpdir) n6's
-    * cid-partitioned ANN index from the TRAINED k-means model: assign
-    * every vector map-side (the model enters as literals), write
-    * partitioned by cluster id. On a real deployment this is the
-    * offline index-build job that runs right after training; here it
-    * is keyed by corpus path and completion-markered so
-    * concurrent/repeated queries reuse it.
+  /** The embeddings table: the input every n-family artifact keys on. */
+  private def embPath(d: String): String = s"$d/embeddings.parquet"
+
+  /** The trained IVF index's key; its cell statistics key on it too. */
+  private def ivfKey(d: String): String = Artifacts.key(Seq(embPath(d)))
+
+  /** n6's cid-partitioned ANN index from the TRAINED k-means model, a
+    * directory artifact: every vector assigned map-side (the model
+    * enters as literals), written partitioned by cluster id. On a real
+    * deployment this is the offline index-build job that runs right
+    * after training.
     */
-  private[llm] def trainedIndexDir(s: SparkSession, d: String): String = {
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_ivf_trained_${KMeans.corpusKey(d)}")
-    val ready = new java.io.File(dir, "_INDEX_READY")
-    if (!ready.exists()) {
+  private[llm] def trainedIndexDir(s: SparkSession, d: String): String =
+    Artifacts.dir("ivf_trained", ivfKey(d)) { staging =>
       val model = KMeans.fit(s, d)
       base(s, d)
         .withColumn("ee", dot("e", "e"))
         .withColumn("cid", KMeans.assignCol(model.centroids).getField("cid"))
         .select(col("vec_id"), col("e"), col("norm"), col("cid"))
         .write.mode("overwrite").partitionBy("cid")
-        .parquet(dir.toString)
-      ready.createNewFile()
+        .parquet(staging)
     }
-    dir.toString
-  }
 
-  /** Build (once per corpus dir) the IVF-PQ serving index: every
-    * vector assigned to its trained coarse cluster (the partition
-    * column) AND PQ-encoded (the M-code column) in ONE map-only
-    * pass — both models enter as literals. The written files carry
-    * (vec_id, codes) only: the float vectors are consumed at build
-    * time and never stored, which is the whole IVF-PQ storage story
-    * (16 B of codes + key per vector instead of 512 B of floats).
+  /** The IVF-PQ serving index, a directory artifact keyed by the
+    * embeddings and pq.k: every vector assigned to its trained coarse
+    * cluster (the partition column) AND PQ-encoded (the M-code column)
+    * in ONE map-only pass — both models enter as literals. The written
+    * files carry (vec_id, codes) only: the float vectors are consumed
+    * at build time and never stored, which is the whole IVF-PQ storage
+    * story (16 B of codes + key per vector instead of 512 B of
+    * floats). The kind's `ivfpq2` name marks residual encoding.
     */
-  private def trainedPqIndexDir(s: SparkSession, d: String): String = {
-    // v2 cache name: residual encoding changed every stored code, so
-    // the versioned dir retires indexes built by the absolute-
-    // coordinate encoder
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_ivfpq2_trained_${KMeans.corpusKey(d)}_k${PQ.kFor(s)}")
-    val ready = new java.io.File(dir, "_INDEX_READY")
-    if (!ready.exists()) {
+  private def trainedPqIndexDir(s: SparkSession, d: String): String =
+    Artifacts.dir("ivfpq2_trained",
+        Artifacts.key(Seq(embPath(d)), PQ.kFor(s))) { staging =>
       val model = KMeans.fit(s, d)
       val cb = PQ.fit(s, d)
-      val withSubs = pqAssignments(base(s, d), cb, model)
-      withSubs
+      pqAssignments(base(s, d), cb, model)
         .select(col("vec_id"),
           array((0 until PQ.M).map(j => col(s"m$j.cid")): _*).as("codes"),
           col("__kcid").as("cid"))
         .write.mode("overwrite").partitionBy("cid")
-        .parquet(dir.toString)
-      ready.createNewFile()
+        .parquet(staging)
     }
-    dir.toString
-  }
 
   /** Hyperplane b: component j = conv(substr(md5('b_j'),1,7),16,10)
     * / 2^27 − 1, the identical arithmetic as the SQL formulation (the

@@ -1893,7 +1893,8 @@ object PoolJsonSink {
                 m.buckets.getOrElse(b, Nil) != p.buckets.getOrElse(b, Nil))
             }.toSet
           } catch {
-            case _: Throwable => // vacuumed history: can't validate
+            // vacuumed history: can't validate
+            case scala.util.control.NonFatal(_) =>
               throw new java.util.ConcurrentModificationException(
                 s"$tableDir: table advanced v$v0 -> v$cur and the " +
                   "interleaved history is no longer on disk; retry " +

@@ -250,7 +250,7 @@ class GraftDataWriter(
 
   override def abort(): Unit = {
     writers.values.foreach { case (w, _) =>
-      try w.close() catch { case _: Throwable => }
+      try w.close() catch { case scala.util.control.NonFatal(_) => }
     }
   }
 

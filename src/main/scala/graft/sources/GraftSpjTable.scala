@@ -635,7 +635,8 @@ private[sources] object GraftParquetRead {
         Iterator[InternalRow] = {
     val buildSession = spark.newSession()
     spark.conf.getAll.foreach { case (k, v) =>
-      try buildSession.conf.set(k, v) catch { case _: Throwable => () }
+      try buildSession.conf.set(k, v)
+      catch { case scala.util.control.NonFatal(_) => () }
     }
     buildSession.conf.set("spark.sql.parquet.enableVectorizedReader",
       vectorized.toString)

@@ -159,7 +159,9 @@ class GraftEpochDataWriter(
   }
 
   override def abort(): Unit =
-    if (wrote) { try writer.close() catch { case _: Throwable => } }
+    if (wrote) {
+      try writer.close() catch { case scala.util.control.NonFatal(_) => }
+    }
 
   override def close(): Unit = ()
 }

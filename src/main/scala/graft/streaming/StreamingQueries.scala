@@ -445,7 +445,7 @@ object StreamingQueries {
     "t12_stream_changes_by_name" -> ((s, d) => {
       val table = graft.relational.JoinQueries.stagedChangeTable(s, d)
       val root = new java.io.File(table).getParentFile
-      // catalog name carries the staging fingerprint (the r22 lesson)
+      // catalog name carries the staging key (the r22 lesson)
       val cat = ("gt12_" + root.getName).replaceAll("[^A-Za-z0-9_]", "_")
       s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
       s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$root/wh12")

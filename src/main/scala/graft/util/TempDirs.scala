@@ -4,13 +4,10 @@ import java.nio.file.{Files, Path}
 
 /** Process-scoped scratch directories for queries that stage through
   * the local filesystem (n18's index table, the t-family's stage/log
-  * dirs, s3's jsonl fixture). `Files.createTempDirectory` alone leaks:
-  * every bench/verify run left a full encoded-index copy plus parquet
-  * staging in tmpdir (ADVICE round 10). Each scratch dir is registered
-  * here and recursively deleted by ONE JVM shutdown hook — the same
-  * bounded-footprint discipline as the fingerprint-keyed sidecar
-  * files, which are small and deliberately persistent and therefore
-  * NOT routed through this.
+  * dirs, s3's jsonl fixture). Each one is registered here and
+  * recursively deleted by ONE JVM shutdown hook, so runs leave no
+  * staging behind. Derived state meant to outlive the process goes
+  * through [[Artifacts]] instead.
   */
 object TempDirs {
   private val registered =
@@ -26,7 +23,7 @@ object TempDirs {
       }
     })
 
-  private def deleteRecursively(p: Path): Unit = {
+  private[util] def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
       val s = Files.list(p)
       try s.forEach(deleteRecursively(_)) finally s.close()

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * ~70–90 ms per `spark.read.parquet` construction vs ~7 ms with a
   * supplied schema (ReadOverheadProbe), and the catalog constructs
   * relations hundreds of times per run — so `load` memoizes the
-  * INFERRED SCHEMA per (path, recursive file fingerprint). Metadata
+  * INFERRED SCHEMA under the table's content fingerprint
+  * ([[graft.util.Artifacts]]). Metadata
   * only: rows still come from the parquet scan on every evaluation.
   * This spec pins (1) supplied-schema equivalence — `load` yields the
   * same schema and rows as a direct inferred read; (2) invalidation —
@@ -37,8 +38,8 @@ class SchemaMemoSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val s1 = Tables.schemaOf(spark, dir, "documents")
     assert(s1.fieldNames.toSeq == Seq("id", "v"))
-    // rewrite with a different schema; bump mtimes so the recursive
-    // fingerprint (count, bytes, max mtime) cannot collide
+    // rewrite with a different schema; bump mtimes so the per-file
+    // (path, length, mtime) fingerprint cannot collide
     Seq((1L, "a", 2.0)).toDF("id", "v", "w")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     new java.io.File(s"$dir/documents.parquet").listFiles()

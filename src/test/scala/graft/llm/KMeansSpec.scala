@@ -36,8 +36,9 @@ class KMeansSpec extends AnyFunSuite {
     val m1 = KMeans.fit(spark, sf0001)
     // the registry file exists after the first fit; loading it
     // directly is what a fresh JVM's fit() resolves to
-    val loaded = KMeans.loadModel(
-      KMeans.modelFile("kmeans", sf0001)).get
+    val loaded = KMeans.loadModel(graft.util.Artifacts.location(
+      KMeans.ModelKind,
+      graft.util.Artifacts.key(Seq(s"$sf0001/embeddings.parquet")))).get
     assert(loaded.rounds == m1.rounds)
     loaded.centroids.zip(m1.centroids).foreach {
       case ((ci, ca), (pi, pa)) =>
