@@ -1,7 +1,10 @@
 package graft.pol
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Game lookup dimension (S5) + the reference's three-stage key
   * fallback (P5/J1, `etl/transform.py:199-215`):
@@ -16,10 +19,11 @@ import org.apache.spark.sql.functions._
   * order is part of the semantics and is preserved via an explicit
   * `row_idx`.
   *
-  * Spark-first: resolution happens per DISTINCT pool_id against the
-  * broadcast dimension (both sides tiny), producing a resolved lookup
-  * that facts broadcast-join on a plain equi-key. The fact side is
-  * touched exactly once and never widens — correct at any scale.
+  * Resolution runs on the driver: the dimension is a handful of rows
+  * and the pool ids are one per file (no more than the documents the
+  * sink collects anyway), so the fallback is plain Scala over both and
+  * the result is a local relation the per-file rows broadcast-join on
+  * a plain equi-key. The line-level fact stream is never touched.
   */
 object GameLookup {
 
@@ -61,14 +65,10 @@ object GameLookup {
     val rows = Xlsx.readRows(path)
     require(rows.nonEmpty, s"empty worksheet in $path")
     val header = rows.head.map(h => Option(h).getOrElse(""))
-    val schema = org.apache.spark.sql.types.StructType(header.map(
-      org.apache.spark.sql.types.StructField(_,
-        org.apache.spark.sql.types.StringType, nullable = true)))
+    val schema = StructType(header.map(StructField(_, StringType)))
     val data = rows.tail.map { r =>
-      org.apache.spark.sql.Row.fromSeq(
-        header.indices.map(i => if (i < r.length) r(i) else null))
+      Row.fromSeq(header.indices.map(i => if (i < r.length) r(i) else null))
     }
-    import scala.jdk.CollectionConverters._
     normalize(spark.createDataFrame(data.asJava, schema))
   }
 
@@ -103,46 +103,59 @@ object GameLookup {
     when(s === "", "0").otherwise(s)
   }
 
+  /** One normalized dim row. */
+  private final case class DimRow(poolId: String, gameId: String,
+      bet: java.lang.Double, mwf: java.lang.Double)
+
+  /** For a pool id, the dim rows matching it at the first stage that
+    * matches any, in workbook order (empty on a miss). Each stage is a
+    * hash lookup, so resolving is linear in ids + dim rows.
+    */
+  private def stages(dim: Seq[DimRow]): String => Seq[DimRow] = {
+    // zfill, not lpad: Python zfill never truncates — a dim id like
+    // '50001234' must not collapse to '5000'
+    def zfill4(t: String) = {
+      val n = t.codePointCount(0, t.length)
+      if (n < 4) "0" * (4 - n) + t else t
+    }
+    val keyed = dim.filter(_.poolId != null)
+    val byId = keyed.groupBy(_.poolId)
+    val byPadded = keyed.groupBy(d => zfill4(d.poolId))
+    poolId => {
+      val stripped = poolId.dropWhile(_ == '0') match { case "" => "0"; case t => t }
+      byId.get(poolId).orElse(byId.get(stripped)).orElse(byPadded.get(poolId))
+        .getOrElse(Nil)
+    }
+  }
+
   /** Resolve each distinct pool_id of `poolIds` against the dimension
     * with the staged fallback. Output columns: pool_id, min_bet,
     * game_ids (workbook order), max_win_factor. Pool ids with no match
-    * are absent (callers left-join → the reference's null ladder).
+    * (and null ids) are absent (callers left-join → the reference's
+    * null ladder).
     */
   def resolved(dim: DataFrame, poolIds: DataFrame): DataFrame = {
-    val d = dim.select(
-      col("pool_id_dim"), col("game_id"), col("bet"),
-      col("max_win_factor"), col("row_idx"))
-    val p = poolIds.select(col("pool_id"))
-      .where(col("pool_id").isNotNull).distinct()
-    // zfill4, not lpad: Python zfill never truncates, Spark lpad does —
-    // a dim id like '50001234' must not collapse to '5000' (stage 3
-    // only ever pads SHORTER ids).
-    val zfill4 = when(length(col("pool_id_dim")) < 4,
-      lpad(col("pool_id_dim"), 4, "0")).otherwise(col("pool_id_dim"))
-    // Each stage is a plain EQUI-join on a derived key (hash/broadcast
-    // join, never a nested-loop over ids×dim — the disjunctive-
-    // condition formulation degrades to BroadcastNestedLoop, which
-    // stops scaling the moment either side grows).
-    def stageJoin(n: Int, probeKey: Column, dimKey: Column): DataFrame =
-      p.join(broadcast(d.withColumn("__k", dimKey)),
-          probeKey === col("__k"), "inner")
-        .withColumn("__stage", lit(n))
-        .drop("__k")
-    val cand = stageJoin(1, col("pool_id"), col("pool_id_dim"))
-      .unionByName(stageJoin(2, strip0(col("pool_id")), col("pool_id_dim")))
-      .unionByName(stageJoin(3, col("pool_id"), zfill4))
-    val best = cand.groupBy("pool_id").agg(min(col("__stage")).as("__best"))
-    cand.join(broadcast(best), Seq("pool_id"))
-      .where(col("__stage") === col("__best"))
-      // a dim row can satisfy several stages of the same pool; the
-      // winning stage's rows are deduped by identity before collecting
-      .dropDuplicates("pool_id", "row_idx")
-      .groupBy("pool_id")
-      .agg(
-        min_by(col("bet"), col("row_idx")).as("min_bet"),
-        transform(
-          array_sort(collect_list(struct(col("row_idx"), col("game_id")))),
-          x => x.getField("game_id")).as("game_ids"),
-        min_by(col("max_win_factor"), col("row_idx")).as("max_win_factor"))
+    val dimRows = dim
+      .select(col("pool_id_dim"), col("game_id"), col("bet"),
+        col("max_win_factor"), col("row_idx"))
+      .collect().sortBy(_.getLong(4)).toSeq
+      .map(r => DimRow(r.getString(0), r.getString(1),
+        r.getAs[java.lang.Double](2), r.getAs[java.lang.Double](3)))
+    val ids = poolIds.select(col("pool_id")).collect()
+      .iterator.map(_.getString(0)).filter(_ != null).distinct.toSeq
+    val resolve = stages(dimRows)
+    val rows = ids.flatMap { id =>
+      resolve(id) match {
+        case Seq() => None
+        case ms => Some(Row(id, ms.head.bet, ms.map(_.gameId), ms.head.mwf))
+      }
+    }
+    dim.sparkSession.createDataFrame(rows.asJava, Resolved)
   }
+
+  private val Resolved = StructType(Seq(
+    StructField("pool_id", StringType),
+    StructField("min_bet", DoubleType),
+    StructField("game_ids", ArrayType(StringType)),
+    StructField("max_win_factor", DoubleType)))
 }

@@ -47,10 +47,20 @@ object PolParser {
 
   /** Relative-path + folder metadata columns from an absolute-path
     * column `abs_path` (shared by the line readers and [[listFiles]]).
+    * A line scan's path is a URI, percent-encoded (`group%201/`);
+    * [[listFiles]]' is already decoded. A URI is decoded here, keeping
+    * `+` literal (form decoding would turn it into a space), so both
+    * give the same `relative_path` for a file. Only a URI holding a `%`
+    * changes when decoded; the cheap `contains` test keeps the decode
+    * off the per-line cost of every other file.
     */
   def pathMeta(df: DataFrame, baseDir: String): DataFrame = {
+    val abs = col("abs_path")
+    val path = when(abs.contains("%") && abs.rlike("^[A-Za-z][A-Za-z0-9+.-]*:"),
+        url_decode(regexp_replace(abs, "\\+", "%2B")))
+      .otherwise(abs)
     val rel = regexp_replace(
-      regexp_replace(col("abs_path"), "^file:/*", "/"),
+      regexp_replace(path, "^file:/*", "/"),
       "^" + java.util.regex.Pattern.quote(baseDir) + "/", "")
     df.withColumn("relative_path", rel)
       .withColumn("folder_path",
@@ -239,21 +249,20 @@ object PolParser {
 
     val outSchema = StructType(Seq(
       StructField("value", StringType),
-      StructField("abs_path", StringType),
-      StructField("file_name", StringType)))
+      StructField("abs_path", StringType)))
 
     val lines = files.mapPartitions { it =>
       it.flatMap { r =>
         val path = r.getAs[String]("path")
-        val name = path.substring(path.lastIndexOf('/') + 1)
         decodeBytes(r.getAs[Array[Byte]]("content"))
           .split("\n", -1).iterator
           .filter(_.nonEmpty)
-          .map(line => Row(line.stripSuffix("\r"), path, name))
+          .map(line => Row(line.stripSuffix("\r"), path))
       }
     }(Encoders.row(outSchema))
 
     pathMeta(lines, baseDir)
+      .withColumn("file_name", substring_index(col("relative_path"), "/", -1))
   }
 
   /** The reference's per-file decode chain: strict utf-8 \u2192 latin-1 \u2192

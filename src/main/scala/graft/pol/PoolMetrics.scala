@@ -18,16 +18,19 @@ import org.apache.spark.sql.functions._
   *     variance term is rounded to 4dp BEFORE summing.
   *
   * Rounding is `bround` (HALF_EVEN) to match Python/numpy. The rounded
-  * 4dp variance terms are summed as DECIMAL(18,4), which makes the
-  * reference's round-then-sum order exact AND order-independent — the
-  * property that lets partial aggregation combine in any order on a
-  * cluster without drifting from the single-threaded pandas result.
+  * 4dp variance terms are summed as DECIMAL(28,4), which makes the
+  * reference's round-then-sum order exact AND order-independent, so
+  * the result cannot drift from the single-threaded pandas one however
+  * the histogram was partitioned.
   *
   * Shuffle shape at scale: the raw fact stream is aggregated ONCE by
   * (file, win) with map-side combine — the only wide shuffle over the
-  * full data. Everything after operates on the per-file win histogram
-  * (~330 rows/file observed), so a 100 TB corpus reduces to
-  * |files|·|distinct wins| rows after stage one.
+  * full data. A second, tiny shuffle turns the (file, win) histogram
+  * (~330 rows/file observed) and the file inventory into one row per
+  * file carrying the histogram as an array; volatility is a map-only
+  * fold over that array, and the lookup, resolved on the driver, is
+  * broadcast onto those rows. A 100 TB corpus reduces to
+  * |files|·|distinct wins| rows after the first shuffle.
   */
 object PoolMetrics {
 
@@ -76,105 +79,62 @@ object PoolMetrics {
     */
   def perPool(parsed: DataFrame, dim: DataFrame,
       files: Option[DataFrame] = None): DataFrame = {
-    // Stage 1 — the one wide shuffle: per-file win histogram, map-side
-    // combined (hash agg on integral keys, fully codegen'd).
-    val hist = parsed
-      .groupBy(col("relative_path"), col("game_win"))
+    val fileCols = Seq("relative_path", "file_name", "folder_path", "parent_folder").map(col)
+    val inventory = files.getOrElse(parsed.select(fileCols: _*).distinct())
+      .select(fileCols: _*)
+    val (poolId, poolType) = decodeFilename(col("file_name"))
+    // Resolved on the driver against the inventory's pool ids: a local
+    // relation, broadcast onto the per-file rows below.
+    val lookup = GameLookup.resolved(dim, inventory.select(poolId.as("pool_id")))
+
+    // Shuffle 1, the one over the full data: the per-file win histogram,
+    // map-side combined (hash agg on integral keys, fully codegen'd).
+    val hist = parsed.groupBy(col("relative_path"), col("game_win"))
+      .agg(count(lit(1)).as("cnt"))
+    // Shuffle 2, tiny: one row per file with its scalars and the
+    // histogram itself (~330 distinct wins per file observed). Every
+    // inventory file enters it with a zero count and its file columns,
+    // so a file with no parsed line still gets a (size-0) row, and a
+    // file the inventory did not list gets no file name and is dropped.
+    val wins = hist.unionByName(
+      inventory.withColumn("game_win", lit(null).cast("long")).withColumn("cnt", lit(0L)),
+      allowMissingColumns = true)
+    val pools = wins.groupBy(col("relative_path"))
       .agg(
-        count(lit(1)).as("cnt"),
+        sum(col("cnt")).as("size"),
+        coalesce(sum(col("game_win") * col("cnt")), lit(0L)).as("total_win"),
+        sum(when(col("game_win") > 0, col("cnt")).otherwise(0L)).as("hits"),
+        collect_list(when(col("game_win").isNotNull,
+          struct(col("game_win").as("win"), col("cnt")))).as("hist"),
         first(col("file_name"), ignoreNulls = true).as("file_name"),
         first(col("folder_path"), ignoreNulls = true).as("folder_path"),
         first(col("parent_folder"), ignoreNulls = true).as("parent_folder"))
-
-    // Stage 2 — per-file scalars from the histogram (tiny).
-    val parsedPools = hist.groupBy(col("relative_path"))
-      .agg(
-        sum(col("cnt")).as("size"),
-        sum(col("game_win") * col("cnt")).as("total_win"),
-        sum(when(col("game_win") > 0, col("cnt")).otherwise(0L)).as("hits"),
-        first(col("file_name")).as("file_name"),
-        first(col("folder_path")).as("folder_path"),
-        first(col("parent_folder")).as("parent_folder"))
-    // Inventory merge: every discovered file keeps a row; files absent
-    // from the parsed stream get size=0 (→ null rtp/hit/vol below).
-    val pool0 = files match {
-      case Some(f) =>
-        f.select("relative_path", "file_name", "folder_path", "parent_folder")
-          .join(parsedPools.drop("file_name", "folder_path", "parent_folder"),
-            Seq("relative_path"), "left")
-          .na.fill(0L, Seq("size", "total_win", "hits"))
-      case None => parsedPools
-    }
-    val (poolId, poolType) = decodeFilename(col("file_name"))
-    val pool1 = pool0
+      .where(col("file_name").isNotNull)
       .withColumn("pool_id", poolId)
       .withColumn("pool_type", poolType)
-
-    // Lookup join: resolve distinct pool ids against the broadcast dim,
-    // then broadcast the (tiny) resolved map back onto the per-file rows.
-    val lk = GameLookup.resolved(dim, pool1.select(col("pool_id")))
-    val pool2 = pool1.join(broadcast(lk), Seq("pool_id"), "left")
+      .join(broadcast(lookup), Seq("pool_id"), "left")
 
     val haveBet = col("min_bet").isNotNull && col("min_bet") > 0 && col("size") > 0
-    val pool3 = pool2
-      .withColumn("rtp",
-        when(haveBet, bround(col("total_win") / (col("size") * col("min_bet")) * 100, 2)))
-      .withColumn("hit_frequency",
-        when(haveBet, bround(col("hits") / col("size") * 100, 2)))
-
-    // Stage 3 — volatility from the histogram + the per-file scalars:
-    // round each variance term to 4dp, sum exactly as DECIMAL(18,4).
-    val varTerms = hist
-      .join(pool3.select(
-        col("relative_path"), col("min_bet"), col("rtp"), col("size").as("__n")),
-        Seq("relative_path"))
-      .where(col("min_bet").isNotNull && col("min_bet") > 0 && col("__n") > 0)
-      .select(col("relative_path"),
-        bround((col("cnt") / col("__n")) *
-          pow(col("game_win") / col("min_bet") - col("rtp") / 100, 2), 4)
-          .cast("decimal(28,4)").as("var_term"))
-    val vol = varTerms.groupBy(col("relative_path"))
-      .agg(bround(lit(1.645) * sqrt(sum(col("var_term")).cast("double")), 2)
-        .as("volatility"))
-
+    val rtp = bround(col("total_win") / (col("size") * col("min_bet")) * 100, 2)
+    // Volatility, map-side over the histogram: round each variance term
+    // to 4dp and sum exactly as DECIMAL(28,4), so the sum is
+    // independent of the order of the terms.
+    val zero = lit(0).cast("decimal(28,4)")
+    val varSum = aggregate(col("hist"), zero, (acc, h) =>
+      (acc + bround((h.getField("cnt") / col("size")) *
+        pow(h.getField("win") / col("min_bet") - col("rtp") / 100, 2), 4)
+        .cast("decimal(28,4)")).cast("decimal(28,4)"))
     val (tag, isFlat, maxMult) = classify(col("pool_type"))
-    pool3.join(vol, Seq("relative_path"), "left")
+    pools
+      .withColumn("rtp", when(haveBet, rtp))
+      .withColumn("hit_frequency", when(haveBet, bround(col("hits") / col("size") * 100, 2)))
+      .withColumn("volatility",
+        when(haveBet, bround(lit(1.645) * sqrt(varSum.cast("double")), 2)))
+      .drop("hist")
       .withColumn("tag", tag)
       .withColumn("tag_is_scalar", tagIsScalar(col("pool_type")))
       .withColumn("is_flat", isFlat)
       .withColumn("max_multiplier", maxMult)
-  }
-
-  /** One-pass variant of [[perPool]] built on the custom
-    * [[graft.functions.VolatilityAgg]] aggregator: bet is broadcast-
-    * joined onto the raw rows, then a single shuffle of bounded
-    * histogram buffers produces every metric (same bit-exact rounding —
-    * see FunctionsSpec). Preferable when the cluster is shuffle-bound;
-    * the expression pipeline remains the default (fully codegen'd, no
-    * kryo buffers).
-    */
-  def perPoolOnePass(parsed: DataFrame, dim: DataFrame): DataFrame = {
-    val (poolId, poolType) = decodeFilename(col("file_name"))
-    val withId = parsed.withColumn("pool_id", poolId)
-    val lk = GameLookup.resolved(dim, withId.select(col("pool_id")))
-    val m = graft.functions.VolatilityAgg.metrics
-    withId
-      .join(broadcast(lk), Seq("pool_id"), "left")
-      .groupBy(col("relative_path"))
-      .agg(
-        m(col("game_win"), col("min_bet")).as("m"),
-        first(col("file_name")).as("file_name"),
-        first(col("pool_id")).as("pool_id"),
-        first(col("min_bet")).as("min_bet"),
-        first(col("folder_path")).as("folder_path"))
-      .select(col("relative_path"), col("file_name"), col("pool_id"),
-        col("min_bet"), col("folder_path"),
-        col("m.size").as("size"),
-        col("m.total_win").as("total_win"),
-        col("m.hits").as("hits"),
-        col("m.rtp").as("rtp"),
-        col("m.hit_frequency").as("hit_frequency"),
-        col("m.volatility").as("volatility"))
   }
 
   /** Assemble the nested per-pool document (SURVEY §1.4 shape).

@@ -1,6 +1,6 @@
 package graft.pol
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** A7 — cross-file aggregated summary (`etl/transform.py:261-322`).
@@ -12,43 +12,41 @@ import org.apache.spark.sql.functions._
   * (`files_by_folder = {"root": n}`), matching the golden summary.
   *
   * List-valued tags are counted per element; the scalar 'UNKNOWN'
-  * degradation is a 1-element array here so a single explode covers
-  * both branches. min/max/avg of rtp & volatility are over non-null
-  * values only, avg rounded half-even to 2dp (Python round).
+  * degradation is a 1-element array here so one flatten covers both
+  * branches. min/max/avg of rtp & volatility are over non-null values
+  * only, avg rounded half-even to 2dp (Python round).
   */
 object PoolSummary {
 
-  /** One-row summary DF from the documents DF. */
+  /** One-row summary DF from the documents DF: one global aggregation,
+    * whose one row then derives the tag counts.
+    */
   def aggregate(docs: DataFrame, generatedAt: Option[String] = None): DataFrame = {
     val ts = generatedAt.map(lit)
       .getOrElse(date_format(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ssxxx"))
 
     // dict(Counter) in the reference preserves FIRST-ENCOUNTER order
     // over documents (e.g. REG before GAB/PFB); encounter order here is
-    // defined over the consolidated-file order (source_file asc, then
-    // position within a doc's tag list) and carried as a min-struct
-    // through the aggregation — no global window, so it scales.
-    val tagCounts = docs
-      .select(col("metadata.source_file").as("sf"),
-        posexplode(col("tag")).as(Seq("pos", "tag")))
-      .groupBy(col("tag"))
-      .agg(count(lit(1)).as("cnt"),
-        min(struct(col("sf"), col("pos"))).as("ord"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("ord"), struct(col("tag"), col("cnt")).as("e")))),
-        x => x.getField("e")).as("tags_distribution"))
-
-    val base = docs.agg(
-      count(lit(1)).as("total_files_processed"),
-      sum(col("size")).as("total_records_across_all_files"),
-      min(col("rtp")).as("rtp_min"),
-      max(col("rtp")).as("rtp_max"),
-      bround(avg(col("rtp")), 2).as("rtp_avg"),
-      min(col("volatility")).as("volatility_min"),
-      max(col("volatility")).as("volatility_max"),
-      bround(avg(col("volatility")), 2).as("volatility_avg"))
-
-    base.crossJoin(tagCounts)
+    // the consolidated-file order (source_file asc, then position
+    // within a doc's tag list). The aggregate carries one
+    // (source_file, tags) pair per document — one row per file, like
+    // the documents the sink already collects.
+    val tags = flatten(transform(
+      array_sort(collect_list(struct(col("metadata.source_file"), col("tag")))),
+      d => d.getField("tag")))
+    docs.agg(
+        count(lit(1)).as("total_files_processed"),
+        sum(col("size")).as("total_records_across_all_files"),
+        min(col("rtp")).as("rtp_min"),
+        max(col("rtp")).as("rtp_max"),
+        bround(avg(col("rtp")), 2).as("rtp_avg"),
+        min(col("volatility")).as("volatility_min"),
+        max(col("volatility")).as("volatility_max"),
+        bround(avg(col("volatility")), 2).as("volatility_avg"),
+        tags.as("tags"))
+      .withColumn("tags_distribution", transform(array_distinct(col("tags")),
+        t => struct(t.as("tag"), size(filter(col("tags"), _ === t)).cast("long").as("cnt"))))
+      .drop("tags")
       .withColumn("files_by_folder",
         map(lit("root"), col("total_files_processed")))
       .withColumn("generated_at", ts)

@@ -21,25 +21,30 @@ object JoinQueries {
   import graft.Tables._
 
   /** Per-JVM token isolating j5's MUTABLE warehouse from concurrent
-    * catalog runners in other processes; the hook reaps every
-    * warehouse this process created so repeated driver rounds don't
-    * accrete /tmp state. (The staged tables below are artifacts,
-    * shared across processes by design.)
+    * catalog runners in other processes; the hook reaps what this
+    * process created so repeated driver rounds don't accrete /tmp
+    * state. (The staged tables below are artifacts, shared across
+    * processes by design.)
     */
   private lazy val processToken: String = {
     val tok = java.util.UUID.randomUUID().toString.take(8)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("graft_cat_wh_") &&
-          f.getName.endsWith(s"_$tok"))
-        .foreach { f =>
-          try org.apache.commons.io.FileUtils.deleteDirectory(f)
-          catch { case scala.util.control.NonFatal(_) => }
-        }
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      reapJ5(new java.io.File(sys.props("java.io.tmpdir")), tok)))
     tok
   }
+
+  /** Deletes j5's state under `tmp` for process token `tok`: every
+    * warehouse `graft_cat_wh_<slug>_<tok>` and its forensics log
+    * `graft_cat_wh_<slug>_<tok>.j5_forensics.log`.
+    */
+  private[graft] def reapJ5(tmp: java.io.File, tok: String): Unit =
+    Option(tmp.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.getName.startsWith("graft_cat_wh_") &&
+        (f.getName.endsWith(s"_$tok") || f.getName.endsWith(s"_$tok.j5_forensics.log")))
+      .foreach { f =>
+        try org.apache.commons.io.FileUtils.forceDelete(f)
+        catch { case scala.util.control.NonFatal(_) => }
+      }
 
   /** The shared three-version keyed table the change-feed family
     * consumes, staged once per events content as a directory artifact

@@ -98,9 +98,14 @@ object ChangedFiles {
       from: String = "HEAD~1",
       to: String = "HEAD"): Seq[String] = {
     import scala.sys.process._
-    val out = Seq("git", "-C", repoRoot, "diff", "--name-only", from, to).!!
-    out.linesIterator
-      .map(_.trim)
+    // -z: NUL-separated and unquoted, so paths with spaces or non-ASCII
+    // characters come back verbatim (git quotes them otherwise)
+    val out = new java.io.ByteArrayOutputStream
+    val cmd = Seq("git", "-C", repoRoot, "diff", "-z", "--name-only", from, to)
+    val code = (cmd #> out).!
+    if (code != 0) sys.error(s"${cmd.mkString(" ")} exited with $code")
+    new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
+      .split('\u0000').iterator
       .filter(p => p.nonEmpty && p.endsWith(".pol"))
       .filter(p => subdir.isEmpty || p.startsWith(subdir + "/"))
       .filter(p => new java.io.File(repoRoot, p).exists())

@@ -289,12 +289,29 @@ class FunctionsSpec extends AnyFunSuite {
     assert(r.getAs[collection.Seq[Long]]("sig").toSeq == expect)
   }
 
-  test("one-pass VolatilityAgg equals two-pass on random pools") {
+  /** perPool's (rtp, volatility, hit_frequency, size) for `parsed`'s
+    * one pool, and the plain-Scala oracle's for `wins` under the same
+    * lookup.
+    */
+  private def perPoolVsOracle(parsed: org.apache.spark.sql.DataFrame,
+      wins: => Seq[Long], poolId: String) = {
+    import graft.pol.PolJobOracle
+    val lookup = "src/test/resources/lookup/game_lookup.csv"
+    val dim = graft.pol.GameLookup.fromCsv(spark, lookup)
+    val r = graft.pol.PoolMetrics.perPool(parsed, dim).collect().head
+    val got = (Seq("rtp", "volatility", "hit_frequency").map(f =>
+      Option(r.getAs[java.lang.Double](f)).map(_.doubleValue)), r.getAs[Long]("size"))
+    val ws = wins
+    val bet = PolJobOracle.resolve(poolId, PolJobOracle.lookup(
+      java.nio.file.Paths.get(lookup))).headOption.map(_.bet)
+    val (rtp, vol, hit) = PolJobOracle.metrics(ws, bet)
+    (got, (Seq(rtp, vol, hit), ws.size.toLong))
+  }
+
+  test("perPool equals the plain-Scala oracle on random pools") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     import spark.implicits._
-    val dim = graft.pol.GameLookup.fromCsv(
-      spark, "src/test/resources/lookup/game_lookup.csv")
     val winGen = Gen.frequency(
       (5, Gen.const(0L)), (3, Gen.choose(1L, 50L)), (1, Gen.choose(51L, 100000L)))
     val winsGen = Gen.listOfN(500, winGen)
@@ -307,23 +324,19 @@ class FunctionsSpec extends AnyFunSuite {
         .withColumn("folder_path", lit(""))
         .withColumn("parent_folder", lit(""))
         .repartition(7) // force multi-partition partial aggregation
-      val two = graft.pol.PoolMetrics.perPool(parsed, dim).collect().head
-      val one = graft.pol.PoolMetrics.perPoolOnePass(parsed, dim).collect().head
-      for (f <- Seq("rtp", "volatility", "hit_frequency"))
-        assert(one.getAs[Double](f) == two.getAs[Double](f), s"$f seed $i")
+      val (got, want) = perPoolVsOracle(parsed, wins, "6371")
+      assert(got._1.forall(_.nonEmpty), s"no metrics for seed $i")
+      assert(got == want, s"seed $i")
     }
   }
 
   test("one-pass VolatilityAgg matches the two-pass golden path on samples") {
-    val dim = graft.pol.GameLookup.fromCsv(
-      spark, "src/test/resources/lookup/game_lookup.csv")
-    val parsed = graft.pol.PolParser.read(
-      spark, "/root/reference/samples/pools2/0201/Pool_0201_294.pol")
-    val twoPass = graft.pol.PoolMetrics.perPool(parsed, dim).collect().head
-    val onePass = graft.pol.PoolMetrics.perPoolOnePass(parsed, dim).collect().head
-    for (f <- Seq("rtp", "volatility", "hit_frequency"))
-      assert(onePass.getAs[Double](f) == twoPass.getAs[Double](f), f)
-    assert(onePass.getAs[Long]("size") == twoPass.getAs[Long]("size"))
+    val path = "/root/reference/samples/pools2/0201/Pool_0201_294.pol"
+    val parsed = graft.pol.PolParser.read(spark, path)
+    val (got, want) = perPoolVsOracle(parsed, graft.pol.PolJobOracle.wins(
+      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
+        java.nio.charset.StandardCharsets.UTF_8)), "0201")
+    assert(got == want)
   }
 
   test("WsTokens equals the filter(split(lower)) builtin tree") {

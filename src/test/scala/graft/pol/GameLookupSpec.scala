@@ -49,6 +49,59 @@ class GameLookupSpec extends AnyFunSuite {
     assert(m("42")._2 == Seq("300"))
   }
 
+  /** A dimension whose rows pin the edge cases of the staged fallback:
+    * the first row of pool 0500 has an empty Bet, pool 0600's first
+    * row has no Game_id, and dim id 77 matches pool 0077 at stage 2
+    * (de-zeroed file id) and again at stage 3 (zero-padded dim id),
+    * while dim id 077 matches it at stage 3 only.
+    */
+  private lazy val edgeDim = {
+    val csv = java.nio.file.Files.createTempFile("graft_lookup_edges", ".csv")
+    java.nio.file.Files.writeString(csv,
+      """Game,Game_id,Pool_id,Bet,Max_win_factor
+        |NoBet,500,0500,,555
+        |WithBet,501,0500,8,
+        |NoGameId,,0600,4,
+        |After,601,0600,6,
+        |Both,700,77,2,777
+        |PadOnly,701,077,3,
+        |""".stripMargin)
+    GameLookup.fromCsv(spark, csv.toString)
+  }
+
+  /** pool_id → (min_bet, game_ids, max_win_factor), nulls kept. */
+  private def resolveEdges(ids: Option[String]*)
+      : Map[Option[String], (Option[Double], Seq[String], Option[Double])] = {
+    import spark.implicits._
+    GameLookup.resolved(edgeDim, ids.toDF("pool_id")).collect().map { r =>
+      def d(c: String) = Option(r.getAs[java.lang.Double](c)).map(_.doubleValue)
+      Option(r.getAs[String]("pool_id")) ->
+        ((d("min_bet"), r.getAs[collection.Seq[String]]("game_ids").toSeq,
+          d("max_win_factor")))
+    }.toMap
+  }
+
+  test("min_bet and max_win_factor come from the first matching row, even when empty") {
+    assert(resolveEdges(Some("0500")) ==
+      Map(Some("0500") -> ((None, Seq("500", "501"), Some(555.0)))))
+  }
+
+  test("a null Game_id stays in game_ids, in workbook order") {
+    assert(resolveEdges(Some("0600")) ==
+      Map(Some("0600") -> ((Some(4.0), Seq(null, "601"), None))))
+  }
+
+  test("a dim row matching at stages 2 and 3 is taken once, from stage 2") {
+    assert(resolveEdges(Some("0077")) ==
+      Map(Some("0077") -> ((Some(2.0), Seq("700"), Some(777.0)))))
+  }
+
+  test("null and unknown pool ids resolve to nothing") {
+    assert(resolveEdges(None, Some("1234"), None) == Map.empty)
+    assert(resolveEdges(None, Some("0500"), Some("1234"), Some("0500")).keySet ==
+      Set(Some("0500")))
+  }
+
   test("loadFromRoot probes the reference's three candidate locations") {
     // etl/transform.py:43-47: repo root, then config/, then data/
     val src = java.nio.file.Paths.get(

@@ -1,0 +1,115 @@
+package graft.pol
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.SpecBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.QueryHarness.spark
+
+/** The pool job's fixed cost is its number of Spark jobs, not its data:
+  * on [[PolJobSpec]]'s corpus, the per-pool metrics and the summary must
+  * each stay within a handful of jobs, and no join may take the
+  * line-level stream as an input (only the per-file histogram, after an
+  * aggregate, may meet the file side).
+  */
+class PolJobCountSpec extends AnyFunSuite {
+  private val corpus = "src/test/resources/pol_job"
+  private val lookup = "src/test/resources/lookup/pol_job_lookup.csv"
+
+  /** `body`'s result, the number of jobs it launched and the executed
+    * plans of the queries it ran.
+    */
+  private def traced[T](body: => T): (T, Int, Seq[SparkPlan]) = {
+    val sc = spark.sparkContext
+    SpecBus.drain(sc)
+    val jobs = new AtomicInteger
+    val plans = java.util.Collections.synchronizedList(new java.util.ArrayList[SparkPlan])
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    val qeListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(qeListener)
+    try {
+      val r = body
+      SpecBus.drain(sc)
+      import scala.jdk.CollectionConverters._
+      (r, jobs.get, plans.asScala.toSeq)
+    } finally {
+      spark.listenerManager.unregister(qeListener)
+      sc.removeSparkListener(jobListener)
+    }
+  }
+
+  /** Every node of `p`, looking through adaptive stages and caches. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case r: ReusedExchangeExec => nodes(r.child)
+    case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+    case o => (o.children ++ o.subqueries).flatMap(nodes)
+  })
+
+  /** Whether `p` produces line-level rows: a file scan reached without
+    * passing through an aggregate.
+    */
+  private def linesUnder(p: SparkPlan): Boolean = p match {
+    case _: FileSourceScanExec => true
+    case _: BaseAggregateExec => false
+    case a: AdaptiveSparkPlanExec => linesUnder(a.executedPlan)
+    case q: QueryStageExec => linesUnder(q.plan)
+    case r: ReusedExchangeExec => linesUnder(r.child)
+    case m: InMemoryTableScanExec => linesUnder(m.relation.cachedPlan)
+    case o => o.children.exists(linesUnder)
+  }
+
+  private def pools() = {
+    val dim = GameLookup.load(spark, lookup)
+    val inventory = PolParser.listFiles(spark, corpus)
+    val parsed = PolParser.parseObserved(PolParser.readRaw(spark, corpus))
+    (parsed, dim, inventory)
+  }
+
+  test("perPool's metrics take at most 8 jobs and join no line-level input") {
+    val (parsed, dim, inventory) = pools()
+    val (p, jobs, plans) = traced {
+      val p = PoolMetrics.perPool(parsed, dim, Some(inventory)).persist()
+      assert(p.count() == 9)
+      p
+    }
+    try {
+      info(s"$jobs jobs")
+      assert(jobs <= 8, s"perPool launched $jobs jobs")
+      val joins = plans.flatMap(nodes).collect { case j: BaseJoinExec => j }
+      joins.foreach(j =>
+        assert(!j.children.exists(linesUnder), s"a join reads the line stream:\n$j"))
+    } finally p.unpersist()
+  }
+
+  test("PoolSummary.aggregate takes at most 2 jobs") {
+    val (parsed, dim, inventory) = pools()
+    val p = PoolMetrics.perPool(parsed, dim, Some(inventory)).persist()
+    try {
+      p.count()
+      val docs = PoolMetrics.documents(p, Some("2026-01-01T00:00:00+00:00"))
+      val (rows, jobs, _) = traced(PoolSummary.aggregate(docs).collect())
+      info(s"$jobs jobs")
+      assert(rows.length == 1 && rows(0).getAs[Long]("total_files_processed") == 9)
+      assert(jobs <= 2, s"PoolSummary.aggregate launched $jobs jobs")
+    } finally p.unpersist()
+  }
+}

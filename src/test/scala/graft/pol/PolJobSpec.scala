@@ -178,6 +178,68 @@ class PolJobSpec extends AnyFunSuite {
     assertRunOutputs(out, expected.values.toSeq)
   }
 
+  test("paths with a space, '%' or '+' keep their documents in every mode") {
+    val repo = Files.createTempDirectory("poljob_paths")
+    val root = repo.resolve("pools")
+    val text = files(corpus).toMap
+    val t0 = FileTime.fromMillis(1700000000000L)
+    val odd = Seq(
+      "group 1/Pool_0101_100%x.pol" -> text("grp_a/Pool_0101_100.pol"),
+      "100% b/Pool_0102_395.pol" -> text("grp_a/Pool_0102_395.pol"),
+      "a+b/Pool_0104_41000.pol" -> text("grp_b/Pool_0104_41000.pol"))
+    odd.foreach { case (rel, t) => put(root, rel, t, t0) }
+    def git(cmd: String*): Unit =
+      assert(Process("git" +: cmd, repo.toFile).!(ProcessLogger(_ => ())) == 0, cmd)
+    git("init", "-q", "-b", "main")
+    git("config", "user.email", "spec@example.com")
+    git("config", "user.name", "spec")
+    git("add", "-A"); git("commit", "-q", "-m", "base")
+    val rels = odd.map(_._1).sorted
+
+    val full = Files.createTempDirectory("poljob_paths_full")
+    assert(PolMain.run(spark, Seq(root.toString, lookup, full.toString)) == 3)
+    val first = pools(root)
+    assert(first.values.forall(_.size > 0))
+    assertDocs(full, rels, first)
+    assertRunOutputs(full, first.values.toSeq)
+
+    val out = repo.resolve("out")
+    val ledger = Seq(root.toString, lookup, out.toString,
+      "--ledger", repo.resolve("ledger").toString)
+    assert(PolMain.run(spark, ledger) == 3)
+    val modified = "group 1/Pool_0101_100%x.pol"
+    put(root, modified, text("grp_a/Pool_0101_100.pol") + "9 TB1\n",
+      FileTime.fromMillis(1700000060000L))
+    assert(PolMain.run(spark, ledger) == 1)
+    val second = pools(root)
+    assertDocs(out, rels, second)
+    assertRunOutputs(out, Seq(second(modified)))
+
+    git("add", "-A"); git("commit", "-q", "-m", "push")
+    val diffOut = Files.createTempDirectory("poljob_paths_git")
+    assert(PolMain.run(spark,
+      Seq(root.toString, lookup, diffOut.toString, "--git-diff", repo.toString)) == 1)
+    assertDocs(diffOut, Seq(modified), second)
+    assertRunOutputs(diffOut, Seq(second(modified)))
+  }
+
+  test("pathMeta decodes a scan's URI path once, '+' and non-ASCII included") {
+    import spark.implicits._
+    val df = Seq("file:/data/pools/group%201/Pool_1_100%25x.pol",
+        "file:///data/pools/a+b/gr%C3%A9/Pool_2.pol", "file:/data/pools/日本/Pool_3.pol",
+        "/data/pools/100%25 b/Pool_4.pol")
+      .toDF("abs_path")
+    val got = PolParser.pathMeta(df, "/data/pools")
+      .select("relative_path", "folder_path", "parent_folder").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+    assert(got == Seq(
+      ("group 1/Pool_1_100%x.pol", "group 1", "group 1"),
+      ("a+b/gré/Pool_2.pol", "a+b/gré", "gré"),
+      ("日本/Pool_3.pol", "日本", "日本"),
+      // a listed (already decoded) path is left as it is
+      ("100%25 b/Pool_4.pol", "100%25 b", "100%25 b")))
+  }
+
   test("PolMain requires <pol-root> and one mode at most") {
     Seq(Nil, Seq("--ledger", "l"), Seq(corpus.toString, "--incremental", "c"),
         Seq(corpus.toString, "--ledger", "l", "--git-diff", "r"),
@@ -269,11 +331,11 @@ object PolJobOracle {
   final case class DimRow(poolId: String, gameId: String, bet: Double,
       mwf: Option[Double])
 
-  /** The lookup CSV: Game, Game_id, Pool_id, Bet, Max_win_factor. */
+  /** The lookup CSV: Game, Game_id, Pool_id, Bet [, Max_win_factor]. */
   def lookup(csv: Path): Seq[DimRow] =
     Files.readAllLines(csv).asScala.drop(1).map { l =>
       val c = l.split(",", -1)
-      DimRow(c(2), c(1), c(3).toDouble, Some(c(4)).filter(_.nonEmpty).map(_.toDouble))
+      DimRow(c(2), c(1), c(3).toDouble, c.lift(4).filter(_.nonEmpty).map(_.toDouble))
     }.toSeq
 
   private def bround(d: Double, scale: Int): Double =
@@ -332,14 +394,13 @@ object PolJobOracle {
     }
   }
 
-  def pool(rel: String, text: String, dim: Seq[DimRow]): Pool = {
-    val name = rel.split('/').last
-    val parts = name.replace(".pol", "").split("_")
-    val (poolId, poolType) = (parts.lift(1), parts.lift(2))
-    val ws = wins(text)
+  /** (rtp, volatility, hit frequency) of a pool's wins `ws` at bet
+    * `minBet`; all None without a positive bet or without a line.
+    */
+  def metrics(ws: Seq[Long], minBet: Option[Double])
+      : (Option[Double], Option[Double], Option[Double]) = {
     val n = ws.size
-    val rows = poolId.fold(Seq.empty[DimRow])(resolve(_, dim))
-    val bet = rows.headOption.map(_.bet).filter(b => b > 0 && n > 0)
+    val bet = minBet.filter(b => b > 0 && n > 0)
     val rtp = bet.map(b => bround(ws.sum.toDouble / (n * b) * 100, 2))
     val hit = bet.map(_ => bround(ws.count(_ > 0).toDouble / n * 100, 2))
     val vol = for (b <- bet; r <- rtp) yield {
@@ -348,6 +409,16 @@ object PolJobOracle {
       }
       bround(1.645 * math.sqrt(terms.sum.toDouble), 2)
     }
+    (rtp, vol, hit)
+  }
+
+  def pool(rel: String, text: String, dim: Seq[DimRow]): Pool = {
+    val name = rel.split('/').last
+    val parts = name.replace(".pol", "").split("_")
+    val (poolId, poolType) = (parts.lift(1), parts.lift(2))
+    val ws = wins(text)
+    val rows = poolId.fold(Seq.empty[DimRow])(resolve(_, dim))
+    val (rtp, vol, hit) = metrics(ws, rows.headOption.map(_.bet))
     val long = poolType.exists(_.length > 4)
     val flat = long && poolType.exists(_.startsWith("4"))
     val tags = poolType match {
@@ -358,7 +429,7 @@ object PolJobOracle {
     }
     Pool(rel, name, rel.split('/').init.mkString("/"), poolId, poolType,
       rows.map(_.gameId), rows.headOption.map(_.bet), rows.headOption.flatMap(_.mwf),
-      rtp, vol, hit, n.toLong, tags, flat, if (flat) poolType.map(_.takeRight(4)) else None)
+      rtp, vol, hit, ws.size.toLong, tags, flat, if (flat) poolType.map(_.takeRight(4)) else None)
   }
 
   /** `_pipeline_summary.json` for one run over `pools`. */

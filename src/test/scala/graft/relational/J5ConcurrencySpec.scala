@@ -33,4 +33,20 @@ class J5ConcurrencySpec extends AnyFunSuite {
       assert(got == want, s"concurrent j5 at $d diverged from serial")
     }
   }
+
+  test("reapJ5 deletes this process's warehouses and forensics logs, nothing else") {
+    import java.nio.file.Files
+    val tmp = Files.createTempDirectory("graft_j5_reap")
+    val mine = Seq("graft_cat_wh__a_tok1", "graft_cat_wh__b_tok1")
+    mine.foreach { w =>
+      Files.createDirectories(tmp.resolve(w).resolve("default/t"))
+      Files.writeString(tmp.resolve(w).resolve("default/t/part-0"), "x")
+      Files.writeString(tmp.resolve(s"$w.j5_forensics.log"), "line\n")
+    }
+    val others = Seq("graft_cat_wh__a_tok2", "graft_cat_wh__a_tok2.j5_forensics.log",
+      "graft_kmeans_tok1", "graft_cat_wh__a_tok1x")
+    others.foreach(o => Files.writeString(tmp.resolve(o), "keep"))
+    JoinQueries.reapJ5(tmp.toFile, "tok1")
+    assert(tmp.toFile.list().toSet == others.toSet)
+  }
 }
