@@ -81,6 +81,41 @@ object JoinQueries {
         col("user_id"), nBuckets = 16)
     } + "/tbl"
 
+  /** Versions (1, 3] of the staged table's change feed, read through
+    * `format("graft")`: the DSv2 per-changed-bucket hash diff
+    * ([[graft.sources.GraftChangesTable]]). The key is stated because
+    * mergeDelta's manifests may predate the recorded-keycol header.
+    */
+  private def stagedChanges(s: SparkSession, table: String): DataFrame =
+    s.read.format("graft")
+      .option("changesFrom", "1").option("changesTo", "3")
+      .option("changeKey", "user_id")
+      .load(table)
+
+  private val stagedWarehouses =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** Registers the staged change table as `<cat>.default.cdc` and
+    * returns `<cat>`, for the feed's NAME faces (j6, t12). The catalog
+    * name carries the staging key, and its warehouse is per-process
+    * scratch, one per staged table, so the published artifact is never
+    * written after publish. The session caches the catalog instance
+    * by name (the r22 lesson), so the warehouse is made once and
+    * reused by every later call in this JVM.
+    */
+  private[graft] def stagedChangeCatalog(
+      s: SparkSession, table: String): String = {
+    val root = new java.io.File(table).getParentFile
+    val cat = ("gcdc_" + root.getName).replaceAll("[^A-Za-z0-9_]", "_")
+    val wh = stagedWarehouses.computeIfAbsent(table,
+      _ => graft.util.TempDirs.scratch("graft_cdc_wh_"))
+    s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
+    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    s.sql(s"CREATE TABLE IF NOT EXISTS $cat.default.cdc " +
+      s"USING graft LOCATION '$table'")
+    cat
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // J1 — lookup equi-join: per-pool fact rolled up, broadcast dim,
     // first(bet)/collect(game_ids) analog (sorted for determinism).
@@ -112,20 +147,22 @@ object JoinQueries {
     // of a separate log): version 1 upserts the even-event per-user
     // aggregate, version 2 MERGEs in the odd-event delta, version 3
     // deletes every user_id % 7 == 0 — then the feed reads versions
-    // (1, 3] and classifies insert / update_preimage /
-    // update_postimage / delete per key. Scale: each version diff
-    // reads ONLY buckets whose file sets changed (manifest compare —
-    // ChangeFeedSpec pins the pruning), so feed cost tracks the
-    // delta, never the table; unchanged rows inside rewritten buckets
-    // are killed by a null-safe struct compare. DECIMAL(38,2) sums
-    // keep every image bit-equal to the oracle's set algebra.
+    // (1, 3] through format("graft") and classifies insert /
+    // update_preimage / update_postimage / delete per key. Scale: each
+    // version step plans one input partition per bucket whose file set
+    // changed (a manifest compare: ChangeFeedSpec pins changedBuckets,
+    // GraftChangesNameSpec the partition plan), so feed cost tracks
+    // the delta, never the table; unchanged rows inside rewritten
+    // buckets are dropped by the partition reader's hash diff.
+    // DECIMAL(38,2) sums keep every image bit-equal to the oracle's
+    // set algebra.
     "j3_change_feed" -> ((s, d) => {
       val table = stagedChangeTable(s, d)
-      graft.pol.ChangeFeed.readTableChanges(s, table, 1L, 3L, col("user_id"))
+      stagedChanges(s, table)
         .select(col("user_id"), col("n_events"),
           col("sum_val").cast("double").as("sum_val"),
-          col(graft.pol.ChangeFeed.ChangeTypeCol),
-          col(graft.pol.ChangeFeed.CommitVersionCol))
+          col(graft.sources.GraftChanges.ChangeTypeCol),
+          col(graft.sources.GraftChanges.CommitVersionCol))
         .orderBy("_commit_version", "_change_type", "user_id")
     }),
 
@@ -149,10 +186,9 @@ object JoinQueries {
         .agg(count(lit(1)).as("n_users"),
           sum(col("n_events")).as("n_events"),
           sum(col("sum_val")).cast("decimal(38,2)").as("sum_val"))
-      val signed = graft.pol.ChangeFeed
-        .readTableChanges(s, table, 1L, 3L, col("user_id"))
+      val signed = stagedChanges(s, table)
         .withColumn("sign",
-          when(col(graft.pol.ChangeFeed.ChangeTypeCol)
+          when(col(graft.sources.GraftChanges.ChangeTypeCol)
             .isin("insert", "update_postimage"), 1L).otherwise(-1L))
         .groupBy((col("user_id") % 10).as("grp"))
         .agg(sum(col("sign")).as("n_users"),
@@ -505,23 +541,13 @@ object JoinQueries {
     // J6 — J3's change feed through the NAME face: the staged keyed
     // table registers as an external catalog table and the feed reads
     // as the `.changes` SUB-TABLE (`<cat>.default.cdc.changes`, the
-    // Iceberg metadata-table addressing) — a DSv2 batch scan whose
-    // input partitions are per-changed-bucket hash-diff readers
-    // (GraftChangesSource), not j3's driver-assembled join plan.
-    // Same oracle as J3: one derived feed, two engine faces, both
-    // row-identical to the relational recomputation — and the v2
-    // face is the one `readStream.table` serves, so this row also
-    // oracle-gates the streaming-by-name read path's diff kernel.
+    // Iceberg metadata-table addressing). The catalog resolves the
+    // same DSv2 change-feed table j3 reads by path, so this row pins
+    // the name resolution and the sub-table addressing; same oracle as
+    // J3. The v2 face is the one `readStream.table` serves, so this
+    // row also oracle-gates the streaming-by-name read path.
     "j6_changes_by_name" -> ((s, d) => {
-      val table = stagedChangeTable(s, d)
-      val root = new java.io.File(table).getParentFile
-      // catalog name carries the staging key (the r22
-      // lesson: CatalogManager caches instances by name forever)
-      val cat = ("gq6_" + root.getName).replaceAll("[^A-Za-z0-9_]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$root/wh6")
-      s.sql(s"CREATE TABLE IF NOT EXISTS $cat.default.cdc " +
-        s"USING graft LOCATION '$table'")
+      val cat = stagedChangeCatalog(s, stagedChangeTable(s, d))
       s.read
         .option("startingVersion", "1").option("endingVersion", "3")
         // staged by mergeDelta, whose manifests may predate the
@@ -530,8 +556,8 @@ object JoinQueries {
         .table(s"$cat.default.cdc.changes")
         .select(col("user_id"), col("n_events"),
           col("sum_val").cast("double").as("sum_val"),
-          col(graft.pol.ChangeFeed.ChangeTypeCol),
-          col(graft.pol.ChangeFeed.CommitVersionCol))
+          col(graft.sources.GraftChanges.ChangeTypeCol),
+          col(graft.sources.GraftChanges.CommitVersionCol))
         .orderBy("_commit_version", "_change_type", "user_id")
     }),
 

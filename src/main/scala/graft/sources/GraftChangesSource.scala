@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.pol.{ChangeFeed, PoolJsonSink}
+import graft.pol.PoolJsonSink
 import graft.pol.PoolJsonSink.TableManifest
 
 /** A graft table's row-level change feed as a DSv2 table: the
@@ -41,17 +41,25 @@ import graft.pol.PoolJsonSink.TableManifest
   *    bucket-sized, not table-sized — the same bound every d*-family
   *    operator leans on.
   *
-  * Parity contract with the DataFrame reference implementation
-  * ([[ChangeFeed.readTableChanges]], pinned by GraftChangesNameSpec
-  * and ChangesDiffPropertySpec): same schema (data columns sorted
-  * by name + `_change_type` + `_commit_version`), same change
-  * classification (insert / delete / update_preimage+postimage),
-  * same per-version stepping over the on-disk manifest line. One
-  * deliberate divergence: rows compare as UNSAFE-ROW BYTES here vs
-  * null-safe struct equality there — byte comparison can emit an
-  * update for a bit-level float change (±0.0, NaN payloads) that SQL
-  * equality calls equal. Conservative: it may restate a row, it can
-  * never miss a change.
+  * This is the engine's only row diff. Its parity contract is held
+  * by a plain DataFrame oracle on the test side (`ChangeFeedOracle`,
+  * a driver-assembled full-outer join per version pair, checked by
+  * GraftChangesNameSpec and ChangesDiffPropertySpec): same schema
+  * (data columns sorted by name + `_change_type` +
+  * `_commit_version`), same change classification (insert / delete /
+  * update_preimage+postimage), same per-version stepping over the
+  * on-disk manifest line. One deliberate divergence: rows compare as
+  * UNSAFE-ROW BYTES here vs null-safe struct equality in the oracle —
+  * byte comparison can emit an update for a bit-level float change
+  * (±0.0, NaN payloads) that SQL equality calls equal. Conservative:
+  * it may restate a row, it can never miss a change.
+  *
+  * Reference anchor: the reference keeps a processed-files ledger and
+  * re-derives "what changed" by comparing against it
+  * (etl/extract.py:161-211); this is that idea applied to ROWS of the
+  * keyed store, with the committed manifests as the ledger — no
+  * separate log is written, and vacuum's retention window is the
+  * feed's replay horizon.
   *
   * Schema across versions is FIXED at scan/stream construction (the
   * head manifest's recorded schema): older files null-fill evolved
@@ -245,6 +253,17 @@ object GraftChanges {
   val CdcMode = "cdc"
   val RowsMode = "rows"
 
+  val ChangeTypeCol = "_change_type"
+  val CommitVersionCol = "_commit_version"
+
+  /** Bucket ids whose file sets differ between two manifests — the
+    * only buckets a version diff must read.
+    */
+  def changedBuckets(m0: TableManifest, m1: TableManifest): Seq[Long] =
+    (m0.buckets.keySet ++ m1.buckets.keySet).toSeq.sorted.filter { b =>
+      m0.buckets.getOrElse(b, Nil).toSet != m1.buckets.getOrElse(b, Nil).toSet
+    }
+
   /** Data columns (stored schema minus `__pt`), FILE order — what the
     * parquet read closure is built against.
     */
@@ -265,9 +284,9 @@ object GraftChanges {
   def changesSchema(data: StructType): StructType =
     StructType(
       data.fields.sortBy(_.name).map(_.copy(nullable = true)).toSeq :+
-        StructField(ChangeFeed.ChangeTypeCol, StringType,
+        StructField(ChangeTypeCol, StringType,
           nullable = false) :+
-        StructField(ChangeFeed.CommitVersionCol, LongType,
+        StructField(CommitVersionCol, LongType,
           nullable = false))
 
   /** Partitions for versions (`from`, `to`]: per on-disk version step,
@@ -311,7 +330,7 @@ object GraftChanges {
       tableDir: String, prev: Option[TableManifest], m: TableManifest,
       v: Long): Seq[InputPartition] = {
     val base = prev.getOrElse(TableManifest(0L, Map.empty))
-    val changed = ChangeFeed.changedBuckets(base, m)
+    val changed = changedBuckets(base, m)
     def filesOf(mm: TableManifest, b: Long): Seq[(String, Long)] =
       mm.buckets.getOrElse(b, Nil).map { rel =>
         val f = new java.io.File(tableDir, rel)

@@ -443,14 +443,8 @@ object StreamingQueries {
     // contract, two addressing faces, both row-identical to the
     // relational recomputation.
     "t12_stream_changes_by_name" -> ((s, d) => {
-      val table = graft.relational.JoinQueries.stagedChangeTable(s, d)
-      val root = new java.io.File(table).getParentFile
-      // catalog name carries the staging key (the r22 lesson)
-      val cat = ("gt12_" + root.getName).replaceAll("[^A-Za-z0-9_]", "_")
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$root/wh12")
-      s.sql(s"CREATE TABLE IF NOT EXISTS $cat.default.cdc " +
-        s"USING graft LOCATION '$table'")
+      val cat = graft.relational.JoinQueries.stagedChangeCatalog(s,
+        graft.relational.JoinQueries.stagedChangeTable(s, d))
       val name = s"graft_stream_${sinkId.incrementAndGet()}"
       runToCompletion(s)(
         s.readStream

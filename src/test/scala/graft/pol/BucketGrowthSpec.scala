@@ -88,12 +88,16 @@ class BucketGrowthSpec extends AnyFunSuite {
       (0 until 50).map(i => (s"k$i", i.toLong)).toDF("k", "v"),
       col("k"), nBuckets = 2)
     PoolJsonSink.splitBuckets(spark, dir, col("k"))
-    assert(ChangeFeed.readTableChanges(spark, dir, 1, 2, col("k")).isEmpty)
+    def changes(from: Long, to: Long) = spark.read.format("graft")
+      .option("changesFrom", from.toString).option("changesTo", to.toString)
+      .option("changeKey", "k").load(dir)
+    assert(changes(1, 2).isEmpty)
     // and a post-split upsert feeds normally
     PoolJsonSink.upsertPartitioned(spark, dir,
       Seq(("k1", -1L)).toDF("k", "v"), col("k"), nBuckets = 4)
-    val ch = ChangeFeed.readTableChanges(spark, dir, 2, 3, col("k"))
-      .select(ChangeFeed.ChangeTypeCol).as[String].collect().sorted
+    val ch = changes(2, 3)
+      .select(graft.sources.GraftChanges.ChangeTypeCol).as[String]
+      .collect().sorted
     assert(ch.toSeq == Seq("update_postimage", "update_preimage"))
   }
 }

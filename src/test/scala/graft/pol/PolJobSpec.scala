@@ -183,10 +183,12 @@ class PolJobSpec extends AnyFunSuite {
     val root = repo.resolve("pools")
     val text = files(corpus).toMap
     val t0 = FileTime.fromMillis(1700000000000L)
+    // the non-ASCII name needs the UTF-8 locale build.sbt gives the test JVM
     val odd = Seq(
       "group 1/Pool_0101_100%x.pol" -> text("grp_a/Pool_0101_100.pol"),
       "100% b/Pool_0102_395.pol" -> text("grp_a/Pool_0102_395.pol"),
-      "a+b/Pool_0104_41000.pol" -> text("grp_b/Pool_0104_41000.pol"))
+      "a+b/Pool_0104_41000.pol" -> text("grp_b/Pool_0104_41000.pol"),
+      "gré/Pool_0103_50012.pol" -> text("grp_b/Pool_0103_50012.pol"))
     odd.foreach { case (rel, t) => put(root, rel, t, t0) }
     def git(cmd: String*): Unit =
       assert(Process("git" +: cmd, repo.toFile).!(ProcessLogger(_ => ())) == 0, cmd)
@@ -197,7 +199,7 @@ class PolJobSpec extends AnyFunSuite {
     val rels = odd.map(_._1).sorted
 
     val full = Files.createTempDirectory("poljob_paths_full")
-    assert(PolMain.run(spark, Seq(root.toString, lookup, full.toString)) == 3)
+    assert(PolMain.run(spark, Seq(root.toString, lookup, full.toString)) == 4)
     val first = pools(root)
     assert(first.values.forall(_.size > 0))
     assertDocs(full, rels, first)
@@ -206,7 +208,7 @@ class PolJobSpec extends AnyFunSuite {
     val out = repo.resolve("out")
     val ledger = Seq(root.toString, lookup, out.toString,
       "--ledger", repo.resolve("ledger").toString)
-    assert(PolMain.run(spark, ledger) == 3)
+    assert(PolMain.run(spark, ledger) == 4)
     val modified = "group 1/Pool_0101_100%x.pol"
     put(root, modified, text("grp_a/Pool_0101_100.pol") + "9 TB1\n",
       FileTime.fromMillis(1700000060000L))

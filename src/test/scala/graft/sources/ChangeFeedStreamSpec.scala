@@ -82,6 +82,44 @@ class ChangeFeedStreamSpec extends AnyFunSuite {
       ("d", "v4d", "insert", 4L)))
   }
 
+  test("a consumer that fails on a version gets that version again, " +
+    "and nothing before it, after a restart") {
+    val table = freshDir("graft_cfs4") + "/tbl"
+    val ckpt = freshDir("graft_cfs4_ckpt")
+    PoolJsonSink.upsertPartitioned(spark, table,
+      Seq(("a", "v1a")).toDF("k", "payload"), col("k"), nBuckets = 2)
+    PoolJsonSink.upsertPartitioned(spark, table,
+      Seq(("b", "v2b")).toDF("k", "payload"), col("k"), nBuckets = 2)
+
+    val crashOn = new java.util.concurrent.atomic.AtomicLong(2L)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Set[Long]]()
+    def run(): Unit = spark.readStream.format("graft")
+      .option("changeKey", "k").option("maxVersionsPerTrigger", "1")
+      .load(table)
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        val versions = df.select("_commit_version").as[Long].collect().toSet
+        if (versions.contains(crashOn.get())) sys.error("consumer crash")
+        seen.add(versions); ()
+      }
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+
+    import scala.jdk.CollectionConverters._
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+    assert(seen.asScala.toSeq == Seq(Set(1L)))
+
+    // version 3 lands while the stream is down; the restart re-delivers
+    // the failed version 2, then 3, and never version 1 again
+    PoolJsonSink.deletePartitioned(spark, table,
+      Seq("a").toDF("k"), col("k"), nBuckets = 2)
+    crashOn.set(-1L)
+    seen.clear()
+    run()
+    assert(seen.asScala.toSeq == Seq(Set(2L), Set(3L)))
+  }
+
   test("startingVersion skips history (latest-style subscription)") {
     val table = freshDir("graft_cfs2") + "/tbl"
     val ckpt = freshDir("graft_cfs2_ckpt")

@@ -5,14 +5,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.QueryHarness.spark
-import graft.pol.{ChangeFeed, PoolJsonSink}
+import graft.pol.PoolJsonSink
 
 /** Randomized parity: for arbitrary commit sequences (upserts and
   * deletes over a small key domain, so collisions/updates/carried
-  * rows all occur constantly), the v2 partition-reader diff must
-  * produce row-for-row the v1 derived feed's output for EVERY
-  * version range — the property that makes the two faces one
-  * operator. Seeded RNG: failures reproduce.
+  * rows all occur constantly), the partition-reader diff must
+  * produce row-for-row the test oracle's output
+  * ([[ChangeFeedOracle.readTableChanges]]) for EVERY version range,
+  * through both addressing faces: the `.changes` sub-table by name and
+  * `format("graft")` by path. Seeded RNG: failures reproduce.
   */
 class ChangesDiffPropertySpec extends AnyFunSuite {
   import spark.implicits._
@@ -60,15 +61,23 @@ class ChangesDiffPropertySpec extends AnyFunSuite {
     val head = PoolJsonSink.readManifest(dir).get.version
     // every (from, to] range, both faces, row-for-row
     for (from <- 0L until head; to <- (from + 1) to head) {
-      val v1 = ChangeFeed.readTableChanges(spark, dir, from, to, col("k"))
-      val v2 = spark.read
+      val v1 = ChangeFeedOracle.readTableChanges(spark, dir, from, to, col("k"))
+      val byName = spark.read
         .option("startingVersion", from.toString)
         .option("endingVersion", to.toString)
         .table("gpp.default.p.changes")
-      val (s1, s2) = (asRows(v1), asRows(v2))
-      assert(s1 == s2,
-        s"range ($from, $to]: v1 minus v2 = ${s1.diff(s2)}, " +
-          s"v2 minus v1 = ${s2.diff(s1)}")
+      val byPath = spark.read.format("graft")
+        .option("changesFrom", from.toString)
+        .option("changesTo", to.toString)
+        .option("changeKey", "k")
+        .load(dir)
+      val s1 = asRows(v1)
+      Seq("name" -> byName, "path" -> byPath).foreach { case (face, v2) =>
+        val s2 = asRows(v2)
+        assert(s1 == s2,
+          s"$face face, range ($from, $to]: v1 minus v2 = ${s1.diff(s2)}, " +
+            s"v2 minus v1 = ${s2.diff(s1)}")
+      }
     }
   }
 }

@@ -6,12 +6,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.QueryHarness.spark
-import graft.pol.{ChangeFeed, PoolJsonSink}
+import graft.pol.PoolJsonSink
 
 /** Streaming (and batch) BY NAME: the `.changes` sub-table resolves
   * through the catalog, serves the change feed as a DSv2 micro-batch
-  * stream with version offsets, and its rows are pinned to the v1
-  * derived feed ([[ChangeFeed.readTableChanges]]) — same schema, same
+  * stream with version offsets, and its rows are pinned to the test
+  * oracle ([[ChangeFeedOracle.readTableChanges]]) — same schema, same
   * classification, same versions.
   */
 class GraftChangesNameSpec extends AnyFunSuite {
@@ -54,7 +54,7 @@ class GraftChangesNameSpec extends AnyFunSuite {
     val dir = mkTable("t1")
     commits(dir)
     val byName = spark.read.table("gch.default.t1.changes")
-    val v1 = ChangeFeed.readTableChanges(
+    val v1 = ChangeFeedOracle.readTableChanges(
       spark, dir, 0L, PoolJsonSink.readManifest(dir).get.version, col("k"))
     assert(byName.schema.fieldNames.toSeq == v1.schema.fieldNames.toSeq)
     assert(asSet(byName) == asSet(v1))
@@ -68,7 +68,7 @@ class GraftChangesNameSpec extends AnyFunSuite {
     commits(dir)
     val tail = spark.read.option("startingVersion", "3")
       .table("gch.default.t2.changes")
-    val v1 = ChangeFeed.readTableChanges(
+    val v1 = ChangeFeedOracle.readTableChanges(
       spark, dir, 3L, PoolJsonSink.readManifest(dir).get.version, col("k"))
     assert(asSet(tail) == asSet(v1))
     assert(asSet(tail).map(_._4) == Set(4L))
