@@ -19,21 +19,31 @@ import org.apache.spark.sql.types._
   * order is part of the semantics and is preserved via an explicit
   * `row_idx`.
   *
-  * Resolution runs on the driver: the dimension is a handful of rows
-  * and the pool ids are one per file (no more than the documents the
-  * sink collects anyway), so the fallback is plain Scala over both and
-  * the result is a local relation the per-file rows broadcast-join on
-  * a plain equi-key. The line-level fact stream is never touched.
+  * Everything here runs on the driver. The dimension is a handful of
+  * rows, read from its CSV or xlsx into a local relation; the pool ids
+  * are one per file (no more than the documents the sink collects
+  * anyway), so the fallback is plain Scala over both and the result is
+  * a local relation the per-file rows broadcast-join on a plain
+  * equi-key. Loading and resolving launch no Spark job, and the
+  * line-level fact stream is never touched.
   */
 object GameLookup {
 
-  /** Normalize a raw header-named dimension frame (all-string columns
-    * Game, Game_id, Pool_id, Bet [, Max_win_factor]) to the resolved
-    * schema. `row_idx` pins workbook row order (single partition →
-    * encounter order).
+  /** The dimension from its header and rows in file order (all
+    * strings: Game, Game_id, Pool_id, Bet [, Max_win_factor]),
+    * normalized to the resolved schema. `row_idx` is a row's index in
+    * the file, which pins workbook row order. Built on the driver as a
+    * local relation: reading it and resolving against it launch no
+    * Spark job.
     */
-  private def normalize(raw: DataFrame): DataFrame = {
-    val df = raw.coalesce(1)
+  private def fromRows(spark: SparkSession, header: Seq[String],
+      rows: Seq[Seq[String]]): DataFrame = {
+    val schema = StructType(header.map(StructField(_, StringType)) :+
+      StructField("row_idx", LongType))
+    val data = rows.zipWithIndex.map { case (r, i) =>
+      Row.fromSeq(header.indices.map(j => if (j < r.length) r(j) else null) :+ i.toLong)
+    }
+    val df = spark.createDataFrame(data.asJava, schema)
     val withMwf =
       if (df.columns.contains("Max_win_factor")) df
       else df.withColumn("Max_win_factor", lit(null).cast("string"))
@@ -43,14 +53,36 @@ object GameLookup {
       col("Pool_id").cast("string").as("pool_id_dim"),
       col("Bet").cast("double").as("bet"),
       col("Max_win_factor").cast("double").as("max_win_factor"),
-      monotonically_increasing_id().as("row_idx"))
+      col("row_idx"))
   }
 
   /** Load the dimension from a CSV fixture (offline stand-in for the
-    * xlsx, SURVEY §1.2).
+    * xlsx, SURVEY §1.2). The handful of rows is read on the driver
+    * through the path's Hadoop `FileSystem` and parsed with univocity
+    * under Spark's CSV read defaults with a header: lines split at
+    * `\n`, `\r\n` or `\r`, blank lines skipped, header names made
+    * safe as Spark makes them, an empty field read as null, a short row
+    * padded with nulls and a long one cut to the header.
     */
-  def fromCsv(spark: SparkSession, path: String): DataFrame =
-    normalize(spark.read.option("header", "true").csv(path))
+  def fromCsv(spark: SparkSession, path: String): DataFrame = {
+    import org.apache.spark.sql.catalyst.csv.CSVOptions
+    import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+    val file = new org.apache.hadoop.fs.Path(path)
+    val in = file.getFileSystem(spark.sessionState.newHadoopConf()).open(file)
+    val text = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+      finally in.close()
+    val options = new CSVOptions(Map("header" -> "true"), false,
+      spark.sessionState.conf.sessionLocalTimeZone)
+    val parser = new com.univocity.parsers.csv.CsvParser(options.asParserSettings)
+    val lines = CSVUtils.filterCommentAndEmpty(
+      text.stripPrefix("\uFEFF").lines().iterator().asScala, options)
+      .map(parser.parseLine).toSeq
+    require(lines.nonEmpty, s"no header in $path")
+    val header = CSVUtils.makeSafeHeader(lines.head,
+      spark.sessionState.conf.caseSensitiveAnalysis, options).toSeq
+    fromRows(spark, header, lines.tail.map(_.toSeq.map(t =>
+      if (t == options.nullValue) null else t)))
+  }
 
   /** Load the dimension straight from the reference's `.xlsx` workbook
     * (S5: `etl/transform.py:27-58` loads `game_id_to_pools.xlsx`).
@@ -64,12 +96,7 @@ object GameLookup {
   def fromXlsx(spark: SparkSession, path: String): DataFrame = {
     val rows = Xlsx.readRows(path)
     require(rows.nonEmpty, s"empty worksheet in $path")
-    val header = rows.head.map(h => Option(h).getOrElse(""))
-    val schema = StructType(header.map(StructField(_, StringType)))
-    val data = rows.tail.map { r =>
-      Row.fromSeq(header.indices.map(i => if (i < r.length) r(i) else null))
-    }
-    normalize(spark.createDataFrame(data.asJava, schema))
+    fromRows(spark, rows.head.map(h => Option(h).getOrElse("")), rows.tail)
   }
 
   /** Load the dimension from either artifact kind by extension — the

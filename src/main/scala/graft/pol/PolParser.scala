@@ -14,10 +14,12 @@ import org.apache.spark.sql.functions._
   *     parseable; second token is a free-text type code.
   *
   * Spark-first: `spark.read.text` keeps the scan declarative (file
-  * pruning, parallel splits); parsing is pure Catalyst expressions
-  * (`split`/`get`/`try_cast`) so the whole stage is codegen'd — no UDFs.
-  * ANSI-safe: `try_cast` instead of `cast`, `get()` instead of
-  * `element_at` (driver sessions run with Spark 4 ANSI defaults).
+  * pruning, parallel splits); the line stage is codegen'd native
+  * Catalyst expressions, no UDFs, and does per-line work only: the
+  * value is parsed where the line's bytes lie
+  * ([[graft.functions.PolLineWin]]), the type code is built only by
+  * plans that read it, and the path metadata is derived once per file
+  * ([[graft.functions.PolPathMeta]]).
   */
 object PolParser {
 
@@ -46,28 +48,16 @@ object PolParser {
     new java.io.File(p).getAbsolutePath.stripSuffix("/")
 
   /** Relative-path + folder metadata columns from an absolute-path
-    * column `abs_path` (shared by the line readers and [[listFiles]]).
-    * A line scan's path is a URI, percent-encoded (`group%201/`);
-    * [[listFiles]]' is already decoded. A URI is decoded here, keeping
-    * `+` literal (form decoding would turn it into a space), so both
-    * give the same `relative_path` for a file. Only a URI holding a `%`
-    * changes when decoded; the cheap `contains` test keeps the decode
-    * off the per-line cost of every other file.
+    * column `abs_path` (shared by the line readers and [[listFiles]]):
+    * [[graft.functions.PolPathMeta]], which decodes a scan's URI path
+    * and derives the columns once per file.
     */
-  def pathMeta(df: DataFrame, baseDir: String): DataFrame = {
-    val abs = col("abs_path")
-    val path = when(abs.contains("%") && abs.rlike("^[A-Za-z][A-Za-z0-9+.-]*:"),
-        url_decode(regexp_replace(abs, "\\+", "%2B")))
-      .otherwise(abs)
-    val rel = regexp_replace(
-      regexp_replace(path, "^file:/*", "/"),
-      "^" + java.util.regex.Pattern.quote(baseDir) + "/", "")
-    df.withColumn("relative_path", rel)
-      .withColumn("folder_path",
-        when(col("relative_path").contains("/"),
-          regexp_replace(col("relative_path"), "/[^/]*$", ""))
-          .otherwise(lit("")))
-      .withColumn("parent_folder", substring_index(col("folder_path"), "/", -1))
+  def pathMeta(df: DataFrame, baseDir: String): DataFrame =
+    withPathMeta(df, baseDir, "relative_path", "folder_path", "parent_folder")
+
+  private def withPathMeta(df: DataFrame, baseDir: String, names: String*): DataFrame = {
+    val meta = graft.functions.PolPathMeta(col("abs_path"), baseDir)
+    names.foldLeft(df)((d, n) => d.withColumn(n, meta.getField(n)))
   }
 
   /** S1 as a FILE-level relation: one row per discovered `.pol`. This
@@ -139,8 +129,8 @@ object PolParser {
       driverListed.unionByName(
         spark.createDataFrame(listed).toDF("abs_path", "size_bytes", "modified_ts"))
     }
-    pathMeta(all, normalize(base.getOrElse(root)))
-      .withColumn("file_name", substring_index(col("relative_path"), "/", -1))
+    withPathMeta(all, normalize(base.getOrElse(root)),
+        "relative_path", "file_name", "folder_path", "parent_folder")
       .select("relative_path", "file_name", "folder_path", "parent_folder",
         "size_bytes", "modified_ts")
   }
@@ -153,16 +143,16 @@ object PolParser {
   /** The P1 line-parse as reusable expressions over a raw line column:
     * (game_win — null when the first token isn't an integer, type_code).
     * A parseable third token is added to the value; extra tokens
-    * ignored. Backed by the native one-pass
-    * [[graft.functions.PolLineParse]] kernel (same `UTF8String.toLong`
-    * accept/reject semantics as the composed `split`/`try_cast` form —
-    * PolLineParseSpec pins the equality; codegen, no regex, stops at
-    * the third token).
+    * ignored. game_win is [[graft.functions.PolLineWin]], which parses
+    * the line's bytes in place and allocates nothing; type_code is
+    * [[graft.functions.PolLineParse]]'s, so a plan that drops it never
+    * builds it. Both have the composed `split`/`try_cast` form's
+    * `UTF8String.toLong` accept/reject semantics (FunctionsSpec pins
+    * the equality; codegen, no regex, stops at the third token).
     */
-  def parseLine(line: Column): (Column, Column) = {
-    val p = graft.functions.PolLineParse(line)
-    (p.getField("game_win"), p.getField("type_code"))
-  }
+  def parseLine(line: Column): (Column, Column) =
+    (graft.functions.PolLineParse.win(line),
+      graft.functions.PolLineParse(line).getField("type_code"))
 
   /** The composed-builtins formulation (spec reference; the `trim`
     * variant drops tab-led lines that Python keeps — the native kernel
@@ -261,8 +251,8 @@ object PolParser {
       }
     }(Encoders.row(outSchema))
 
-    pathMeta(lines, baseDir)
-      .withColumn("file_name", substring_index(col("relative_path"), "/", -1))
+    withPathMeta(lines, baseDir,
+      "relative_path", "folder_path", "parent_folder", "file_name")
   }
 
   /** The reference's per-file decode chain: strict utf-8 \u2192 latin-1 \u2192

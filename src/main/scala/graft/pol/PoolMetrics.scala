@@ -30,7 +30,13 @@ import org.apache.spark.sql.functions._
   * file carrying the histogram as an array; volatility is a map-only
   * fold over that array, and the lookup, resolved on the driver, is
   * broadcast onto those rows. A 100 TB corpus reduces to
-  * |files|·|distinct wins| rows after the first shuffle.
+  * |files|·|distinct wins| rows after the first shuffle. The per-file
+  * frame ends in ONE partition: it holds one row per file, no more
+  * than the documents the sink collects to the driver anyway, and a
+  * single partition lets the sorted collect and the global summary
+  * run without another exchange. The finished rows, histogram dropped,
+  * are exchanged into it (`repartition(1)`, not `coalesce(1)`), so the
+  * per-file aggregate above stays parallel.
   */
 object PoolMetrics {
 
@@ -74,8 +80,8 @@ object PoolMetrics {
     *               null metrics — the reference builds a document for
     *               every DISCOVERED file and counts it in the summary,
     *               not just for files that parsed.
-    * @return one row per file: identity, lookup fields, rtp/volatility/
-    *         hit_frequency, classification, size
+    * @return one row per file, in one partition: identity, lookup
+    *         fields, rtp/volatility/hit_frequency, classification, size
     */
   def perPool(parsed: DataFrame, dim: DataFrame,
       files: Option[DataFrame] = None): DataFrame = {
@@ -135,6 +141,7 @@ object PoolMetrics {
       .withColumn("tag_is_scalar", tagIsScalar(col("pool_type")))
       .withColumn("is_flat", isFlat)
       .withColumn("max_multiplier", maxMult)
+      .repartition(1)
   }
 
   /** Assemble the nested per-pool document (SURVEY §1.4 shape).

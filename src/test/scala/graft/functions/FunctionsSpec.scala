@@ -261,6 +261,45 @@ class FunctionsSpec extends AnyFunSuite {
       (Some(5L), Some("TB1")), (Some(10L), Some("TB2")), (None, None)))
   }
 
+  test("PolLineWin equals PolLineParse's game_win and the split/try_cast formulation") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val spaced = Seq("5 TB1", "7 TB1 3", "-4 TF1", "+9 T 2", "xx TB1",
+      "5.0 TB2", "12 34 56 78", "", "   ", "42", "1 zz xx", "0 T -7",
+      "007 T", "1_0 T", "9223372036854775807 T", "-9223372036854775808 T",
+      "99999999999999999999 T", "- T", "+ T", "5 T 2.5",
+      "-9223372036854775808", "9223372036854775808", "+", "-", "007",
+      "1 T -9223372036854775808", "1 T 9223372036854775808", "é 5", "5 é 3")
+    val tabLed = Seq("\t5 TB1", " \t 7\tTB2\t3", "\n", "\t\t-3\t\tT\t4", "\f8\u000BT\r1")
+    // the documented wrap: win + a third column past Long's range wraps
+    // (the composed form's ANSI `+` throws instead)
+    val wrap = Seq("9223372036854775807 T 1", "-9223372036854775808 T -1")
+    val schema = StructType(Seq(StructField("value", StringType)))
+    // a local relation (folded on the driver, interpreted) and one RDD
+    // partition (generated code, fallback off so compile errors show)
+    def frames(lines: Seq[String]) = Seq(lines.toDF("value"), spark.createDataFrame(
+      spark.sparkContext.parallelize(lines.map(Row(_)), 1), schema))
+    def wins(df: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.Column) =
+      df.select(c).collect().map(r => Option(r.get(0))).toSeq
+    val (builtin, _) = PolParser.parseLineBuiltin(col("value"))
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      frames(spaced ++ tabLed ++ wrap).foreach { df =>
+        assert(wins(df, PolLineParse.win(col("value"))) ==
+          wins(df, PolLineParse(col("value")).getField("game_win")))
+      }
+      frames(spaced).foreach { df =>
+        assert(wins(df, PolLineParse.win(col("value"))) == wins(df, builtin))
+      }
+      // tab-led lines are where the trim/split form differs from Python
+      frames(tabLed ++ wrap).foreach { df =>
+        assert(wins(df, PolLineParse.win(col("value"))) == Seq(Some(5L), Some(10L), None,
+          Some(1L), Some(9L), Some(Long.MinValue), Some(Long.MaxValue)))
+      }
+    } finally spark.conf.unset("spark.sql.codegen.fallback")
+  }
+
   test("MinhashSignature interpreted eval equals codegen") {
     import org.apache.spark.sql.catalyst.util.ArrayData
     import org.apache.spark.sql.catalyst.expressions.Literal

@@ -102,6 +102,51 @@ class GameLookupSpec extends AnyFunSuite {
       Set(Some("0500")))
   }
 
+  /** Spark's own CSV read, normalized as the driver reader normalizes:
+    * the test oracle for [[GameLookup.fromCsv]].
+    */
+  private def sparkCsvRows(path: String): Seq[Seq[Any]] = {
+    val raw = spark.read.option("header", "true").csv(path)
+    val withMwf =
+      if (raw.columns.contains("Max_win_factor")) raw
+      else raw.withColumn("Max_win_factor", lit(null).cast("string"))
+    withMwf.select(col("Game"), col("Game_id").cast("string"),
+        col("Pool_id").cast("string"), col("Bet").cast("double"),
+        col("Max_win_factor").cast("double"))
+      .collect().map(_.toSeq).toSeq
+  }
+
+  /** The driver reader's rows in `row_idx` order, with `row_idx`
+    * checked to be the file-order index.
+    */
+  private def driverRows(path: String): Seq[Seq[Any]] = {
+    val rows = GameLookup.fromCsv(spark, path).collect().toSeq
+    assert(rows.map(_.getAs[Long]("row_idx")) == rows.indices.map(_.toLong))
+    rows.map(_.toSeq.dropRight(1))
+  }
+
+  test("the driver CSV reader equals Spark's CSV read on every lookup fixture") {
+    val dir = new java.io.File("src/test/resources/lookup")
+    val csvs = dir.listFiles().filter(_.getName.endsWith(".csv")).sortBy(_.getName)
+    assert(csvs.map(_.getName).contains("quirks_lookup.csv"))
+    csvs.foreach { f =>
+      assert(driverRows(f.getPath) == sparkCsvRows(f.getPath), f.getName)
+    }
+    // quoted comma, empty Bet, blank line, missing trailing column,
+    // CRLF line ends; Spark's CSV escape is `\`, not a doubled quote,
+    // so a field quoted that way is kept as written
+    assert(driverRows("src/test/resources/lookup/quirks_lookup.csv") == Seq(
+      Seq("Cash, Inc", "10", "0100", 2.5, 100.0),
+      Seq("NoBet", "11", "0101", null, 200.0),
+      Seq("Short", "12", "0102", 4.0, null),
+      Seq("\"Say \"\"hi\"\"\"", "13", "0103", 1.0, null)))
+  }
+
+  test("the lookup CSV loads from a file: URI") {
+    val f = new java.io.File("src/test/resources/lookup/fallback_lookup.csv")
+    assert(driverRows(f.getAbsoluteFile.toURI.toString) == driverRows(f.getPath))
+  }
+
   test("loadFromRoot probes the reference's three candidate locations") {
     // etl/transform.py:43-47: repo root, then config/, then data/
     val src = java.nio.file.Paths.get(

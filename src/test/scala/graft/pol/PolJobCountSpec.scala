@@ -4,6 +4,8 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.SpecBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
@@ -16,10 +18,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.QueryHarness.spark
 
 /** The pool job's fixed cost is its number of Spark jobs, not its data:
-  * on [[PolJobSpec]]'s corpus, the per-pool metrics and the summary must
-  * each stay within a handful of jobs, and no join may take the
-  * line-level stream as an input (only the per-file histogram, after an
-  * aggregate, may meet the file side).
+  * on [[PolJobSpec]]'s corpus, the per-pool metrics must stay within a
+  * handful of jobs, the lookup costs none, the sorted documents collect
+  * and the summary one each, and no join may take the line-level
+  * stream as an input (only the per-file histogram, after an aggregate,
+  * may meet the file side).
   */
 class PolJobCountSpec extends AnyFunSuite {
   private val corpus = "src/test/resources/pol_job"
@@ -84,7 +87,7 @@ class PolJobCountSpec extends AnyFunSuite {
     (parsed, dim, inventory)
   }
 
-  test("perPool's metrics take at most 8 jobs and join no line-level input") {
+  test("perPool's metrics take at most 6 jobs and join no line-level input") {
     val (parsed, dim, inventory) = pools()
     val (p, jobs, plans) = traced {
       val p = PoolMetrics.perPool(parsed, dim, Some(inventory)).persist()
@@ -93,23 +96,54 @@ class PolJobCountSpec extends AnyFunSuite {
     }
     try {
       info(s"$jobs jobs")
-      assert(jobs <= 8, s"perPool launched $jobs jobs")
+      assert(jobs <= 6, s"perPool launched $jobs jobs")
       val joins = plans.flatMap(nodes).collect { case j: BaseJoinExec => j }
       joins.foreach(j =>
         assert(!j.children.exists(linesUnder), s"a join reads the line stream:\n$j"))
+      // perPool reads no type code, so its plans never build one
+      assert(!plans.flatMap(nodes).exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.functions.PolLineParse]))))
     } finally p.unpersist()
   }
 
-  test("PoolSummary.aggregate takes at most 2 jobs") {
+  test("GameLookup.load and resolved launch no job") {
+    val inventory = PolParser.listFiles(spark, corpus)
+    val (resolved, jobs, _) = traced {
+      val dim = GameLookup.load(spark, lookup)
+      GameLookup.resolved(dim,
+        inventory.select(PoolMetrics.decodeFilename(col("file_name"))._1.as("pool_id")))
+        .collect()
+    }
+    assert(resolved.nonEmpty)
+    assert(jobs == 0, s"the lookup launched $jobs jobs")
+  }
+
+  /** `body` over the documents of a materialized, persisted perPool. */
+  private def overDocuments[T](body: DataFrame => T): T = {
     val (parsed, dim, inventory) = pools()
     val p = PoolMetrics.perPool(parsed, dim, Some(inventory)).persist()
     try {
       p.count()
-      val docs = PoolMetrics.documents(p, Some("2026-01-01T00:00:00+00:00"))
+      body(PoolMetrics.documents(p, Some("2026-01-01T00:00:00+00:00")))
+    } finally p.unpersist()
+  }
+
+  test("the sorted documents collect takes 1 job") {
+    overDocuments { docs =>
+      val (rows, jobs, _) = traced(docs.orderBy("metadata.source_file").collect())
+      assert(rows.length == 9)
+      val files = rows.map(_.getAs[Row]("metadata").getAs[String]("source_file")).toSeq
+      assert(files == files.sorted)
+      assert(jobs == 1, s"the documents collect launched $jobs jobs")
+    }
+  }
+
+  test("PoolSummary.aggregate takes at most 1 job") {
+    overDocuments { docs =>
       val (rows, jobs, _) = traced(PoolSummary.aggregate(docs).collect())
       info(s"$jobs jobs")
       assert(rows.length == 1 && rows(0).getAs[Long]("total_files_processed") == 9)
-      assert(jobs <= 2, s"PoolSummary.aggregate launched $jobs jobs")
-    } finally p.unpersist()
+      assert(jobs <= 1, s"PoolSummary.aggregate launched $jobs jobs")
+    }
   }
 }

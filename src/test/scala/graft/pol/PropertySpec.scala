@@ -83,6 +83,11 @@ class PropertySpec extends AnyFunSuite {
     assert(got.map(g => (g._1, g._2)).toSeq ==
       expected.map(e => (e._1.map(_.asInstanceOf[Any]),
         e._2.map(_.asInstanceOf[Any]))).toSeq)
+    // the allocation-free game_win equals PolLineParse's on every corpus
+    (texts ++ samples(Gen.listOfN(200, lineGen), 5).flatten).toDF("value")
+      .select(win.as("w"),
+        graft.functions.PolLineParse(col("value")).getField("game_win").as("p"))
+      .collect().foreach(r => assert(r.get(0) == r.get(1), r))
   }
 
   test("classification: exactly one tag branch per pool_type") {
