@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** CLI batch entry point for the TRAINING-CORPUS pipeline — the llm
   * analog of [[graft.pol.PolMain]]: one job composing the proved
@@ -20,13 +21,20 @@ import org.apache.spark.sql.functions._
   *   time-travelable, re-runs MERGE idempotently) and
   *   `_curation_report.json`.
   *
-  * Scale shape (the h6 argument, now with a sink): ONE corpus scan
-  * computes gate features map-side; the only corpus-sized exchanges
-  * are the 16-byte digest key-agg and the doc_id-keyed MERGE write;
-  * the benchmark shingle set broadcasts (benchmarks are MBs by
-  * contract); the report aggregate is split×source-bounded. Nothing
-  * corpus-sized ever reaches the driver — the report is the only
-  * collect, and it is governance-bounded.
+  * Scale shape (the h6 argument, now with a sink): the curated
+  * relation is computed ONCE per run — persisted before the MERGE,
+  * which reads that copy (it is already cached, so the MERGE
+  * materializes nothing of its own), and the report aggregates the
+  * same copy. That one evaluation scans the corpus three times: the
+  * gate computes its features map-side, and x8's decontamination
+  * reads it once for the benchmark shingle set (which broadcasts;
+  * benchmarks are MBs by contract) and once for the corpus side of
+  * the overlap. The only corpus-sized exchanges are the 16-byte
+  * digest key-agg and the doc_id-keyed MERGE write. The MERGE
+  * collects at most nBuckets touched-bucket ids to the driver; the
+  * report collects one row per (split, source), governance-bounded,
+  * and orders them on the driver. Nothing corpus-sized ever reaches
+  * the driver.
   */
 object CurateMain {
 
@@ -72,25 +80,27 @@ object CurateMain {
 
   /** Run the pipeline: MERGE the curated rows into `outDir/table` and
     * write the accounting report. Returns the report rows
-    * (split, source, n_docs, n_toks) for callers/specs.
+    * (split, source, n_docs, n_toks) for callers/specs, in
+    * `orderBy("split", "source")` order.
     */
   private[llm] def run(s: SparkSession, corpusDir: String,
       outDir: String): Seq[(String, String, Long, Long)] = {
-    val rows = curated(s, corpusDir)
-    val table = s"$outDir/table"
-    // MERGE semantics: re-running the job (same or grown corpus)
-    // upserts by doc_id — the committed manifest gives atomic
-    // publish, time travel to any prior curation run, and torn-state-
-    // free readers while the job runs
-    graft.pol.PoolJsonSink.upsertPartitioned(s, table, rows,
-      col("doc_id"), nBuckets = 16)
-    val report = rows.groupBy("split", "source")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_toks"))
-      .orderBy("split", "source")
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-        r.getLong(3)))
-      .toSeq
+    val rows = curated(s, corpusDir).persist()
+    val report = try {
+      // MERGE semantics: re-running the job (same or grown corpus)
+      // upserts by doc_id — the committed manifest gives atomic
+      // publish, time travel to any prior curation run, and torn-
+      // state-free readers while the job runs
+      graft.pol.PoolJsonSink.upsertPartitioned(s, s"$outDir/table", rows,
+        col("doc_id"), nBuckets = 16)
+      rows.groupBy("split", "source")
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_toks"))
+        .collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2),
+          r.getLong(3)))
+        .sorted(ReportOrder)
+        .toSeq
+    } finally { rows.unpersist(blocking = true); () }
     val json = report.map { case (sp, src, nd, nt) =>
       s"""{"split": "$sp", "source": "$src", "n_docs": $nd, "n_toks": $nt}"""
     }.mkString("[\n  ", ",\n  ", "\n]\n")
@@ -99,6 +109,16 @@ object CurateMain {
       java.nio.file.Paths.get(outDir, "_curation_report.json"),
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     report
+  }
+
+  /** `orderBy("split", "source")` on the driver: ascending, nulls
+    * first, strings in UTF-8 byte order (Spark's string order).
+    */
+  private val ReportOrder: Ordering[(String, String, Long, Long)] = {
+    val str = Ordering.Option(Ordering.fromLessThan[String]((a, b) =>
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0))
+    Ordering.by[(String, String, Long, Long), (Option[String], Option[String])](
+      r => (Option(r._1), Option(r._2)))(Ordering.Tuple2(str, str))
   }
 
   def main(args: Array[String]): Unit = {

@@ -1648,6 +1648,15 @@ object PoolJsonSink {
     * leaves readers on the previous version (see the crash-injection
     * spec in PartitionedUpsertSpec).
     *
+    * The incoming batch is read once: a batch the merge reads more
+    * than once (an existing table, or a first commit with
+    * expectations) is materialized once by [[readOnce]], and the
+    * checks, the touched-bucket collect, the anti-join keys and the
+    * staged rows all read that one copy. So a batch that evaluates
+    * differently per read (a nondeterministic key, a
+    * `current_timestamp()`, a replayed micro-batch) still merges as
+    * one consistent set of rows.
+    *
     * Returns the bucket ids rewritten. `key` must be an unresolved
     * column expression valid on both incoming and the stored schema
     * (e.g. `col("metadata.source_file")`). `onBeforeCommit` is a test
@@ -1665,26 +1674,44 @@ object PoolJsonSink {
       expectations: Seq[(String, org.apache.spark.sql.Column)] = Nil,
       bloomCols: Seq[String] = Nil,
       optimizedWrite: Boolean = true)
-      : Seq[Long] = {
-    checkExpectations(incoming, expectations)
-    new java.io.File(tableDir).mkdirs()
+      : Seq[Long] =
     upsertPartitionedFrom(spark, tableDir, incoming, key, nBuckets,
       onBeforeCommit, statsCols, readManifest(tableDir), bloomCols,
-      optimizedWrite)
-  }
+      optimizedWrite, expectations)
 
-  /** Declared CHECK constraints gate every ingesting write: the
-    * incoming batch is validated in ONE aggregate pass and a
-    * violating batch rejects WHOLLY before a file is staged (the
-    * Delta CHECK/expectation contract, from TABLE state instead of a
-    * caller argument). NULL results pass, per SQL CHECK.
+  /** The caller's expectations plus the table's declared CHECK
+    * constraints: every ingesting write validates both (the Delta
+    * CHECK/expectation contract, the latter from TABLE state instead
+    * of a caller argument), in ONE aggregate pass.
     */
-  private def enforceDeclaredChecks(
-      incoming: DataFrame, prev: Option[TableManifest]): Unit = {
-    val cs = prev.map(_.checks).getOrElse(Nil)
-    if (cs.nonEmpty)
-      checkExpectations(incoming,
-        cs.map { case (n, e) => n -> expr(e) })
+  private def checksOf(
+      prev: Option[TableManifest],
+      expectations: Seq[(String, org.apache.spark.sql.Column)])
+      : Seq[(String, org.apache.spark.sql.Column)] =
+    expectations ++
+      prev.map(_.checks).getOrElse(Nil).map { case (n, e) => n -> expr(e) }
+
+  /** Run `body` over `df` computed once. When `multiRead` (the caller
+    * reads `df` in more than one query) and its owner has not already
+    * materialized `df` (cached it, or local-checkpointed it), `body`
+    * gets a persisted copy, released (blocking) before this returns,
+    * also when `body` throws. A batch read once is passed through:
+    * materializing it would only add a pass.
+    */
+  private def readOnce[T](df: DataFrame, multiRead: Boolean)(
+      body: DataFrame => T): T = {
+    import org.apache.spark.storage.StorageLevel.NONE
+    val owned = df.storageLevel != NONE ||
+      (df.queryExecution.analyzed match {
+        case r: org.apache.spark.sql.execution.LogicalRDD =>
+          r.rdd.getStorageLevel != NONE
+        case _ => false
+      })
+    if (!multiRead || owned) body(df)
+    else {
+      val copy = df.persist()
+      try body(copy) finally { copy.unpersist(blocking = true); () }
+    }
   }
 
   /** [[upsertPartitioned]] against an ALREADY-RESOLVED snapshot
@@ -1694,9 +1721,16 @@ object PoolJsonSink {
     * makes the CAS fail with ConcurrentModificationException — the
     * caller's [[withCommitRetry]] then re-resolves and recomputes.
     * This is what makes the lost update impossible for multi-step
-    * writers like [[mergeDelta]], whose combine reads table state
-    * BEFORE calling here: committing against a re-resolved manifest
-    * would silently base the merge on a stale snapshot.
+    * writers, which read table state BEFORE committing: committing
+    * against a re-resolved manifest would silently base the merge on
+    * a stale snapshot.
+    *
+    * `incoming` is read once (see [[upsertPartitioned]]); a first
+    * commit with no checks reads it in the staging write alone and
+    * materializes nothing. A violating batch rejects WHOLLY before a
+    * file is staged. The commit fails before the manifest rename if
+    * it staged a file for a bucket the merge did not read (see
+    * [[stageAndCommit]]), so stored rows are never replaced unread.
     */
   private[graft] def upsertPartitionedFrom(
       spark: org.apache.spark.sql.SparkSession,
@@ -1708,34 +1742,40 @@ object PoolJsonSink {
       statsCols: Seq[String],
       prev: Option[TableManifest],
       bloomCols: Seq[String] = Nil,
-      optimizedWrite: Boolean = true): Seq[Long] = {
-    enforceDeclaredChecks(incoming, prev)
-    // the manifest's recorded bucket count ALWAYS wins over the
-    // caller's parameter: bucket placement is a physical property of
-    // the table, and a caller passing a different n would read the
-    // wrong buckets for its keys and silently duplicate them. The
-    // parameter only takes effect on table creation (first commit)
-    // — growth afterwards goes through [[splitBuckets]].
-    val n = prev.flatMap(_.nBuckets).getOrElse(nBuckets)
-    val withPt = incoming.withColumn("__pt", bucketExpr(key, n))
-    val (merged, touched) = prev match {
-      case None => (withPt, Seq.empty[Long])
-      case Some(m) =>
-        val touched = withPt.select("__pt").distinct()
-          .collect().map(_.getLong(0)).toSeq
-        val keep = readBucketsOf(spark, tableDir, m,
-            touched.filter(m.buckets.contains))
-          .join(withPt.select(key.as("__k")).distinct(),
-            key === col("__k"), "left_anti")
-        // additive schema evolution: an incoming batch may carry
-        // columns the stored rows don't have yet (and vice versa
-        // during rolling upgrades) — kept rows null-fill them, the
-        // Delta mergeSchema behavior
-        (keep.unionByName(withPt, allowMissingColumns = true), touched)
+      optimizedWrite: Boolean = true,
+      expectations: Seq[(String, org.apache.spark.sql.Column)] = Nil)
+      : Seq[Long] = {
+    val checks = checksOf(prev, expectations)
+    readOnce(incoming, prev.isDefined || checks.nonEmpty) { batch =>
+      checkExpectations(batch, checks)
+      new java.io.File(tableDir).mkdirs()
+      // the manifest's recorded bucket count ALWAYS wins over the
+      // caller's parameter: bucket placement is a physical property of
+      // the table, and a caller passing a different n would read the
+      // wrong buckets for its keys and silently duplicate them. The
+      // parameter only takes effect on table creation (first commit)
+      // — growth afterwards goes through [[splitBuckets]].
+      val n = prev.flatMap(_.nBuckets).getOrElse(nBuckets)
+      val withPt = batch.withColumn("__pt", bucketExpr(key, n))
+      val (merged, touched) = prev match {
+        case None => (withPt, Seq.empty[Long])
+        case Some(m) =>
+          val touched = withPt.select("__pt").distinct()
+            .collect().map(_.getLong(0)).toSeq
+          val keep = readBucketsOf(spark, tableDir, m,
+              touched.filter(m.buckets.contains))
+            .join(withPt.select(key.as("__k")).distinct(),
+              key === col("__k"), "left_anti")
+          // additive schema evolution: an incoming batch may carry
+          // columns the stored rows don't have yet (and vice versa
+          // during rolling upgrades) — kept rows null-fill them, the
+          // Delta mergeSchema behavior
+          (keep.unionByName(withPt, allowMissingColumns = true), touched)
+      }
+      stageAndCommit(spark, tableDir, prev, merged, touched, statsCols,
+        onBeforeCommit, n, bloomCols, optimizedWrite, opName = "UPSERT",
+        keyColName = keyName(key))
     }
-    stageAndCommit(spark, tableDir, prev, merged, touched, statsCols,
-      onBeforeCommit, n, bloomCols, optimizedWrite, opName = "UPSERT",
-      keyColName = keyName(key))
   }
 
   /** Stage `content` (the complete NEW state of `replaceTouched`'s
@@ -1743,7 +1783,9 @@ object PoolJsonSink {
     * those bucket entries replaced (an entry staging no file drops
     * out — the emptied-bucket case) and stats/schema carried forward.
     * The shared write tail of the merge/delete paths: exactly ONE
-    * evaluation of `content`, one staging pass, one CAS commit.
+    * evaluation of `content`, one staging pass, one CAS commit. A
+    * staged file for a stored bucket outside `replaceTouched` fails
+    * the commit before the manifest rename.
     */
   private def stageAndCommit(
       spark: org.apache.spark.sql.SparkSession,
@@ -1806,9 +1848,20 @@ object PoolJsonSink {
         case LongStat(r, _) => r
       }.getOrElse(1L << 20)).toMap,
       effBloom)
-    val allBuckets =
-      (prev.map(_.buckets).getOrElse(Map.empty) -- replaceTouched) ++
-        newFiles
+    val prevBuckets = prev.map(_.buckets).getOrElse(Map.empty)
+    // a staged file REPLACES its bucket's entry, so it may only land in
+    // a stored bucket this write read: anything else would drop that
+    // bucket's stored rows unread (a batch whose keys changed between
+    // the touched-bucket collect and the staging write did exactly
+    // that). Fail before the rename; the staged files stay orphans
+    // for [[vacuum]].
+    val unread = newFiles.keySet.filter(prevBuckets.contains) --
+      replaceTouched
+    if (unread.nonEmpty) throw new IllegalStateException(
+      s"$tableDir: $opName staged files for stored bucket(s) " +
+        s"${unread.toSeq.sorted.mkString(",")} it did not read; " +
+        "commit refused (their stored rows would be lost)")
+    val allBuckets = (prevBuckets -- replaceTouched) ++ newFiles
     val live = allBuckets.valuesIterator.flatten.toSet
     onBeforeCommit()
     commitManifest(tableDir, TableManifest(
@@ -2088,17 +2141,20 @@ object PoolJsonSink {
       bloomCols: Seq[String] = Nil,
       splitCol: Option[String] = None)
       : Seq[Long] = {
-    checkExpectations(incoming, expectations)
-    new java.io.File(tableDir).mkdirs()
     val prev = readManifest(tableDir)
-    val n = prev.flatMap(_.nBuckets).getOrElse(nBuckets)
-    enforceDeclaredChecks(incoming, prev)
-    val withPt = incoming.withColumn("__pt", bucketExpr(key, n))
-    stageAndCommit(spark, tableDir, prev, withPt,
-      prev.map(_.buckets.keys.toSeq).getOrElse(Nil), statsCols,
-      () => (), n, bloomCols, opName = "OVERWRITE",
-      keyColName = keyName(key),
-      declaredSplitCol = splitCol)
+    val checks = checksOf(prev, expectations)
+    // checked and staged from the same rows
+    readOnce(incoming, checks.nonEmpty) { batch =>
+      checkExpectations(batch, checks)
+      new java.io.File(tableDir).mkdirs()
+      val n = prev.flatMap(_.nBuckets).getOrElse(nBuckets)
+      val withPt = batch.withColumn("__pt", bucketExpr(key, n))
+      stageAndCommit(spark, tableDir, prev, withPt,
+        prev.map(_.buckets.keys.toSeq).getOrElse(Nil), statsCols,
+        () => (), n, bloomCols, opName = "OVERWRITE",
+        keyColName = keyName(key),
+        declaredSplitCol = splitCol)
+    }
   }
 
   /** Delta-driven MERGE maintenance — the streaming foreachBatch
@@ -2114,10 +2170,10 @@ object PoolJsonSink {
     * combine. Returns the bucket ids rewritten.
     *
     * Plan shape (measured at sf0.1 — job count is what a small-delta
-    * merge pays for): the delta is localCheckpoint'd so its plan runs
-    * ONCE (not re-evaluated for the bucket collect, the combine and
-    * the write), and the combine + keep branches live in one content
-    * plan evaluated by the single staging pass — not a combine read
+    * merge pays for): the delta is read once ([[readOnce]]), not
+    * re-evaluated for the bucket collect, the combine and the write,
+    * and the combine + keep branches live in one content plan
+    * evaluated by the single staging pass — not a combine read
     * followed by upsert's second keep read.
     */
   def mergeDelta(
@@ -2136,30 +2192,31 @@ object PoolJsonSink {
     val prev = readManifest(tableDir)
     // recorded bucket count wins (see upsertPartitionedFrom)
     val n = prev.flatMap(_.nBuckets).getOrElse(nBuckets)
-    val deltaCk = delta.localCheckpoint()
-    val touchedAll = deltaCk
-      .select(bucketExpr(key, n).as("__pt"))
-      .distinct().collect().map(_.getLong(0)).toSeq
     val withPt = (df: DataFrame) =>
       df.withColumn("__pt", bucketExpr(key, n))
-    val content = prev match {
-      case None => withPt(deltaCk)
-      case Some(m) =>
-        val touched = touchedAll.filter(m.buckets.contains)
-        if (touched.isEmpty) withPt(deltaCk)
-        else {
-          val existing = readBucketsOf(spark, tableDir, m, touched)
-          val deltaKeys = deltaCk.select(key.as("__k")).distinct()
-          val existingForKeys = existing.drop("__pt")
-            .join(deltaKeys, key === col("__k"), "left_semi")
-          val keep = existing
-            .join(deltaKeys, key === col("__k"), "left_anti")
-          withPt(combine(existingForKeys.unionByName(deltaCk)))
-            .unionByName(keep, allowMissingColumns = true)
-        }
+    readOnce(delta, prev.isDefined) { d =>
+      val (content, touchedAll) = prev match {
+        case None => (withPt(d), Seq.empty[Long])
+        case Some(m) =>
+          val touchedAll = d
+            .select(bucketExpr(key, n).as("__pt"))
+            .distinct().collect().map(_.getLong(0)).toSeq
+          val touched = touchedAll.filter(m.buckets.contains)
+          if (touched.isEmpty) (withPt(d), touchedAll)
+          else {
+            val existing = readBucketsOf(spark, tableDir, m, touched)
+            val deltaKeys = d.select(key.as("__k")).distinct()
+            val existingForKeys = existing.drop("__pt")
+              .join(deltaKeys, key === col("__k"), "left_semi")
+            val keep = existing
+              .join(deltaKeys, key === col("__k"), "left_anti")
+            (withPt(combine(existingForKeys.unionByName(d)))
+              .unionByName(keep, allowMissingColumns = true), touchedAll)
+          }
+      }
+      stageAndCommit(spark, tableDir, prev, content, touchedAll, Nil,
+        () => (), n, opName = "MERGE", keyColName = keyName(key))
     }
-    stageAndCommit(spark, tableDir, prev, content, touchedAll, Nil,
-      () => (), n, opName = "MERGE", keyColName = keyName(key))
   }
 
   /** The MERGE's WHEN-MATCHED-DELETE arm: remove every row whose key

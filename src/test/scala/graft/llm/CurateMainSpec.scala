@@ -15,6 +15,13 @@ import graft.QueryHarness.{spark, sf0001}
   */
 class CurateMainSpec extends AnyFunSuite {
   import spark.implicits._
+  import scala.jdk.CollectionConverters._
+
+  /** Rows one evaluation of the curated relation scans at sf0.001: its
+    * 500 documents, read by three scans (the gate, and x8's benchmark
+    * and corpus sides).
+    */
+  private val PinnedOnce = 1500L
 
   private lazy val out = {
     val dir = java.nio.file.Files
@@ -71,5 +78,59 @@ class CurateMainSpec extends AnyFunSuite {
       .orderBy("doc_id").select("doc_id", "split", "n_toks")
       .as[(Long, String, Long)].collect().toSeq
     assert(t1 == t2)
+  }
+
+  /** Rows that file scans of `documents.parquet` output while `body`
+    * runs. Every executed scan node counts once, including the scan
+    * inside a cached relation's plan, which runs only when the cache
+    * is built.
+    */
+  private def corpusRowsScanned(body: => Unit): Long = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive._
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val scans = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    def walk(p: SparkPlan): Unit = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case r: ReusedExchangeExec => walk(r.child)
+      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+      case f: FileSourceScanExec =>
+        if (f.relation.location.rootPaths
+            .exists(_.toString.contains("documents.parquet")))
+          scans.add(f)
+      case other => (other.children ++ other.subqueries).foreach(walk)
+    }
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution,
+          d: Long): Unit = synchronized(walk(qe.executedPlan))
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      org.apache.spark.SpecBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    l.synchronized {
+      scans.asScala.toSeq.map(_.metrics("numOutputRows").value).sum
+    }
+  }
+
+  test("a run scans the corpus for one evaluation of the curated " +
+      "relation only") {
+    val once = corpusRowsScanned(
+      CurateMain.curated(spark, sf0001).write.format("noop")
+        .mode("overwrite").save())
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_curate_once").toString
+    // a first run creates the table; the second MERGEs into it
+    CurateMain.run(spark, sf0001, dir)
+    val run = corpusRowsScanned(CurateMain.run(spark, sf0001, dir))
+    assert(once == PinnedOnce, s"one evaluation scanned $once rows")
+    assert(run == once, s"a run scanned $run corpus rows, one " +
+      s"evaluation of the curated relation scans $once")
   }
 }

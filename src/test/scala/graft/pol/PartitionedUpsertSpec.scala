@@ -438,4 +438,113 @@ class PartitionedUpsertSpec extends AnyFunSuite {
     assert(perFileCols.exists(!_.contains("lang")),
       "expected at least one pre-evolution file without the new column")
   }
+
+  /** A 1,000-row table (`k` = 0..999, `v` = "old") in 16 buckets, so
+    * every bucket holds stored rows.
+    */
+  private def thousandRowTable(name: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(name)
+      .resolve("table").toString
+    PoolJsonSink.upsertPartitioned(spark, dir,
+      spark.range(1000).select(col("id").as("k"), lit("old").as("v")),
+      col("k"), nBuckets = 16)
+    assert(manifest(dir).buckets.size == 16)
+    dir
+  }
+
+  /** Upserts 3 new rows keyed by `key(id)` and checks that all 1,000
+    * stored rows and the 3 new ones are in the table.
+    */
+  private def upsertKeepsStoredRows(name: String,
+      key: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
+      : Unit = {
+    val dir = thousandRowTable(name)
+    PoolJsonSink.upsertPartitioned(spark, dir,
+      spark.range(3).select(key(col("id")).as("k"), lit("new").as("v")),
+      col("k"), nBuckets = 16)
+    val got = PoolJsonSink.readTable(spark, dir).select("k", "v")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val lost = (0L until 1000L).toSet -- got.filter(_._2 == "old").keySet
+    assert(lost.size == 0, "stored rows lost")
+    assert(got.size == 1003 && got.count(_._2 == "new") == 3)
+  }
+
+  test("a MERGE keyed on current_timestamp() keeps every stored row") {
+    upsertKeepsStoredRows("graft_upsert_now",
+      id => unix_micros(current_timestamp()) + id)
+  }
+
+  test("a MERGE keyed on a nondeterministic UDF keeps every stored row") {
+    // a distinct key per row, never in 0..999, different per evaluation
+    val fresh = udf((id: Long) => (id + 1) * 1000000000L +
+        java.util.concurrent.ThreadLocalRandom.current().nextInt(1000000000))
+      .asNondeterministic()
+    upsertKeepsStoredRows("graft_upsert_udf", id => fresh(id))
+  }
+
+  test("a commit that staged files for a stored bucket it did not read " +
+      "fails before the manifest rename") {
+    val dir = thousandRowTable("graft_unread_bucket")
+    val before = manifest(dir)
+    // a combine that moves the delta's one key (bucket of 5) to keys
+    // 1005..1024: those land in stored buckets the merge never read,
+    // and committing them would replace those buckets' 1,000-row
+    // share with the moved rows alone
+    val e = intercept[IllegalStateException] {
+      PoolJsonSink.mergeDelta(spark, dir,
+        spark.range(5, 6).select(col("id").as("k"), lit("new").as("v")),
+        col("k"), nBuckets = 16)(
+        _.select(explode(sequence(col("k") + 1000L, col("k") + 1019L))
+          .as("k"), lit("moved").as("v")))
+    }
+    assert(e.getMessage.contains("did not read"))
+    assert(manifest(dir).version == before.version)
+    assert(manifest(dir).buckets == before.buckets)
+    assert(PoolJsonSink.readTable(spark, dir).count() == 1000)
+  }
+
+  test("an upsert into an existing table evaluates each incoming row " +
+      "once, with and without expectations") {
+    val dir = thousandRowTable("graft_upsert_once")
+    Seq(Nil, Seq("positive" -> (col("k") > 0L))).foreach { exps =>
+      val evals = spark.sparkContext.longAccumulator("key evaluations")
+      val counted = udf { (id: Long) => evals.add(1L); id + 5000L }
+        .asNondeterministic()
+      PoolJsonSink.upsertPartitioned(spark, dir,
+        spark.range(100).select(counted(col("id")).as("k"),
+          lit("new").as("v")),
+        col("k"), nBuckets = 16, expectations = exps)
+      assert(evals.value == 100L,
+        s"expectations $exps: 100 rows evaluated ${evals.value} times")
+    }
+    // both batches hold keys 5000..5099
+    assert(PoolJsonSink.readTable(spark, dir).count() == 1100)
+  }
+
+  test("an upsert leaves no cached data behind, also when the commit " +
+      "throws") {
+    import org.apache.spark.SpecBus
+    val sc = spark.sparkContext
+    val dir = thousandRowTable("graft_upsert_release")
+    // other suites share this session: compare with the state before
+    val (entries, rdds, blocks) = (org.apache.spark.sql.execution.SpecCache.entries(spark),
+      sc.getPersistentRDDs.keySet.toSet, SpecBus.rddBlocks(sc))
+    def assertReleased(): Unit = {
+      assert(org.apache.spark.sql.execution.SpecCache.entries(spark) == entries, "cache entry left")
+      assert(sc.getPersistentRDDs.keySet.toSet == rdds, "RDD left persisted")
+      assert(SpecBus.rddBlocks(sc) == blocks, "RDD blocks left")
+    }
+    val batch = spark.range(990, 1010)
+      .select(col("id").as("k"), lit("new").as("v"))
+    PoolJsonSink.upsertPartitioned(spark, dir, batch, col("k"),
+      nBuckets = 16)
+    assertReleased()
+    intercept[RuntimeException] {
+      PoolJsonSink.upsertPartitioned(spark, dir, batch, col("k"),
+        nBuckets = 16,
+        onBeforeCommit = () => throw new RuntimeException("killed"))
+    }
+    assertReleased()
+    assert(PoolJsonSink.readTable(spark, dir).count() == 1010)
+  }
 }
