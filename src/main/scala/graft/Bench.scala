@@ -9,7 +9,9 @@ import org.apache.spark.sql.SparkSession
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
   * A query that throws in any timed run is a failure, not a number:
   * it is left out of "queries" and the total and listed under
-  * "failed" (on stdout only when some query failed).
+  * "failed" (on stdout only when some query failed). Next to the
+  * durable BENCH_LOCAL.json it writes BENCH_LAYERS.json: for each
+  * reported query, where its reported run's time went ([[BenchProfile]]).
   *
   * Warmup runs EVERY catalog query once at the smallest SF first: the
   * generated whole-stage-codegen classes are cached by source, so the
@@ -40,6 +42,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val profile = BenchProfile(spark)
 
     // SPARK_GRAFT_BENCH_ONLY=a1_count,t4_... restricts the run to the
     // named queries (quiet-box re-measurement of a drifted number
@@ -74,20 +77,20 @@ object Bench {
     // delta was noise — the bands make the noise band DATA in the
     // artifact itself (round-9 verdict task 7).
     val samples = scala.collection.mutable.Map[String, List[Double]]()
+    // The layers of each query's fastest run: the run whose time is
+    // reported (best-of-N, drift reruns included).
+    val fastest = scala.collection.mutable.Map[String, (Double, Map[String, Long])]()
     /** Seconds for one forced run; None when the query threw. */
-    def timeOnce(name: String, fn: Query): Option[Double] = {
-      val t0 = System.nanoTime()
-      try {
-        force(fn(spark, sfDir))
-        val v = (System.nanoTime() - t0) / 1e9
-        samples(name) = v :: samples.getOrElse(name, Nil)
-        Some(v)
-      } catch {
-        case NonFatal(e) =>
+    def timeOnce(name: String, fn: Query): Option[Double] =
+      profile.timed(force(fn(spark, sfDir))) match {
+        case Right((v, layers)) =>
+          samples(name) = v :: samples.getOrElse(name, Nil)
+          if (fastest.get(name).forall(_._1 > v)) fastest(name) = v -> layers
+          Some(v)
+        case Left(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           None
       }
-    }
     /** Best of `runs`; None as soon as one run fails. */
     def bestOf(name: String, fn: Query): Option[Double] = {
       val ok = Iterator.fill(runs)(timeOnce(name, fn))
@@ -217,12 +220,19 @@ object Bench {
     // The full JSON (every query) goes to the durable file only;
     // stdout gets the compact line (SPARK_GRAFT_BENCH_OUT moves the
     // file; always one complete line, written atomically via
-    // tmp+move).
-    val tmp = outPath.resolveSibling(outPath.getFileName.toString + ".tmp")
-    java.nio.file.Files.write(tmp,
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, outPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    // tmp+move). The layer profile of this run's reported queries goes
+    // next to it, in BENCH_LAYERS.json.
+    def writeAtomically(path: java.nio.file.Path, text: String): Unit = {
+      val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
+      java.nio.file.Files.write(tmp,
+        (text + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      java.nio.file.Files.move(tmp, path,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    writeAtomically(outPath, json)
+    writeAtomically(outPath.resolveSibling("BENCH_LAYERS.json"),
+      BenchProfile.json(sfDir, runs,
+        results.map { case (name, v) => (name, v, fastest(name)._2) }, failed))
     // The driver keeps a bounded TAIL of stdout (~2,000 chars), and
     // `spark.stop()` emits multi-KB state-store-unload stack traces
     // ("Could not unload state store provider ... RpcEnv already

@@ -224,21 +224,4 @@ object KMeans {
     }
     Model(cents, round)
   }
-
-  /** Probe main: rounds-to-convergence per corpus (SCALING.md
-    * evidence and the MaxRounds margin check).
-    */
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    args.foreach { d =>
-      val t0 = System.nanoTime()
-      val m = fitImpl(spark, d)
-      println(f"$d rounds=${m.rounds} k=${m.centroids.size} " +
-        f"fit_s=${(System.nanoTime() - t0) / 1e9}%.2f")
-    }
-    spark.stop()
-  }
 }

@@ -166,19 +166,4 @@ object PQ {
     while (i < r.length) { r(i) = probe(i) - ce(i); i += 1 }
     r
   }
-
-  /** Probe main: per-subspace rounds-to-convergence (OracleRounds
-    * margin evidence, as KMeans.main is for n7).
-    */
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    args.foreach { d =>
-      val cb = fit(spark, d)
-      println(s"$d: rounds=${cb.books.map(_.rounds).mkString(",")}")
-    }
-    spark.stop()
-  }
 }

@@ -3,7 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** The two synthetic embedding corpus shapes the recall work sweeps
-  * (shared by PqRecallProbe, ClusterStatProbe, and the advisory spec):
+  * (used by the advisory spec; the retired PqRecallProbe and
+  * ClusterStatProbe swept them too):
   * DIFFUSE — i.i.d. uniform components, inter-point angles
   * concentrated near 90°, no structure for IVF to exploit; CLUSTERED
   * — mixture of 16 hash-derived unit gaussians, sigma=0.25,

@@ -112,7 +112,7 @@ class CurateMainSpec extends AnyFunSuite {
     spark.listenerManager.register(l)
     try {
       body
-      org.apache.spark.SpecBus.drain(spark.sparkContext)
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(l)
     l.synchronized {
       scans.asScala.toSeq.map(_.metrics("numOutputRows").value).sum

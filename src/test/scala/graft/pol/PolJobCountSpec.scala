@@ -2,7 +2,7 @@ package graft.pol
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.SpecBus
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
@@ -33,7 +33,7 @@ class PolJobCountSpec extends AnyFunSuite {
     */
   private def traced[T](body: => T): (T, Int, Seq[SparkPlan]) = {
     val sc = spark.sparkContext
-    SpecBus.drain(sc)
+    GraftBus.drain(sc)
     val jobs = new AtomicInteger
     val plans = java.util.Collections.synchronizedList(new java.util.ArrayList[SparkPlan])
     val jobListener = new SparkListener {
@@ -49,7 +49,7 @@ class PolJobCountSpec extends AnyFunSuite {
     spark.listenerManager.register(qeListener)
     try {
       val r = body
-      SpecBus.drain(sc)
+      GraftBus.drain(sc)
       import scala.jdk.CollectionConverters._
       (r, jobs.get, plans.asScala.toSeq)
     } finally {

@@ -278,7 +278,7 @@ class PolJobSpec extends AnyFunSuite {
     spark.listenerManager.register(listener)
     val result = try {
       val r = body
-      org.apache.spark.SpecBus.drain(spark.sparkContext)
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
       r
     } finally spark.listenerManager.unregister(listener)
     (result, seen.keySet.asScala.toSeq.map(_.metrics("numFiles").value))
