@@ -15,7 +15,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Once registered, its listeners count, for the whole session:
   *   - the analysis, optimization and planning phases
   *     (`qe.tracker.phases`) of every SQL action that finished, and the
-  *     number of those actions
+  *     number of those actions. Analysis done outside a finished
+  *     action's QueryExecution is not counted: a Dataset is analysed
+  *     eagerly when it is built, so `analysis_s` misses most analysis
+  *     inside the timed span and reads far below `optimization_s`
   *   - jobs, completed stages and tasks
   *   - the executors' run, CPU and GC time, shuffle read and write,
   *     disk spill and input bytes

@@ -458,7 +458,8 @@ object PoolJsonSink {
     * compare-and-swap (put-if-absent on an object store): of two
     * racing writers, exactly one wins and the loser's staged files
     * never become visible (the lost update is impossible, not merely
-    * detected-if-noticed).
+    * detected-if-noticed). The `op` line is stamped with the time of
+    * this write, whatever `m.commitTimeMs` holds.
     */
   private def commitManifest(tableDir: String, m: TableManifest): Unit = {
     val header = Seq(s"graft-manifest 1 ${m.version}") ++
@@ -473,8 +474,7 @@ object PoolJsonSink {
         Seq(s"droppedcols ${m.droppedCols.mkString(",")}") else Nil) ++
       m.checks.map { case (n, e) => s"check $n $e" } ++
       m.forkLayerProp.map(l => s"forklayer $l") ++
-      m.op.map(o =>
-        s"op $o ${m.commitTimeMs.getOrElse(System.currentTimeMillis())}") ++
+      m.op.map(o => s"op $o ${System.currentTimeMillis()}") ++
       m.schemaJson.map(j => s"schema $j")
     val body = (header ++
       m.buckets.toSeq.sortBy(_._1).flatMap { case (b, fs) =>
@@ -556,8 +556,6 @@ object PoolJsonSink {
         w.option("maxRecordsPerFile", n.toString))
       .partitionBy("__ptd" +: splitBy.map(_ => "__splitd").toSeq: _*)
       .parquet(stage.toString)
-    val dataDir = new java.io.File(tableDir, "data")
-    dataDir.mkdirs()
     def parquetsUnder(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
         case sub if sub.isDirectory && sub.getName.startsWith("__splitd=") =>
@@ -566,18 +564,30 @@ object PoolJsonSink {
             !f.getName.startsWith(".") => Seq(f)
         case _ => Nil
       }
-    val moved = for {
+    val moved = moveIntoData(tableDir, for {
       d <- Option(stage.listFiles()).getOrElse(Array.empty).toSeq
       if d.isDirectory && d.getName.startsWith("__ptd=")
-      bucket = d.getName.stripPrefix("__ptd=").toLong
       f <- parquetsUnder(d)
-    } yield {
+    } yield d.getName.stripPrefix("__ptd=").toLong -> f)
+    deleteRecursively(stage)
+    moved
+  }
+
+  /** Move staged parquet files (bucket, file) under `data/` with
+    * bucket-tagged unique names — the one rename of every write that
+    * adds files, on the table's own filesystem. Returns bucket -> new
+    * relative paths; nothing is visible to readers until a manifest
+    * names them.
+    */
+  private def moveIntoData(
+      tableDir: String,
+      staged: Seq[(Long, java.io.File)]): Map[Long, Seq[String]] = {
+    new java.io.File(tableDir, "data").mkdirs()
+    staged.map { case (bucket, f) =>
       val rel = s"data/pt$bucket-${java.util.UUID.randomUUID()}.parquet"
       Files.move(f.toPath, new java.io.File(tableDir, rel).toPath)
       bucket -> rel
-    }
-    deleteRecursively(stage)
-    moved.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {
@@ -651,84 +661,81 @@ object PoolJsonSink {
     perFile.filter(_._2.nonEmpty).toMap
   }
 
-  /** One file's footer harvest — the loop body of [[footerStats]],
-    * unchanged, lifted out so the bounded pool can run it per file. */
+  /** One file's footer harvest — the per-file task of [[footerStats]]. */
   private def footerStatsFor(
       tableDir: String, rel: String, cols: Seq[String],
       conf: org.apache.hadoop.conf.Configuration,
       binStatsExact: Boolean): (String, Map[String, ColStat]) = {
-    {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(s"$tableDir/$rel"), conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        import scala.jdk.CollectionConverters._
-        val blocks = reader.getFooter.getBlocks.asScala
-        // every staged file records its exact row count and byte size
-        // as pseudo zone-map entries — count(*) and planning-time
-        // statistics over the table then never open or stat() a file
-        // (see [[tableRowCount]], GraftSpjScan.estimateStatistics);
-        // the entries ride the existing stats encoding and no reader
-        // prunes on them
-        val rowCount = RowsStatCol ->
-          (LongStat(blocks.map(_.getRowCount).sum,
-            blocks.map(_.getRowCount).sum): ColStat)
-        val byteSize = {
-          val len = new java.io.File(tableDir, rel).length()
-          BytesStatCol -> (LongStat(len, len): ColStat)
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(s"$tableDir/$rel"), conf)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try {
+      import scala.jdk.CollectionConverters._
+      val blocks = reader.getFooter.getBlocks.asScala
+      // every staged file records its exact row count and byte size
+      // as pseudo zone-map entries — count(*) and planning-time
+      // statistics over the table then never open or stat() a file
+      // (see [[tableRowCount]], GraftSpjScan.estimateStatistics);
+      // the entries ride the existing stats encoding and no reader
+      // prunes on them
+      val rowCount = RowsStatCol ->
+        (LongStat(blocks.map(_.getRowCount).sum,
+          blocks.map(_.getRowCount).sum): ColStat)
+      val byteSize = {
+        val len = new java.io.File(tableDir, rel).length()
+        BytesStatCol -> (LongStat(len, len): ColStat)
+      }
+      val perCol = cols.flatMap { c =>
+        val chunks = blocks.flatMap(_.getColumns.asScala
+          .find(_.getPath.toDotString == c))
+        val stats = chunks.map(_.getStatistics).filter(s =>
+          s != null && !s.isEmpty && s.hasNonNullValue)
+        if (stats.isEmpty || stats.size != chunks.size) None
+        else stats.head.genericGetMin match {
+          case _: java.lang.Long
+              if stats.forall(_.genericGetMin.isInstanceOf[java.lang.Long]) =>
+            Some(c -> (LongStat(
+              stats.map(_.genericGetMin.asInstanceOf[Long]).min,
+              stats.map(_.genericGetMax.asInstanceOf[Long]).max): ColStat))
+          case _: org.apache.parquet.io.api.Binary
+              if binStatsExact && stats.forall { s =>
+                s.genericGetMin.isInstanceOf[org.apache.parquet.io.api.Binary] &&
+                  s.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary]
+                    .length <= MaxBinStatLen &&
+                  s.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary]
+                    .length <= MaxBinStatLen
+              } =>
+            val mins = stats.map(
+              _.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary]
+                .getBytes)
+            val maxs = stats.map(
+              _.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary]
+                .getBytes)
+            Some(c -> (BinStat(
+              mins.reduce((a, b) => if (unsignedCompare(a, b) <= 0) a else b),
+              maxs.reduce((a, b) => if (unsignedCompare(a, b) >= 0) a else b)): ColStat))
+          case _ => None
         }
-        val perCol = cols.flatMap { c =>
-          val chunks = blocks.flatMap(_.getColumns.asScala
-            .find(_.getPath.toDotString == c))
-          val stats = chunks.map(_.getStatistics).filter(s =>
-            s != null && !s.isEmpty && s.hasNonNullValue)
-          if (stats.isEmpty || stats.size != chunks.size) None
-          else stats.head.genericGetMin match {
-            case _: java.lang.Long
-                if stats.forall(_.genericGetMin.isInstanceOf[java.lang.Long]) =>
-              Some(c -> (LongStat(
-                stats.map(_.genericGetMin.asInstanceOf[Long]).min,
-                stats.map(_.genericGetMax.asInstanceOf[Long]).max): ColStat))
-            case _: org.apache.parquet.io.api.Binary
-                if binStatsExact && stats.forall { s =>
-                  s.genericGetMin.isInstanceOf[org.apache.parquet.io.api.Binary] &&
-                    s.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary]
-                      .length <= MaxBinStatLen &&
-                    s.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary]
-                      .length <= MaxBinStatLen
-                } =>
-              val mins = stats.map(
-                _.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary]
-                  .getBytes)
-              val maxs = stats.map(
-                _.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary]
-                  .getBytes)
-              Some(c -> (BinStat(
-                mins.reduce((a, b) => if (unsignedCompare(a, b) <= 0) a else b),
-                maxs.reduce((a, b) => if (unsignedCompare(a, b) >= 0) a else b)): ColStat))
-            case _ => None
-          }
-        }.toMap
-        // per-column NULL counts as pseudo zone-map entries (same
-        // trick as __rows/__bytes — no format change, old parsers
-        // just see another column they never prune on). A recorded
-        // zero is what lets a metadata DELETE prove "EVERY row of
-        // this file matches the predicate" — min/max alone cannot
-        // (NULL rows match no comparison). Recorded only when every
-        // chunk reports a known null count.
-        val nullCounts = cols.flatMap { c =>
-          val chunks = blocks.flatMap(_.getColumns.asScala
-            .find(_.getPath.toDotString == c))
-          val sts = chunks.map(_.getStatistics)
-          if (chunks.nonEmpty &&
-              sts.forall(s => s != null && s.isNumNullsSet)) {
-            val n = sts.map(_.getNumNulls).sum
-            Some(s"$NullsStatColPrefix$c" -> (LongStat(n, n): ColStat))
-          } else None
-        }.toMap
-        rel -> (perCol ++ nullCounts + rowCount + byteSize)
-      } finally reader.close()
-    }
+      }.toMap
+      // per-column NULL counts as pseudo zone-map entries (same
+      // trick as __rows/__bytes — no format change, old parsers
+      // just see another column they never prune on). A recorded
+      // zero is what lets a metadata DELETE prove "EVERY row of
+      // this file matches the predicate" — min/max alone cannot
+      // (NULL rows match no comparison). Recorded only when every
+      // chunk reports a known null count.
+      val nullCounts = cols.flatMap { c =>
+        val chunks = blocks.flatMap(_.getColumns.asScala
+          .find(_.getPath.toDotString == c))
+        val sts = chunks.map(_.getStatistics)
+        if (chunks.nonEmpty &&
+            sts.forall(s => s != null && s.isNumNullsSet)) {
+          val n = sts.map(_.getNumNulls).sum
+          Some(s"$NullsStatColPrefix$c" -> (LongStat(n, n): ColStat))
+        } else None
+      }.toMap
+      rel -> (perCol ++ nullCounts + rowCount + byteSize)
+    } finally reader.close()
   }
 
   /** Pseudo stats column carrying each file's exact row count. */
@@ -1102,8 +1109,7 @@ object PoolJsonSink {
           })
       }
     commitManifest(dstDir, manifest.copy(
-      op = Some(op),
-      commitTimeMs = Some(System.currentTimeMillis())))
+      op = Some(op)))
     forkV
   }
 
@@ -1233,8 +1239,7 @@ object PoolJsonSink {
         b -> rels.map(canonicalRel)
       },
       stats = head.stats.map { case (f, cs) => canonicalRel(f) -> cs },
-      op = Some("PUBLISH"),
-      commitTimeMs = Some(System.currentTimeMillis()))
+      op = Some("PUBLISH"))
     try commitManifest(tableDir, m)
     catch {
       case _: java.util.ConcurrentModificationException => sys.error(
@@ -1293,8 +1298,7 @@ object PoolJsonSink {
         val target = readManifestAt(tableDir, toVersion)
         val m = target.copy(
           version = cur.version + 1,
-          op = Some("ROLLBACK"),
-          commitTimeMs = Some(System.currentTimeMillis()))
+          op = Some("ROLLBACK"))
         commitManifest(tableDir, m)
         m.version
       }
@@ -1328,8 +1332,7 @@ object PoolJsonSink {
             buckets = cur.buckets.view.mapValues(_.filterNot(drop))
               .filter(_._2.nonEmpty).toMap,
             stats = cur.stats -- drop,
-            op = Some("DELETE"),
-            commitTimeMs = Some(System.currentTimeMillis()))
+            op = Some("DELETE"))
           commitManifest(tableDir, m)
           m.version
       }
@@ -1374,15 +1377,20 @@ object PoolJsonSink {
   private def buildBloomSidecars(
       spark: org.apache.spark.sql.SparkSession,
       tableDir: String,
-      relRows: Map[String, Long],
+      rels: Seq[String],
+      stats: Map[String, Map[String, ColStat]],
       cols: Seq[String]): Unit =
-    if (cols.nonEmpty && relRows.nonEmpty) {
-      val classes = relRows.groupBy { case (_, rows) =>
+    if (cols.nonEmpty && rels.nonEmpty) {
+      // a file without a recorded row count sizes as 1M rows
+      val classes = rels.groupBy { rel =>
+        val rows = stats.get(rel).flatMap(_.get(RowsStatCol)).collect {
+          case LongStat(r, _) => r
+        }.getOrElse(1L << 20)
         math.max(1024L, java.lang.Long.highestOneBit(
           math.max(rows, 1L) * 2 - 1))
       }
-      classes.foreach { case (expectedItems, rels) =>
-        val paths = rels.keys.toSeq.sorted
+      classes.foreach { case (expectedItems, group) =>
+        val paths = group.sorted
         val aggs = cols.map(c => graft.functions.BloomSketch.build(
           xxhash64(col(c).cast("string")), expectedItems).as(s"__bf_$c"))
         val rows = spark.read
@@ -1456,76 +1464,33 @@ object PoolJsonSink {
     }
   }
 
-  /** Conform `df` (whatever union of FILE schemas the parquet read
-    * produced) to the manifest's RECORDED schema — the single source
-    * of truth: columns the recording added but no selected file
-    * carries null-fill, columns the recording DROPPED disappear even
-    * though old files still hold their bytes (without this, the next
-    * merge's keep-side read would resurrect a dropped column into the
-    * committed schema), and struct fields conform recursively by
-    * NAME (a positional cast would silently shear nested data).
+  /** The selected files as one frame. A manifest that records the
+    * table's schema is read with it — the single source of truth:
+    * files written before an additive schema change null-fill the
+    * newer columns (nested struct fields too, matched by name), a
+    * DROPPED column's bytes in old files are never read (so the next
+    * merge's keep-side read cannot resurrect it), and planning the
+    * read opens no footer. An empty selection is the empty frame of
+    * that schema. Manifests from older writers record none and read
+    * the merged union of the selected files' schemas.
     */
-  private def conformTo(
-      df: DataFrame, recorded: org.apache.spark.sql.types.StructType)
-      : DataFrame = {
-    import org.apache.spark.sql.types.{DataType, StructType}
-    import org.apache.spark.sql.Column
-    def proj(src: DataType, want: DataType, path: Column): Column =
-      (src, want) match {
-        case (s: StructType, w: StructType) =>
-          struct(w.fields.toSeq.map { wf =>
-            s.fields.find(_.name == wf.name) match {
-              case Some(sf) =>
-                proj(sf.dataType, wf.dataType, path.getField(wf.name))
-                  .as(wf.name)
-              case None => lit(null).cast(wf.dataType).as(wf.name)
-            }
-          }: _*)
-        case _ => path
-      }
-    if (df.schema == recorded) df
-    else df.select(recorded.fields.toSeq.map { f =>
-      df.schema.fields.find(_.name == f.name) match {
-        case Some(sf) => proj(sf.dataType, f.dataType, col(f.name)).as(f.name)
-        case None => lit(null).cast(f.dataType).as(f.name)
-      }
-    }: _*)
-  }
-
-  private def recordedSchema(m: TableManifest)
-      : Option[org.apache.spark.sql.types.StructType] =
-    m.schemaJson.map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
-
   private def readFiles(
       spark: org.apache.spark.sql.SparkSession,
-      tableDir: String, rels: Seq[String], m: TableManifest): DataFrame =
-    if (rels.nonEmpty) {
-      // mergeSchema: files written before an additive schema change
-      // lack the newer columns — merge the union schema across the
-      // SELECTED files only (footer reads scale with the selection,
-      // so bucket pruning also prunes schema-merge work) — then
-      // conform to the RECORDED schema (manifests from older writers
-      // have none and keep the raw union)
-      val raw = spark.read.option("mergeSchema", "true")
-        .parquet(rels.map(r => s"$tableDir/$r"): _*)
-      recordedSchema(m).fold(raw)(conformTo(raw, _))
-    } else if (m.files.nonEmpty) { // empty selection: schema from a file
-      val raw = spark.read.parquet(s"$tableDir/${m.files.head}").limit(0)
-      recordedSchema(m).fold(raw)(conformTo(raw, _))
+      tableDir: String, rels: Seq[String], m: TableManifest): DataFrame = {
+    val paths = rels.map(r => s"$tableDir/$r")
+    m.schemaJson match {
+      case Some(j) =>
+        spark.read.schema(org.apache.spark.sql.types.DataType.fromJson(j)
+          .asInstanceOf[org.apache.spark.sql.types.StructType]).parquet(paths: _*)
+      case None if rels.nonEmpty =>
+        spark.read.option("mergeSchema", "true").parquet(paths: _*)
+      case None if m.files.nonEmpty => // empty selection: schema from a file
+        spark.read.parquet(s"$tableDir/${m.files.head}").limit(0)
+      case None => sys.error(
+        s"$tableDir: empty table with no schema in manifest " +
+          s"v${m.version} (written by an older writer?)")
     }
-    else // empty TABLE (all rows deleted / first commit empty): the
-         // manifest's stored schema keeps the table readable
-      m.schemaJson match {
-        case Some(j) =>
-          val schema = org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        case None => sys.error(
-          s"$tableDir: empty table with no schema in manifest " +
-            s"v${m.version} (written by an older writer?)")
-      }
+  }
 
   /** Read the current committed version of a manifest table (plain
     * `spark.read.parquet` on the dir would also see uncommitted staged
@@ -1779,13 +1744,12 @@ object PoolJsonSink {
   }
 
   /** Stage `content` (the complete NEW state of `replaceTouched`'s
-    * buckets, carrying `__pt`) and commit `prev.version + 1` with
-    * those bucket entries replaced (an entry staging no file drops
-    * out — the emptied-bucket case) and stats/schema carried forward.
-    * The shared write tail of the merge/delete paths: exactly ONE
-    * evaluation of `content`, one staging pass, one CAS commit. A
-    * staged file for a stored bucket outside `replaceTouched` fails
-    * the commit before the manifest rename.
+    * buckets, carrying `__pt`) and [[publish]] it with those bucket
+    * entries replaced (an entry staging no file drops out — the
+    * emptied-bucket case). The staging half of the merge/delete
+    * paths: exactly ONE evaluation of `content`, one staging pass,
+    * one CAS commit. A staged file for a stored bucket outside
+    * `replaceTouched` fails the commit before the manifest rename.
     */
   private def stageAndCommit(
       spark: org.apache.spark.sql.SparkSession,
@@ -1822,63 +1786,93 @@ object PoolJsonSink {
       .filter(toStage.columns.contains)
     val newFiles = stageDataFiles(tableDir, toStage,
       if (optimizedWrite) Some(1L << 20) else None, effSplit)
-    val prevStats = prev.map(_.stats).getOrElse(Map.empty)
-    // zone-map columns are a TABLE property once requested: recorded
-    // in the manifest so the request survives even commits that stage
-    // no file (empty CREATE TABLE) — the pre-record inference from
-    // previous files' stat keys stays as the upgrade path for tables
-    // written before the property existed
-    val effStatsCols =
-      (statsCols ++ prev.map(_.statsCols).getOrElse(Nil)).distinct
-    val cols = (effStatsCols ++
-      prevStats.valuesIterator.flatMap(_.keys)).distinct
-      .filterNot(c => c == RowsStatCol || c == BytesStatCol ||
-        c.startsWith(NullsStatColPrefix))
-    // always harvested (even with no requested stats columns): every
-    // file at least records its row count for [[tableRowCount]]
-    val newStats = footerStats(spark, tableDir,
-      newFiles.valuesIterator.flatten.toSeq, cols)
-    // bloom indexing, like zone-map columns, is a TABLE property once
-    // requested: maintenance writers (merge/delete/compact/split) pass
-    // Nil and still sidecar their new files on the recorded columns
-    val effBloom = (bloomCols ++ prev.map(_.bloomCols).getOrElse(Nil))
-      .distinct.filter(content.columns.contains)
-    buildBloomSidecars(spark, tableDir,
-      newStats.view.mapValues(_.get(RowsStatCol).collect {
-        case LongStat(r, _) => r
-      }.getOrElse(1L << 20)).toMap,
-      effBloom)
-    val prevBuckets = prev.map(_.buckets).getOrElse(Map.empty)
     // a staged file REPLACES its bucket's entry, so it may only land in
     // a stored bucket this write read: anything else would drop that
     // bucket's stored rows unread (a batch whose keys changed between
     // the touched-bucket collect and the staging write did exactly
     // that). Fail before the rename; the staged files stay orphans
     // for [[vacuum]].
-    val unread = newFiles.keySet.filter(prevBuckets.contains) --
-      replaceTouched
+    val unread = newFiles.keySet.filter(b =>
+      prev.exists(_.buckets.contains(b))) -- replaceTouched
     if (unread.nonEmpty) throw new IllegalStateException(
       s"$tableDir: $opName staged files for stored bucket(s) " +
         s"${unread.toSeq.sorted.mkString(",")} it did not read; " +
         "commit refused (their stored rows would be lost)")
-    val allBuckets = (prevBuckets -- replaceTouched) ++ newFiles
-    val live = allBuckets.valuesIterator.flatten.toSet
-    onBeforeCommit()
-    commitManifest(tableDir, TableManifest(
-      prev.map(_.version + 1).getOrElse(1L),
-      allBuckets,
-      (prevStats ++ newStats).filter(kv => live(kv._1)),
-      Some(content.schema.json),
-      Some(nBuckets),
-      effBloom,
-      Some(opName),
-      keyCol = keyColName.orElse(prev.flatMap(_.keyCol)),
-      statsCols = effStatsCols,
-      splitCol = declaredSplitCol.orElse(prev.flatMap(_.splitCol)),
-      droppedCols = prev.map(_.droppedCols).getOrElse(Nil),
-      checks = prev.map(_.checks).getOrElse(Nil),
-      forkLayerProp = prev.flatMap(_.forkLayerProp)))
+    // zone-map and bloom columns are TABLE properties once requested:
+    // a write's own request adds to the recorded ones, and
+    // maintenance writers (merge/delete/split) pass Nil and keep them
+    publish(spark, tableDir, prev, newFiles, replaceTouched, opName,
+      schemaJson = Some(content.schema.json),
+      nBuckets = Some(nBuckets),
+      keyCol = keyColName,
+      statsCols = Some(
+        (statsCols ++ prev.map(_.statsCols).getOrElse(Nil)).distinct),
+      bloomCols = Some((bloomCols ++ prev.map(_.bloomCols).getOrElse(Nil))
+        .distinct.filter(content.columns.contains)),
+      splitCol = declaredSplitCol,
+      onBeforeCommit = onBeforeCommit)
     newFiles.keys.toSeq.sorted
+  }
+
+  /** The one commit tail of every write that adds data files: harvest
+    * zone maps and build bloom sidecars for `newFiles` (already under
+    * `data/`), then commit `prev.version + 1` (version 1 for a first
+    * commit).
+    *
+    * The bucket map is `prev`'s minus `replaced`, with each new file
+    * appended to its bucket: a bucket the write did not replace keeps
+    * its files, and a replaced bucket that staged nothing drops out.
+    * Stats of files that leave the map go with them.
+    *
+    * The manifest is `prev` with only what the write declares
+    * overridden (None keeps `prev`'s), so every other table property
+    * (dropped columns, checks, fork layer, ...) carries through.
+    * Zone maps are harvested for the stats columns, a declared split
+    * column (its files' value purity is what OPTIMIZE and metadata
+    * deletes prove from) and every column `prev`'s files carry stats
+    * for (older writers recorded those without a declaration).
+    * `onBeforeCommit` is a test seam: it runs after every file and
+    * sidecar is in place, immediately before the manifest rename.
+    */
+  private def publish(
+      spark: org.apache.spark.sql.SparkSession,
+      tableDir: String,
+      prev: Option[TableManifest],
+      newFiles: Map[Long, Seq[String]],
+      replaced: Iterable[Long],
+      op: String,
+      schemaJson: Option[String] = None,
+      nBuckets: Option[Int] = None,
+      keyCol: Option[String] = None,
+      statsCols: Option[Seq[String]] = None,
+      bloomCols: Option[Seq[String]] = None,
+      splitCol: Option[String] = None,
+      onBeforeCommit: () => Unit = () => ()): Unit = {
+    val base = prev.getOrElse(TableManifest(0L, Map.empty))
+    val next = base.copy(
+      version = base.version + 1,
+      schemaJson = schemaJson.orElse(base.schemaJson),
+      nBuckets = nBuckets.orElse(base.nBuckets),
+      keyCol = keyCol.orElse(base.keyCol),
+      statsCols = statsCols.getOrElse(base.statsCols),
+      bloomCols = bloomCols.getOrElse(base.bloomCols),
+      splitCol = splitCol.orElse(base.splitCol),
+      op = Some(op))
+    val rels = newFiles.valuesIterator.flatten.toSeq
+    // always harvested (even with no stats columns): every file at
+    // least records its row count and size for [[tableRowCount]]
+    val newStats = footerStats(spark, tableDir, rels,
+      (next.statsCols ++ splitCol ++ base.stats.valuesIterator.flatMap(_.keys))
+        .distinct.filterNot(c => c == RowsStatCol || c == BytesStatCol ||
+          c.startsWith(NullsStatColPrefix)))
+    buildBloomSidecars(spark, tableDir, rels, newStats, next.bloomCols)
+    val buckets = newFiles.foldLeft(base.buckets -- replaced) {
+      case (bs, (b, fs)) => bs.updated(b, bs.getOrElse(b, Nil) ++ fs)
+    }
+    val live = buckets.valuesIterator.flatten.toSet
+    onBeforeCommit()
+    commitManifest(tableDir, next.copy(buckets = buckets,
+      stats = (base.stats ++ newStats).filter(kv => live(kv._1))))
   }
 
   /** Best-effort name of the merge-key column (a plain `col("k")` or
@@ -1888,27 +1882,20 @@ object PoolJsonSink {
     org.apache.spark.sql.GraftColumnBridge.namePath(key)
       .map(_.mkString("."))
 
-  /** Replace the ENTIRE table content with `incoming` in one commit —
-    * SaveMode.Overwrite / streaming Complete-mode semantics. Every
-    * existing bucket entry is dropped and the incoming rows staged
-    * fresh; the commit is the same CAS, so readers flip atomically
-    * from old content to new and time travel still reaches the
-    * replaced versions until vacuum. Keeps the table's recorded
-    * bucket count.
-    */
-  /** Commit a FULL-REPLACEMENT file set whose data files are ALREADY
-    * staged under `tableDir` (table-relative paths) — the driver half
-    * of the V2 executor-side write (graft.sources.GraftBatchWrite):
-    * executors wrote bucketed parquet directly, this publishes them
-    * as the next version atomically. Table properties ride along the
-    * way every other maintenance writer carries them: zone-map
-    * columns re-harvested from the new footers, bloom sidecars
-    * rebuilt on the recorded columns, the merge key preserved.
+  /** Publish data files staged OUTSIDE `data/` (bucket, file) as the
+    * next version — the driver half of the V2 executor-side write
+    * (graft.sources.GraftBatchWrite: executors wrote bucketed parquet
+    * directly) and of REPLACE TABLE (a private staged table's files).
+    * The files move into `data/` only after the conflict check, then
+    * go through [[publish]]: `replaceBuckets` (the scanned buckets;
+    * None = every bucket) are replaced, any other bucket keeps its
+    * files and gains the new ones (rows INSERTED into groups the
+    * statement never read).
     */
   private[graft] def commitStagedReplace(
       spark: org.apache.spark.sql.SparkSession,
       tableDir: String,
-      newFiles: Map[Long, Seq[String]],
+      staged: Seq[(Long, java.io.File)],
       schemaJson: String,
       nBuckets: Int,
       opName: String,
@@ -1920,6 +1907,8 @@ object PoolJsonSink {
       declaredStatsCols: Option[Seq[String]] = None,
       declaredBloomCols: Option[Seq[String]] = None): Unit = {
     val prev = readManifest(tableDir)
+    val replaced = replaceBuckets.getOrElse(
+      prev.map(_.buckets.keySet).getOrElse(Set.empty))
     // Optimistic conflict validation (the Iceberg/Delta COW rule):
     // the replacement rows were computed against `expectedPrevVersion`.
     // If other writers committed since, find which buckets THEY
@@ -1934,9 +1923,7 @@ object PoolJsonSink {
     expectedPrevVersion.foreach { v0 =>
       val cur = prev.map(_.version).getOrElse(0L)
       if (cur != v0) {
-        val ours = replaceBuckets.getOrElse(
-          prev.map(_.buckets.keySet).getOrElse(Set.empty)) ++
-          newFiles.keySet
+        val ours = replaced ++ staged.map(_._1)
         val changed: Set[Long] =
           try {
             ((v0 + 1L) to cur).flatMap { v =>
@@ -1961,54 +1948,18 @@ object PoolJsonSink {
               "the statement")
       }
     }
-    val cols = declaredStatsCols.getOrElse(
-      (prev.map(_.statsCols).getOrElse(Nil) ++
-        prev.map(_.stats.valuesIterator.flatMap(_.keys)
-          .filterNot(c => c == RowsStatCol || c == BytesStatCol ||
-            c.startsWith(NullsStatColPrefix)).toSeq.distinct)
-          .getOrElse(Nil))
-        .distinct)
-    val rels = newFiles.valuesIterator.flatten.toSeq
-    val newStats = footerStats(spark, tableDir, rels, cols)
-    val effBloom = declaredBloomCols.getOrElse(
-      prev.map(_.bloomCols).getOrElse(Nil))
-    buildBloomSidecars(spark, tableDir,
-      newStats.view.mapValues(_.get(RowsStatCol).collect {
-        case LongStat(r, _) => r
-      }.getOrElse(1L << 20)).toMap,
-      effBloom)
-    // Bucket-level copy-on-write: buckets in `replaceBuckets` (the
-    // SCANNED groups — their surviving rows were fully re-emitted)
-    // drop their old files; every other bucket KEEPS its files and
-    // merely appends any new ones (rows INSERTED into groups the
-    // statement never read). None = the full-rewrite case.
-    val prevBuckets = prev.map(_.buckets).getOrElse(Map.empty)
-    val kept = replaceBuckets match {
-      case Some(scanned) => prevBuckets -- scanned
-      case None => Map.empty[Long, Seq[String]]
-    }
-    val allBuckets = (kept.keySet ++ newFiles.keySet).map { b =>
-      b -> (kept.getOrElse(b, Nil) ++ newFiles.getOrElse(b, Nil))
-    }.toMap
-    val live = allBuckets.valuesIterator.flatten.toSet
-    val prevStats = prev.map(_.stats).getOrElse(Map.empty)
-    commitManifest(tableDir, TableManifest(
-      prev.map(_.version + 1).getOrElse(1L),
-      allBuckets,
-      (prevStats ++ newStats).filter(kv => live(kv._1)),
-      Some(schemaJson),
-      Some(nBuckets),
-      effBloom,
-      Some(opName),
-      keyCol = declaredKeyCol.orElse(prev.flatMap(_.keyCol)),
-      statsCols = declaredStatsCols.getOrElse(
-        prev.map(_.statsCols).getOrElse(Nil)),
-      splitCol = prev.flatMap(_.splitCol),
-      // REPLACE TABLE re-declares the schema wholesale; retired
-      // names stay retired (old files may survive via time travel)
-      droppedCols = prev.map(_.droppedCols).getOrElse(Nil),
-      checks = prev.map(_.checks).getOrElse(Nil),
-      forkLayerProp = prev.flatMap(_.forkLayerProp)))
+    // a restated statscols is exact: the replaced table's zone-map
+    // columns do not carry over (REPLACE replaces every bucket, so no
+    // kept file loses its stats)
+    publish(spark, tableDir,
+      if (declaredStatsCols.isDefined) prev.map(_.copy(stats = Map.empty))
+      else prev,
+      moveIntoData(tableDir, staged), replaced, opName,
+      schemaJson = Some(schemaJson),
+      nBuckets = Some(nBuckets),
+      keyCol = declaredKeyCol,
+      statsCols = declaredStatsCols,
+      bloomCols = declaredBloomCols)
   }
 
   /** ALTER TABLE ADD COLUMN: commit a new version whose ONLY change
@@ -2046,8 +1997,7 @@ object PoolJsonSink {
       bloomCols = m.bloomCols.filterNot(removedTop),
       splitCol = m.splitCol.filterNot(removedTop),
       droppedCols = (m.droppedCols ++ removed).distinct,
-      op = Some("ALTER"),
-      commitTimeMs = Some(System.currentTimeMillis())))
+      op = Some("ALTER")))
   }
 
   /** ALTER TABLE SET/UNSET of the index-column properties: a pure
@@ -2073,8 +2023,7 @@ object PoolJsonSink {
       splitCol = splitCol.getOrElse(m.splitCol),
       checks = checks.getOrElse(m.checks),
       forkLayerProp = forkLayer.getOrElse(m.forkLayerProp),
-      op = Some("SETPROP"),
-      commitTimeMs = Some(System.currentTimeMillis())))
+      op = Some("SETPROP")))
   }
 
   /** ANALYZE: backfill zone maps and bloom sidecars for live files
@@ -2106,15 +2055,8 @@ object PoolJsonSink {
     val harvested = footerStats(spark, tableDir, needStats, m.statsCols)
     val needBloom = files.filter(f =>
       m.bloomCols.exists(c => !bloomSidecar(tableDir, f, c).isFile))
-    if (needBloom.nonEmpty) {
-      val rows = needBloom.map { f =>
-        f -> harvested.get(f).orElse(m.stats.get(f))
-          .flatMap(_.get(RowsStatCol)).collect {
-            case LongStat(r, _) => r
-          }.getOrElse(1L << 20)
-      }.toMap
-      buildBloomSidecars(spark, tableDir, rows, m.bloomCols)
-    }
+    buildBloomSidecars(spark, tableDir, needBloom, m.stats ++ harvested,
+      m.bloomCols)
     if (harvested.nonEmpty) {
       // merge per FILE: the fresh harvest carries the requested cols
       // plus __rows/__bytes; any other recorded col survives
@@ -2124,12 +2066,19 @@ object PoolJsonSink {
       commitManifest(tableDir, m.copy(
         version = m.version + 1,
         stats = merged,
-        op = Some("ANALYZE"),
-        commitTimeMs = Some(System.currentTimeMillis())))
+        op = Some("ANALYZE")))
     }
     (needStats.size, needBloom.size)
   }
 
+  /** Replace the ENTIRE table content with `incoming` in one commit —
+    * SaveMode.Overwrite / streaming Complete-mode semantics. Every
+    * existing bucket entry is dropped and the incoming rows staged
+    * fresh; the commit is the same CAS, so readers flip atomically
+    * from old content to new and time travel still reaches the
+    * replaced versions until vacuum. Keeps the table's recorded
+    * bucket count.
+    */
   def overwritePartitioned(
       spark: org.apache.spark.sql.SparkSession,
       tableDir: String,
@@ -2344,30 +2293,8 @@ object PoolJsonSink {
           val newFiles = stageDataFiles(tableDir, df,
             if (clusterBy.isEmpty) None else Some(targetRecordsPerFile),
             effSplit)
-          val cols = (m.statsCols ++ splitBy ++
-            m.stats.valuesIterator.flatMap(_.keys)).toSeq.distinct
-            .filterNot(c => c == RowsStatCol || c == BytesStatCol ||
-              c.startsWith(NullsStatColPrefix))
-          val newStats = footerStats(spark, tableDir,
-            newFiles.valuesIterator.flatten.toSeq, cols)
-          buildBloomSidecars(spark, tableDir,
-            newStats.view.mapValues(_.get(RowsStatCol).collect {
-              case LongStat(r, _) => r
-            }.getOrElse(1L << 20)).toMap,
-            m.bloomCols)
-          val allBuckets = m.buckets ++ newFiles
-          val live = allBuckets.valuesIterator.flatten.toSet
-          onBeforeCommit()
-          commitManifest(tableDir,
-            TableManifest(m.version + 1, allBuckets,
-              (m.stats ++ newStats).filter(kv => live(kv._1)),
-              m.schemaJson, m.nBuckets, m.bloomCols,
-              Some("OPTIMIZE"), keyCol = m.keyCol,
-              statsCols = m.statsCols,
-              splitCol = effSplit,
-              droppedCols = m.droppedCols,
-              checks = m.checks,
-              forkLayerProp = m.forkLayerProp))
+          publish(spark, tableDir, Some(m), newFiles, fat, "OPTIMIZE",
+            splitCol = splitBy, onBeforeCommit = onBeforeCommit)
         }
         fat
     }

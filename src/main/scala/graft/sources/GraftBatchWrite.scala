@@ -24,11 +24,10 @@ import graft.pol.PoolJsonSink
   * between the two write paths), appends `__pt`, and streams the row
   * into a per-bucket parquet [[org.apache.spark.sql.execution
   * .datasources.OutputWriter]] under a hidden staging directory.
-  * Commit messages carry (bucket, staged file); the driver moves the
-  * files into `data/` and publishes them through the SAME CAS
-  * manifest commit every other writer uses
-  * ([[PoolJsonSink.commitStagedReplace]]) — one commit protocol, two
-  * producers.
+  * Commit messages carry (bucket, staged file); the driver hands them
+  * to [[PoolJsonSink.commitStagedReplace]], which moves them into
+  * `data/` and publishes them through the SAME commit tail every
+  * other writer uses — one commit protocol, two producers.
   *
   * File count: the Write requires a `bucket(n, key)`-clustered
   * distribution (resolved through the catalog's bucket function —
@@ -96,18 +95,11 @@ class GraftBatchWrite(
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val staged = messages.flatMap {
-      case GraftWriteCommit(files) => files
+    val staged = messages.toSeq.flatMap {
+      case GraftWriteCommit(files) => files.map { case (bucket, name) =>
+        bucket -> new java.io.File(tableDir, s"$stageRel/$name")
+      }
     }
-    val dataDir = new java.io.File(tableDir, "data")
-    dataDir.mkdirs()
-    val newFiles = staged.toSeq.map { case (bucket, name) =>
-      val rel = s"data/$name"
-      java.nio.file.Files.move(
-        new java.io.File(tableDir, s"$stageRel/$name").toPath,
-        new java.io.File(tableDir, rel).toPath)
-      bucket -> rel
-    }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     // If the row-level scan was runtime-group-filtered, the
     // replacement data covers only the SCANNED buckets — commit
     // bucket-level COW (replace those, append elsewhere). A filter
@@ -115,7 +107,7 @@ class GraftBatchWrite(
     // everything. Evaluated here, after execution, when the scan's
     // filter state is final.
     PoolJsonSink.commitStagedReplace(SparkSession.active, tableDir,
-      newFiles, fileSchema.json, nBuckets, opName,
+      staged, fileSchema.json, nBuckets, opName,
       replaceBuckets = scannedBuckets(),
       expectedPrevVersion = expectedVersion())
     cleanupStage()

@@ -478,16 +478,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         val m = PoolJsonSink.readManifest(tmpDir.toString).getOrElse(
           sys.error(s"${fullName(ident)}: staged replace lost its " +
             s"manifest at $tmpDir"))
-        new java.io.File(realDir, "data").mkdirs()
-        // staged names are pt<bucket>-<uuid>.parquet — unique in the
-        // target; same filesystem by construction, so pure renames
-        m.files.foreach { rel =>
-          java.nio.file.Files.move(
-            new java.io.File(tmpDir, rel).toPath,
-            new java.io.File(realDir, rel).toPath)
-        }
+        // same filesystem by construction, so the moves are renames
         PoolJsonSink.commitStagedReplace(spark, realDir.toString,
-          m.buckets, m.schemaJson.getOrElse(schema.json), n,
+          m.buckets.toSeq.flatMap { case (b, rels) =>
+            rels.map(rel => b -> new java.io.File(tmpDir, rel))
+          },
+          m.schemaJson.getOrElse(schema.json), n,
           opName = "REPLACE",
           declaredKeyCol = Some(key),
           declaredStatsCols = statsCols,

@@ -119,8 +119,7 @@ object GraftProcedures {
               // Delta-style retention gate, defaulted SAFE: with 0,
               // every not-yet-referenced artifact of a CONCURRENT
               // in-flight write (staging dirs; data files moved into
-              // data/ but not yet manifest-committed — GraftBatchWrite
-              // moves before commitStagedReplace) is instantly
+              // data/ but not yet manifest-committed) is instantly
               // reclaimable, so a vacuum racing a writer could fail
               // the commit or strand a manifest pointing at deleted
               // files. 24 h clears any real in-flight write; tests and

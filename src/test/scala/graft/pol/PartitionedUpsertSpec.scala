@@ -547,4 +547,17 @@ class PartitionedUpsertSpec extends AnyFunSuite {
     assertReleased()
     assert(PoolJsonSink.readTable(spark, dir).count() == 1010)
   }
+
+  test("a stored NULL struct stays NULL through reads and a keyed MERGE") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_nullstruct")
+      .resolve("table").toString
+    PoolJsonSink.upsertPartitioned(spark, dir, spark.sql("SELECT id AS k, " +
+      "IF(id % 2 = 0, NULL, named_struct('a', id)) AS m FROM range(0, 20)"),
+      col("k"), nBuckets = 2)
+    def nulls() = PoolJsonSink.readTable(spark, dir).where(col("m").isNull).count()
+    assert(nulls() == 10)
+    PoolJsonSink.upsertPartitioned(spark, dir,
+      spark.sql("SELECT 100L AS k, named_struct('a', 100L) AS m"), col("k"))
+    assert(nulls() == 10)
+  }
 }

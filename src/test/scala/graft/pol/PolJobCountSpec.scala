@@ -1,7 +1,5 @@
 package graft.pol
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
@@ -22,22 +20,24 @@ import graft.QueryHarness.spark
   * handful of jobs, the lookup costs none, the sorted documents collect
   * and the summary one each, and no join may take the line-level
   * stream as an input (only the per-file histogram, after an aggregate,
-  * may meet the file side).
+  * may meet the file side). A manifest table with a recorded schema
+  * reads back without a footer job.
   */
 class PolJobCountSpec extends AnyFunSuite {
   private val corpus = "src/test/resources/pol_job"
   private val lookup = "src/test/resources/lookup/pol_job_lookup.csv"
 
-  /** `body`'s result, the number of jobs it launched and the executed
-    * plans of the queries it ran.
+  /** `body`'s result, the jobs it launched and the executed plans of
+    * the queries it ran.
     */
-  private def traced[T](body: => T): (T, Int, Seq[SparkPlan]) = {
+  private def traced[T](body: => T): (T, Seq[SparkListenerJobStart], Seq[SparkPlan]) = {
     val sc = spark.sparkContext
     GraftBus.drain(sc)
-    val jobs = new AtomicInteger
+    val jobs = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[SparkListenerJobStart])
     val plans = java.util.Collections.synchronizedList(new java.util.ArrayList[SparkPlan])
     val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.add(e); () }
     }
     val qeListener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
@@ -51,7 +51,7 @@ class PolJobCountSpec extends AnyFunSuite {
       val r = body
       GraftBus.drain(sc)
       import scala.jdk.CollectionConverters._
-      (r, jobs.get, plans.asScala.toSeq)
+      (r, jobs.asScala.toSeq, plans.asScala.toSeq)
     } finally {
       spark.listenerManager.unregister(qeListener)
       sc.removeSparkListener(jobListener)
@@ -95,8 +95,8 @@ class PolJobCountSpec extends AnyFunSuite {
       p
     }
     try {
-      info(s"$jobs jobs")
-      assert(jobs <= 6, s"perPool launched $jobs jobs")
+      info(s"${jobs.size} jobs")
+      assert(jobs.size <= 6, s"perPool launched ${jobs.size} jobs")
       val joins = plans.flatMap(nodes).collect { case j: BaseJoinExec => j }
       joins.foreach(j =>
         assert(!j.children.exists(linesUnder), s"a join reads the line stream:\n$j"))
@@ -115,7 +115,7 @@ class PolJobCountSpec extends AnyFunSuite {
         .collect()
     }
     assert(resolved.nonEmpty)
-    assert(jobs == 0, s"the lookup launched $jobs jobs")
+    assert(jobs.isEmpty, s"the lookup launched ${jobs.size} jobs")
   }
 
   /** `body` over the documents of a materialized, persisted perPool. */
@@ -134,16 +134,35 @@ class PolJobCountSpec extends AnyFunSuite {
       assert(rows.length == 9)
       val files = rows.map(_.getAs[Row]("metadata").getAs[String]("source_file")).toSeq
       assert(files == files.sorted)
-      assert(jobs == 1, s"the documents collect launched $jobs jobs")
+      assert(jobs.size == 1, s"the documents collect launched ${jobs.size} jobs")
     }
   }
 
   test("PoolSummary.aggregate takes at most 1 job") {
     overDocuments { docs =>
       val (rows, jobs, _) = traced(PoolSummary.aggregate(docs).collect())
-      info(s"$jobs jobs")
+      info(s"${jobs.size} jobs")
       assert(rows.length == 1 && rows(0).getAs[Long]("total_files_processed") == 9)
-      assert(jobs <= 1, s"PoolSummary.aggregate launched $jobs jobs")
+      assert(jobs.size <= 1, s"PoolSummary.aggregate launched ${jobs.size} jobs")
     }
+  }
+
+  test("a table with a recorded schema reads without a schema job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_jobs")
+      .resolve("table").toString
+    val rows = spark.range(0, 200).selectExpr("id AS k", "concat('v', id) AS v")
+    PoolJsonSink.upsertPartitioned(spark, dir, rows, col("k"), nBuckets = 16)
+    val (_, readJobs, _) = traced(PoolJsonSink.readTable(spark, dir))
+    assert(readJobs.isEmpty,
+      s"building readTable launched ${readJobs.map(_.stageInfos.head.name)}")
+    // a footer (schema) read runs outside any SQL execution; every job
+    // the upsert needs runs inside one
+    val (_, upsertJobs, _) = traced(PoolJsonSink.upsertPartitioned(spark, dir,
+      spark.range(190, 210).selectExpr("id AS k", "'new' AS v"), col("k")))
+    val schemaJobs = upsertJobs.filter(e =>
+      e.properties.getProperty("spark.sql.execution.id") == null)
+      .map(_.stageInfos.head.name)
+    assert(schemaJobs.isEmpty, s"the upsert read footers: $schemaJobs")
+    assert(PoolJsonSink.readTable(spark, dir).count() == 210)
   }
 }
