@@ -25,12 +25,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * relation is computed ONCE per run — persisted before the MERGE,
   * which reads that copy (it is already cached, so the MERGE
   * materializes nothing of its own), and the report aggregates the
-  * same copy. That one evaluation scans the corpus three times: the
-  * gate computes its features map-side, and x8's decontamination
-  * reads it once for the benchmark shingle set (which broadcasts;
-  * benchmarks are MBs by contract) and once for the corpus side of
-  * the overlap. The only corpus-sized exchanges are the 16-byte
-  * digest key-agg and the doc_id-keyed MERGE write. The MERGE
+  * same copy. That one evaluation scans the corpus twice: once for
+  * x8's benchmark shingle set (the benchmark documents only; the set
+  * reaches the driver as a sorted literal — benchmarks are MBs by
+  * contract), and once for everything else. Each document runs the
+  * Gopher gate kernel once, map-side, and its `pass` rides the dedup
+  * aggregate; the gate filters after the keep-first pick, which keeps
+  * the same survivors because the gate reads only `text` and exact
+  * copies share it. x8's overlap fold then runs once per survivor
+  * after the digest exchange, so duplicates and gate failures never
+  * hash their shingles and the survivors hash theirs across the
+  * exchange's partitions. No verdict joins back on doc_id. The only
+  * corpus-sized exchanges are the 16-byte digest key-agg and the
+  * doc_id-keyed MERGE write. The MERGE
   * collects at most nBuckets touched-bucket ids to the driver; the
   * report collects one row per (split, source), governance-bounded,
   * and orders them on the driver. Nothing corpus-sized ever reaches
@@ -42,34 +49,32 @@ object CurateMain {
     * the CLI and CurateMainSpec so the spec pins the CLI's exact
     * semantics, not a lookalike.
     */
-  private[llm] def curated(s: SparkSession, corpusDir: String): DataFrame = {
+  private[graft] def curated(s: SparkSession, corpusDir: String): DataFrame = {
+    val docs = graft.Tables.documents(s, corpusDir)
+    val ov = TextQueries.shingleOverlap(TextQueries.benchShingles(docs))
     // benchmark/eval docs (the held-out set x8 screens against) are
-    // never training data — c9's exclusion, applied at the gate
-    val gated = TextQueries
-      .gopherFeatures(graft.Tables.documents(s, corpusDir))
-      .where(col("pass") === 1)
-      .where(!(col("doc_id") % 97 === 0 &&
-        col("doc_id") < TextQueries.BenchBudget))
-    // keep-first among exact copies, carrying every column the table
-    // needs through ONE bounded min(struct) aggregation (h6/c8 shape)
-    val survivors = gated
+    // never training data — c9's exclusion, applied before the dedup.
+    // Keep-first among exact copies carries every column the table
+    // needs and the gate's verdict through ONE bounded min(struct)
+    // aggregation (h6/c8 shape); the gate filters after it, and the
+    // contamination verdict is computed for the survivors only
+    val survivors = TextQueries
+      .gopherFeatures(docs.where(!TextQueries.isBenchDoc))
       .groupBy(unhex(md5(col("text"))).as("digest"))
       .agg(min(struct(col("doc_id"), col("source"), col("lang"),
-        col("n_toks"), col("n_chars"), col("text"))).as("r"))
+        col("n_toks"), col("n_chars"), col("text"), col("pass"))).as("r"))
+      .where(col("r.pass") === 1)
       .select(col("r.doc_id").as("doc_id"), col("r.source").as("source"),
         col("r.lang").as("lang"), col("r.n_toks").as("n_toks"),
         col("r.n_chars").as("n_chars"), col("r.text").as("text"))
-    // x8's contamination verdict joins back on doc_id (the benchmark
-    // side of the overlap is broadcast inside the x8 plan)
-    val verdict = TextQueries.queries("x8_decontaminate")(s, corpusDir)
-      .select(col("doc_id"), col("contaminated"))
+      .withColumn("ov", ov)
+      .withColumn("contaminated", TextQueries.contaminated(col("ov")))
     survivors
-      .join(verdict, Seq("doc_id"), "left")
       .withColumn("bucket", expr(
         "CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 7), 16, 10) " +
           "AS BIGINT) % 100"))
       .withColumn("split",
-        when(coalesce(col("contaminated"), lit(0)) === 1, "quarantined")
+        when(col("contaminated") === 1, "quarantined")
           .when(col("bucket") < 80, "train")
           .when(col("bucket") < 90, "val")
           .otherwise("test"))

@@ -504,20 +504,21 @@ object CurationQueries {
     // must NEVER land in train (eval leakage — the bug that silently
     // inflates every benchmark number), so it is QUARANTINED
     // regardless of its bucket; benchmark member docs themselves are
-    // not corpus rows, mirroring x8. Plan: x8's per-doc flags join
-    // once on doc_id (sort-merge at corpus scale — both sides
-    // co-keyed), the bucket is the same map-side md5 as c2.
+    // not corpus rows, mirroring x8. Plan: x8's map-only overlap fold
+    // computes each doc's verdict in the same pass that assigns its
+    // bucket (the same map-side md5 as c2) — no join back on doc_id.
     "c9_decontaminated_split" -> ((s, d) => {
-      val flags = TextQueries.queries("x8_decontaminate")(s, d)
-        .select(col("doc_id"), col("contaminated"))
+      val ov = TextQueries.shingleOverlap(
+        TextQueries.benchShingles(documents(s, d)))
       documents(s, d)
         .where(!TextQueries.isBenchDoc)
-        .join(flags, Seq("doc_id"), "left")
+        .withColumn("ov", ov)
+        .withColumn("contaminated", TextQueries.contaminated(col("ov")))
         .withColumn("bucket",
           expr("CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 7), " +
             "16, 10) AS BIGINT) % 100"))
         .withColumn("split",
-          when(coalesce(col("contaminated"), lit(0)) === 1, "quarantined")
+          when(col("contaminated") === 1, "quarantined")
             .when(col("bucket") < 80, "train")
             .when(col("bucket") < 90, "val")
             .otherwise("test"))

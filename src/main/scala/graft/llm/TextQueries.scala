@@ -47,50 +47,60 @@ object TextQueries {
 
   /** X10's Gopher filter-rule features over any documents-shaped frame
     * (input columns preserved, feature + `pass` columns appended) —
-    * one stateless map-only projection, so the identical operator
+    * one stateless map-only projection of the native
+    * [[graft.functions.GopherStats]] kernel, so the identical operator
     * serves the batch catalog entry and the streaming quality gate
     * (t7) per micro-batch.
+    *
+    * Every feature is a field of ONE kernel value, so a consumer that
+    * reads several of them evaluates the kernel once per row. A
+    * filter on `pass` alone reads the kernel once as well (t7); a
+    * consumer that filters on `pass` AND keeps features must not
+    * filter below its projection (Catalyst would push the kernel into
+    * the scan-adjacent filter and evaluate it again above): CurateMain
+    * and h6 carry `pass` through their dedup aggregate and filter
+    * after it.
     */
   private[graft] def gopherFeatures(df: DataFrame): DataFrame = {
-    val reqStop = Seq("the", "a", "of", "to", "and")
-    // LAMBDA-FREE (round-8 codegen audit): the three features were
-    // HOF folds (aggregate / filter×2), and any lambda is
-    // CodegenFallback — it dragged this corpus-sized gate projection
-    // (and its x10/x22/t7 consumers) interpreted. Each has a
-    // value-identical builtin composition with doGenCode:
-    //  - sum of token lengths ≡ length of the separator-less join
-    //    (tokens are never null);
-    //  - "tokens containing [a-z]" counted by a regex over the
-    //    single-space join: each match consumes its leading boundary
-    //    and the whole token, so adjacent qualifying tokens each
-    //    count once and nothing spans the delimiter (tokens contain
-    //    no whitespace by construction). POSSESSIVE quantifiers +
-    //    the boundary anchor make matching LINEAR — a naive
-    //    `[^ ]*[a-z][^ ]*` backtracks O(L²) on a long token with no
-    //    lowercase letter (digit strings, hex blobs, all-caps runs);
-    //  - required-stopword membership as 5 literal array_contains.
-    df.withColumn("toks",
-        graft.functions.WsTokens(col("text")))
-      .withColumn("n_toks", size(col("toks")))
-      .withColumn("mean_tok_len",
-        round(length(concat_ws("", col("toks"))).cast("long")
-          / col("n_toks"), 4))
-      .withColumn("alpha_frac",
-        round(size(regexp_extract_all(
-          concat(lit(" "), concat_ws(" ", col("toks"))),
-          lit("(?:^| )[^ a-z]*+[a-z][^ ]*+"), lit(0)))
-          / col("n_toks"), 4))
-      .withColumn("n_req_stop",
-        reqStop.map(w =>
-          when(array_contains(col("toks"), w), 1).otherwise(0))
-          .reduce(_ + _))
-      .withColumn("pass",
-        (col("n_toks").between(30, 100000) &&
-          col("mean_tok_len").between(3, 10) &&
-          col("alpha_frac") >= 0.8 && col("n_req_stop") >= 2)
-          .cast("int"))
-      .drop("toks")
+    val g = "__gopher"
+    df.withColumn(g, graft.functions.GopherStats(col("text")))
+      .select(col("*") +: graft.functions.GopherStats.schema.fieldNames
+        .toSeq.map(f => col(s"$g.$f").as(f)): _*)
+      .drop(g)
   }
+
+  /** x8's benchmark shingle set: the distinct shingle hashes of the
+    * benchmark documents, sorted, as a driver-side literal for
+    * [[graft.functions.ShingleOverlap]]. One small job: the benchmark
+    * budget bounds it at any corpus size (benchmarks are MBs by
+    * contract), and the per-document arrays merge on the driver.
+    */
+  private[llm] def benchShingles(docs: DataFrame): Array[Long] =
+    docs.where(isBenchDoc)
+      .select(graft.functions.ShingleHashes(col("text")))
+      .collect()
+      .flatMap(_.getSeq[Long](0))
+      .distinct.sorted
+
+  /** x8's per-document overlap with the benchmark set: the
+    * `struct(n_shingles, n_overlap)` of [[graft.functions.ShingleOverlap]]
+    * over the document's distinct shingles — map-only. Project it as
+    * a column before reading its fields, so the kernel runs once.
+    */
+  private[llm] def shingleOverlap(bench: Array[Long]): org.apache.spark.sql.Column =
+    graft.functions.ShingleOverlap(
+      graft.functions.ShingleHashes(col("text")), bench)
+
+  /** x8's contamination verdict from an overlap struct column: the
+    * fraction of the DOC's shingles found in the benchmark set, flagged
+    * at ≥ 0.5 (an absolute count is vacuous when the corpus shares
+    * boilerplate vocabulary; the fraction is the form production
+    * decontamination uses). ShingleHashes yields at least one hash per
+    * text, so the fraction is always defined.
+    */
+  private[llm] def contaminated(ov: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.Column =
+    (ov("n_overlap") / ov("n_shingles") >= 0.5).cast("int")
 
   /** x16/x18's shared BPE trainer: 3 rounds of "count adjacent symbol
     * pairs over the (word, count) vocabulary, merge the most
@@ -317,52 +327,29 @@ object TextQueries {
     // here deterministically doc_id % 97 == 0) — the standard n-gram
     // decontamination pass every LLM corpus runs before training.
     // Scale shape: benchmark suites are MEGABYTES (the corpus is the
-    // 100 TB side), so the benchmark shingle set BROADCASTS and the
-    // semi-join is map-side — the only shuffle is the per-doc overlap
-    // count over surviving rows. At production scale the broadcast set
-    // becomes a bloom filter pushed into the scan (same plan shape,
-    // sketch instead of set); this exact form is the oracle-checkable
-    // baseline.
+    // 100 TB side), so the benchmark shingle set is collected to the
+    // driver as a sorted literal (x9 inlines its sketch the same way)
+    // and the overlap is a map-only fold: one kernel per document over
+    // its distinct shingles — no explode, no broadcast join, no
+    // doc-keyed aggregate; the one exchange is the result's sort.
+    // Sub-8-char docs get their one whole-text shingle, as
+    // ShingleHashes defines it.
     "x8_decontaminate" -> ((s, d) => {
-      val hs = documents(s, d)
-        .select(col("doc_id"),
-          graft.functions.ShingleHashes(col("text")).as("hs"))
-      // explode_outer + attribute-level isnotnull, not plain explode:
-      // the inferred `size(shingle_hashes(text)) > 0` filter a plain
-      // explode produces re-runs the kernel on raw scan rows
-      // (round-13 plan audit)
-      val bench = hs.where(isBenchDoc)
-        .select(explode_outer(col("hs")).as("h"))
-        .where(col("h").isNotNull).distinct()
-      // contamination = fraction of the DOC's shingles found in the
-      // benchmark set (≥ 0.5): an absolute count is vacuous when the
-      // corpus shares boilerplate vocabulary; the fraction is the form
-      // production decontamination uses (n-gram overlap ratio).
-      //
-      // ONE corpus pass: n_shingles rides through the explode next to
-      // each shingle row, the benchmark set LEFT-broadcast-joins as a
-      // hit marker (bench is distinct, so multiplicity is exactly 1
-      // and count(hit) == the old semi-join count), and one doc-keyed
-      // aggregate produces (n_shingles, n_overlap) together. The
-      // previous two-sided shape — semi+groupBy joined back to a
-      // separately projected sizes relation — evaluated the
-      // ShingleHashes kernel over the corpus TWICE and paid a second
-      // corpus-sized exchange for the count join (1.4 s vs 0.9 s at
-      // sf0.1). explode_outer keeps sub-8-char docs (empty hs) in the
-      // output exactly as the sizes side used to.
-      val marked = hs.where(!isBenchDoc)
-        .select(col("doc_id"), size(col("hs")).as("n_shingles"),
-          explode_outer(col("hs")).as("h"))
-        .join(broadcast(bench.withColumn("hit", lit(1))), Seq("h"), "left")
-      marked.groupBy("doc_id", "n_shingles")
-        .agg(count(col("hit")).as("n_overlap"))
-        .select(col("doc_id"),
-          col("n_overlap"),
-          round(col("n_overlap") / col("n_shingles"), 4)
-            .as("overlap_frac"),
-          (col("n_overlap") / col("n_shingles") >= 0.5)
-            .cast("int").as("contaminated"))
+      val ov = shingleOverlap(benchShingles(documents(s, d)))
+      // sorted BEFORE the fold: a range sort samples its input by
+      // running the stage below it, which would hash every shingle
+      // twice; after the sort the fold runs once per doc, spread over
+      // the sort's partitions
+      documents(s, d).where(!isBenchDoc)
+        .select(col("doc_id"), col("text"))
         .orderBy("doc_id")
+        .select(col("doc_id"), ov.as("ov"))
+        // a NULL text has no shingles to share: overlap 0, ratio NULL
+        .select(col("doc_id"),
+          coalesce(col("ov.n_overlap"), lit(0L)).as("n_overlap"),
+          round(col("ov.n_overlap") / col("ov.n_shingles"), 4)
+            .as("overlap_frac"),
+          contaminated(col("ov")).as("contaminated"))
     }),
 
     // X9 — bloom-sketch decontamination: the AT-SCALE form of x8's

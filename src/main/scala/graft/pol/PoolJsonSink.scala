@@ -1827,9 +1827,10 @@ object PoolJsonSink {
     * The manifest is `prev` with only what the write declares
     * overridden (None keeps `prev`'s), so every other table property
     * (dropped columns, checks, fork layer, ...) carries through.
-    * Zone maps are harvested for the stats columns, a declared split
-    * column (its files' value purity is what OPTIMIZE and metadata
-    * deletes prove from) and every column `prev`'s files carry stats
+    * Zone maps are harvested for the stats columns, the table's split
+    * column, declared by this write or recorded before it (its files'
+    * value purity is what OPTIMIZE and metadata deletes prove from),
+    * and every column `prev`'s files carry stats
     * for (older writers recorded those without a declaration).
     * `onBeforeCommit` is a test seam: it runs after every file and
     * sidecar is in place, immediately before the manifest rename.
@@ -1862,7 +1863,8 @@ object PoolJsonSink {
     // always harvested (even with no stats columns): every file at
     // least records its row count and size for [[tableRowCount]]
     val newStats = footerStats(spark, tableDir, rels,
-      (next.statsCols ++ splitCol ++ base.stats.valuesIterator.flatMap(_.keys))
+      (next.statsCols ++ next.splitCol ++
+        base.stats.valuesIterator.flatMap(_.keys))
         .distinct.filterNot(c => c == RowsStatCol || c == BytesStatCol ||
           c.startsWith(NullsStatColPrefix)))
     buildBloomSidecars(spark, tableDir, rels, newStats, next.bloomCols)

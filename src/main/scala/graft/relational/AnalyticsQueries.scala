@@ -125,15 +125,18 @@ object AnalyticsQueries {
     // no broadcast of anything corpus-derived: the first draft's
     // survivors-semi-join shape planned a SECOND corpus scan, and
     // this rewrite removed it (.explain-audited; the d1/c8 4M probe
-    // already showed the digest-agg shape flat).
+    // already showed the digest-agg shape flat). The gate's `pass`
+    // rides the min(struct) and filters AFTER the aggregate: the gate
+    // reads only `text`, so exact copies share their verdict and the
+    // survivors are the same, while the gate kernel runs once per row
+    // (a filter below the aggregate would be pushed into the scan and
+    // evaluate the kernel there a second time).
     "h6_curation_pipeline" -> ((s, d) => {
-      val gated = graft.llm.TextQueries
-        .gopherFeatures(documents(s, d))
-        .where(col("pass") === 1)
-      gated
+      graft.llm.TextQueries.gopherFeatures(documents(s, d))
         .groupBy(unhex(md5(col("text"))).as("digest"))
         .agg(min(struct(col("doc_id"), col("source"),
-          col("n_toks"), col("n_chars"))).as("r"))
+          col("n_toks"), col("n_chars"), col("pass"))).as("r"))
+        .where(col("r.pass") === 1)
         .select(col("r.doc_id").as("doc_id"), col("r.source").as("source"),
           col("r.n_toks").as("n_toks"), col("r.n_chars").as("n_chars"))
         .withColumn("bucket", expr(

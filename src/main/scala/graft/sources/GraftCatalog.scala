@@ -461,8 +461,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val spark = SparkSession.active
     val tmpDir = new java.io.File(realDir,
       s".rtas-${java.util.UUID.randomUUID().toString.take(8)}")
-    // the staged table: a real graft table with the NEW key/buckets,
-    // so the query's write is the ordinary transactional keyed merge.
+    // the staged table: a real graft table with the NEW key/buckets
+    // and the target's split column, so the query's write is the
+    // ordinary transactional keyed merge and stages value-pure files.
     // Zone maps and bloom sidecars are NOT built here — the final
     // commit harvests/builds them once for the published files
     // (declared* overrides below); building them against the staging
@@ -470,7 +471,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     PoolJsonSink.overwritePartitioned(spark, tmpDir.toString,
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
-      org.apache.spark.sql.functions.col(key), n)
+      org.apache.spark.sql.functions.col(key), n,
+      splitCol = prev.flatMap(_.splitCol).filter(schema.fieldNames.contains))
     val inner = new GraftCatalogTable(
       s"${fullName(ident)} (staged replace)", tmpDir.toString, None)
     new StagedGraftTable(inner,

@@ -54,12 +54,11 @@ class PlanAuditSpec extends AnyFunSuite {
                             // aggregates cross-joined into one row
     "x21_bm25") // x13's shape: 1-row corpus-stats (N, avgdl) scalar
                 // broadcast cross-joined into the per-(doc,term) rows
-  // x8/x9 explode AND broadcast the benchmark shingle set on purpose
-  // (benchmarks are MBs by contract; the corpus is the probe side);
-  // c9 embeds x8's plan wholesale for its quarantine flags.
+  // x9 explodes AND broadcasts the benchmark shingle set on purpose
+  // (benchmarks are MBs by contract; the corpus is the probe side).
+  // x8 and c9 fold the overlap map-side and broadcast nothing.
   private val explodeBroadcastAllowed =
-    Set("x8_decontaminate", "x9_decontaminate_bloom",
-      "c9_decontaminated_split",
+    Set("x9_decontaminate_bloom",
       // x21's broadcast subtrees DO contain the corpus-wide token
       // explode, but each caps itself with an AGGREGATE before the
       // exchange: the broadcast values are the 1-row corpus stats and
@@ -105,8 +104,7 @@ class PlanAuditSpec extends AnyFunSuite {
     * evaluate a graft kernel (round-13 audit, documented in
     * OPTIMIZATION_r13.md "Not yet optimized"): c4's quality predicate
     * is the filter's ONLY kernel consumer (single evaluation — no
-    * Project above recomputes it); h6's gopher pass-condition has no
-    * cheap raw-column equivalent; d11's digest guards run on the
+    * Project above recomputes it); d11's digest guards run on the
     * batch slice by contract. Everything else must keep kernels out
     * of scan-adjacent Filter conditions — InferFiltersFromGenerate
     * or predicate pushdown re-evaluating a kernel per raw scan row
@@ -114,7 +112,7 @@ class PlanAuditSpec extends AnyFunSuite {
     * x11/x15/x23 via explode_outer / generator-input guards).
     */
   private val kernelFilterAllowed = Set(
-    "c4_corpus_filter", "h6_curation_pipeline", "d11_incremental_dedup",
+    "c4_corpus_filter", "d11_incremental_dedup",
     // p1's guard IS "the parser returned null" — type_code stays
     // non-null on unparseable lines, so no aggregate-side or
     // raw-column equivalent exists; the double parse is documented
@@ -237,6 +235,24 @@ class PlanAuditSpec extends AnyFunSuite {
           audit(name, fn(spark, sf0001).queryExecution.executedPlan)
       }
       assert(bad.isEmpty, bad.mkString("; "))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("CurateMain's curated plan passes the audit and runs each " +
+      "per-document kernel once") {
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = graft.llm.CurateMain.curated(spark, sf0001)
+        .queryExecution.executedPlan
+      val bad = audit("curate_main", plan)
+      assert(bad.isEmpty, bad.mkString("; "))
+      def uses(kernel: String): Int = plan.collect { case p =>
+        p.expressions.map(_.collect {
+          case e if e.getClass.getName == kernel => e
+        }.size).sum
+      }.sum
+      assert(uses("graft.functions.GopherStats") == 1, plan.toString)
+      assert(uses("graft.functions.ShingleOverlap") == 1, plan.toString)
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 

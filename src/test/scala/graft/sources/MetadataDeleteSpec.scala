@@ -137,6 +137,31 @@ class MetadataDeleteSpec extends AnyFunSuite {
       .collect().head.getLong(0) == 400L)
   }
 
+  test("splitcol declared without statscols: OPTIMIZE finds the files " +
+      "value-pure and a value DELETE proves whole files") {
+    spark.sql("CREATE TABLE gmdel.default.so (k BIGINT, grp BIGINT) " +
+      "USING graft TBLPROPERTIES ('key'='k','nbuckets'='2'," +
+      "'splitcol'='grp')")
+    spark.sql("INSERT INTO gmdel.default.so " +
+      "SELECT id, id % 3 FROM range(0, 300)")
+    val dir = s"$wh/default/so"
+    val m = PoolJsonSink.readManifest(dir).get
+    assert(m.statsCols.isEmpty && m.files.size == 6)
+    // the split column's zone maps are what prove purity: without
+    // them every bucket reads as impure and OPTIMIZE rewrites it
+    assert(PoolJsonSink.compactPartitions(spark, dir).isEmpty,
+      "value-pure buckets are not fat")
+    assert(PoolJsonSink.readManifest(dir).get.version == m.version)
+    spark.sql("DELETE FROM gmdel.default.so WHERE grp = 1")
+    val h = spark.sql("SELECT operation, files_added FROM " +
+      "gmdel.default.so.history ORDER BY version DESC LIMIT 1")
+      .collect().head
+    assert(h.getString(0) == "DELETE" && h.getInt(1) == 0,
+      "the value delete must be metadata-only")
+    assert(spark.sql("SELECT count(*) FROM gmdel.default.so")
+      .collect().head.getLong(0) == 200L)
+  }
+
   test("COW statements preserve the split layout (UPDATE, then " +
       "metadata DELETE of the rewritten value)") {
     // the v2 executor write fans out on (bucket, split value), so the

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.functions.{col, first, max}
+import org.apache.spark.sql.functions.{col, countDistinct, first, max}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.QueryHarness.spark
@@ -58,8 +58,9 @@ class PropertyCarrySpec extends AnyFunSuite {
 
   /** After `op` committed version `v`: the header lines, the number of
     * files per bucket (`perBucket` files in each of `nBuckets` buckets,
-    * `extra` adding to some), each live file's stats keys, its bloom
-    * sidecars, and no stats for a dead file.
+    * `extra` adding to some), each live file's stats keys (the stats
+    * columns and the split column), its value purity in the split
+    * column, its bloom sidecars, and no stats for a dead file.
     */
   private def check(v: Long, op: String, nBuckets: Int, schemaLine: String,
       perBucket: Int, extra: Map[Long, Int] = Map.empty,
@@ -72,9 +73,15 @@ class PropertyCarrySpec extends AnyFunSuite {
     assert(m.buckets.view.mapValues(_.size).toMap ==
       (0L until nBuckets).map(b => b -> (perBucket + extra.getOrElse(b, 0))).toMap)
     val keys = Set(PoolJsonSink.RowsStatCol, PoolJsonSink.BytesStatCol) ++
-      statsCols.flatMap(c => Seq(c, s"${PoolJsonSink.NullsStatColPrefix}$c"))
+      (statsCols :+ "grp").flatMap(c =>
+        Seq(c, s"${PoolJsonSink.NullsStatColPrefix}$c"))
     m.files.foreach { f =>
       assert(m.stats.get(f).map(_.keySet).contains(keys), s"stats of $f")
+      m.stats(f)("grp") match {
+        case PoolJsonSink.BinStat(mn, mx) =>
+          assert(mn.sameElements(mx), s"$f mixes split values")
+        case other => fail(s"grp stats of $f: $other")
+      }
       assert(new java.io.File(dir, s"$f.bloom-s").isFile, s"no bloom sidecar for $f")
     }
     assert(m.stats.keySet == m.files.toSet, "stats name a dead file")
@@ -124,8 +131,12 @@ class PropertyCarrySpec extends AnyFunSuite {
       "SELECT id AS k, id AS v, concat('s', id) AS s, " +
       "IF(id % 2 = 0, 'even', 'odd') AS grp, " +
       "named_struct('a', id, 'b', 'r') AS meta FROM range(0, 30)")
+    // one value-pure file per (bucket, grp value) the rows fill
+    val valuesPerBucket = PoolJsonSink.readTable(spark, dir)
+      .groupBy("__pt").agg(countDistinct("grp"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1).toInt).toMap
     check(13, "REPLACE", 8,
-      schema(top = false, meta = false, inner = false, pt = true), 1,
-      statsCols = Seq("v"))
+      schema(top = false, meta = false, inner = false, pt = true), 0,
+      extra = valuesPerBucket, statsCols = Seq("v"))
   }
 }
