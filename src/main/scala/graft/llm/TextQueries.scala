@@ -73,10 +73,12 @@ object TextQueries {
     * benchmark documents, sorted, as a driver-side literal for
     * [[graft.functions.ShingleOverlap]]. One small job: the benchmark
     * budget bounds it at any corpus size (benchmarks are MBs by
-    * contract), and the per-document arrays merge on the driver.
+    * contract), and the per-document arrays merge on the driver. A
+    * NULL text has no shingles (its ShingleHashes is NULL), so it adds
+    * nothing to the set.
     */
   private[llm] def benchShingles(docs: DataFrame): Array[Long] =
-    docs.where(isBenchDoc)
+    docs.where(isBenchDoc && col("text").isNotNull)
       .select(graft.functions.ShingleHashes(col("text")))
       .collect()
       .flatMap(_.getSeq[Long](0))
@@ -331,18 +333,12 @@ object TextQueries {
     // driver as a sorted literal (x9 inlines its sketch the same way)
     // and the overlap is a map-only fold: one kernel per document over
     // its distinct shingles — no explode, no broadcast join, no
-    // doc-keyed aggregate; the one exchange is the result's sort.
-    // Sub-8-char docs get their one whole-text shingle, as
+    // doc-keyed aggregate; the exchanges carry only the per-doc
+    // results. Sub-8-char docs get their one whole-text shingle, as
     // ShingleHashes defines it.
     "x8_decontaminate" -> ((s, d) => {
       val ov = shingleOverlap(benchShingles(documents(s, d)))
-      // sorted BEFORE the fold: a range sort samples its input by
-      // running the stage below it, which would hash every shingle
-      // twice; after the sort the fold runs once per doc, spread over
-      // the sort's partitions
       documents(s, d).where(!isBenchDoc)
-        .select(col("doc_id"), col("text"))
-        .orderBy("doc_id")
         .select(col("doc_id"), ov.as("ov"))
         // a NULL text has no shingles to share: overlap 0, ratio NULL
         .select(col("doc_id"),
@@ -350,6 +346,14 @@ object TextQueries {
           round(col("ov.n_overlap") / col("ov.n_shingles"), 4)
             .as("overlap_frac"),
           contaminated(col("ov")).as("contaminated"))
+        // a range sort samples its input by running the stage below
+        // it: right above the fold it would hash every shingle twice,
+        // right above the scan it would shuffle the corpus text. The
+        // hash exchange makes the sampled stage a read of these small
+        // shuffled rows (sf0.1: the same time as sorting the text,
+        // 0.15 MB shuffled instead of 0.80 MB)
+        .repartition(col("doc_id"))
+        .orderBy("doc_id")
     }),
 
     // X9 — bloom-sketch decontamination: the AT-SCALE form of x8's

@@ -11,10 +11,14 @@ import graft.QueryHarness.spark
   * sorted literal, one [[graft.functions.ShingleOverlap]] per doc)
   * equals the explode → broadcast join → doc-keyed aggregate form it
   * replaced, on random documents over a small vocabulary (so overlaps
-  * are common), texts shorter than the 8-char shingle included.
+  * are common), texts shorter than the 8-char shingle included. A
+  * NULL text, in the benchmark set (doc 97) or in the corpus (doc 5),
+  * adds no shingle to the set and gets a NULL overlap.
   */
 class DecontamFoldSpec extends AnyFunSuite {
   import spark.implicits._
+
+  private val nullIds = Set(5L, 97L)
 
   private val docs: Seq[(Long, String)] = {
     val r = new scala.util.Random(11L)
@@ -27,7 +31,7 @@ class DecontamFoldSpec extends AnyFunSuite {
         case _ => Seq.fill(r.nextInt(30))(vocab(r.nextInt(vocab.size)))
           .mkString(" ")
       }
-      id -> text
+      id -> (if (nullIds(id)) null else text)
     }
   }
 
@@ -51,16 +55,20 @@ class DecontamFoldSpec extends AnyFunSuite {
     val bench = TextQueries.benchShingles(base)
     assert(bench.nonEmpty && bench.sameElements(bench.distinct.sorted))
     val want = exploded(base)
+      .where(!col("doc_id").isin(nullIds.toSeq: _*))
       .as[(Long, Int, Long)].collect().sortBy(_._1).toSeq
     assert(want.count(_._3 > 0) > 50, "the sample must overlap the set")
     assert(want.exists(_._2 == 1), "the sample must hold sub-8-char texts")
     // interpreted (local relation) and generated code (above an exchange)
     for (df <- Seq(base, base.repartition(3))) {
-      val got = df.where(!TextQueries.isBenchDoc)
+      val ov = df.where(!TextQueries.isBenchDoc)
         .select(col("doc_id"), TextQueries.shingleOverlap(bench).as("ov"))
+      val got = ov.where(col("ov").isNotNull)
         .select(col("doc_id"), col("ov.n_shingles"), col("ov.n_overlap"))
         .as[(Long, Int, Long)].collect().sortBy(_._1).toSeq
       assert(got == want)
+      assert(ov.where(col("ov").isNull).select("doc_id").as[Long]
+        .collect().toSet == nullIds - 97L)
     }
   }
 }

@@ -10,7 +10,8 @@ import graft.QueryHarness.spark
   * declare the IDENTICAL exact result (shared oracle); this spec pins
   * that on a synthetic corpus engineered for the rewrite's edges:
   * docs too short to shingle (empty hs → the outer null row must
-  * keep them in the output with n_overlap 0), null text, fully
+  * keep them in the output with n_overlap 0), null text (in the
+  * corpus and in the benchmark set), fully
   * contaminated docs (verbatim benchmark copies), partially
   * contaminated docs, and clean docs that exercise the bloom's
   * reject path (and, at 2^20 bits, any false positive must be
@@ -27,6 +28,8 @@ class X9OnePassSpec extends AnyFunSuite {
       case 1 => (1L, "tiny")
       // null text
       case 2 => (2L, null)
+      // benchmark member with null text: adds no shingles to the set
+      case 97 => (97L, null)
       // verbatim benchmark copy -> fully contaminated
       case 3 => (3L, "the quick brown fox jumps over the lazy dog")
       // partial overlap: shares a clause with the benchmark doc
@@ -55,7 +58,8 @@ class X9OnePassSpec extends AnyFunSuite {
     // non-benchmark doc, including unshingleable ones)
     val ids = a.map(_.getLong(0)).toSet
     assert(ids.contains(1L) && ids.contains(2L) && ids.contains(3L))
-    assert(!ids.contains(0L)) // the benchmark doc itself is excluded
+    // the benchmark docs themselves are excluded
+    assert(!ids.contains(0L) && !ids.contains(97L))
     // and the fully-contaminated copy is flagged
     val d3 = a.find(_.getLong(0) == 3L).get
     assert(d3.getAs[Int]("contaminated") == 1)

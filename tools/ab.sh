@@ -7,10 +7,11 @@
 # Run from the repository root. The base revision is exported with
 # `git archive` into a scratch directory (AB_DIR, default a fresh
 # mktemp -d; nothing is written to .git). Pair i runs
-# `perfbench/run.py --workload <w> --seed <first-seed + i> --seconds 12`
-# once in each tree, base first on even pairs and the working tree
-# first on odd ones, so drift on the host hits both sides alike. Each
-# side builds from its own sources on its first run.
+# `perfbench/run.py --workload <w> --seed <first-seed + i> --seconds <s>`
+# once in each tree, <s> being BENCHMARK.json's run_seconds; base
+# first on even pairs and the working tree first on odd ones, so drift
+# on the host hits both sides alike. Each side builds from its own
+# sources on its first run.
 #
 # Prints, per end-to-end metric of BENCHMARK.json: each side's median
 # and quartiles, the median of the per-pair differences (change - base)
@@ -24,10 +25,11 @@ workload=${1:?usage: tools/ab.sh <workload> [pairs] [base-rev] [first-seed]}
 pairs=${2:-10}
 base_rev=${3:-HEAD}
 first_seed=${4:-1}
-seconds=${AB_SECONDS:-12}
 
 root=$(pwd)
 [ -f "$root/perfbench/run.py" ] || { echo "run from the repository root" >&2; exit 2; }
+seconds=$(python3 -c 'import json, sys; print(json.load(open(sys.argv[1]))["run_seconds"])' \
+  "$root/BENCHMARK.json")
 ab_dir=${AB_DIR:-$(mktemp -d)}
 base="$ab_dir/base"
 rm -rf "$base"
